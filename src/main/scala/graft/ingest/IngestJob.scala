@@ -63,9 +63,13 @@ object IngestJob {
         case "klines"     => Schemas.kline
         case other        => throw new IllegalArgumentException(other)
       }
+      // the envelope's `symbol` is the routing and partition key; a
+      // payload that repeats it (klines) drops its own copy, which
+      // would otherwise make `symbol` ambiguous downstream
       val parsed = limited.toDF()
         .withColumn("d", from_json(col("data"), payloadSchema))
         .select(col("symbol") +: payloadSchema.fieldNames.toIndexedSeq
+          .filterNot(_ == "symbol")
           .map(f => col(s"d.$f").as(f)): _*)
       parsed.writeStream
         .outputMode("append")

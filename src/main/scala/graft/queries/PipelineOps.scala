@@ -553,10 +553,10 @@ object PipelineOps {
     * `limit(gate+1).collect()` is both the gate probe and the data
     * fetch, so the common small case executes the (possibly
     * expensive) pair plan ONCE — the distributed path would execute
-    * it twice (partition-count job + symmetrize). Union-by-min with
-    * iterative path halving: the root of every set is its minimum
-    * member, so find(x) IS the min reachable id. */
-  private def ccDriverSolve(edges: DataFrame): Option[DataFrame] = {
+    * it twice (partition-count job + symmetrize). The solve is
+    * [[MinUnionFind]]. Returns the labels with their row count, which
+    * the driver knows for free. */
+  private def ccDriverSolve(edges: DataFrame): Option[(DataFrame, Long)] = {
     val gate = ccDriverSolveMaxEdges
     val longTypes = edges.schema.fields.take(2).forall(
       _.dataType == org.apache.spark.sql.types.LongType)
@@ -564,7 +564,42 @@ object PipelineOps {
     val lim = math.min(gate, (Int.MaxValue - 2).toLong).toInt
     val rows = edges.select(col("src"), col("dst")).limit(lim + 1).collect()
     if (rows.length > lim) return None
-    val parent = new java.util.HashMap[Long, Long](rows.length * 2)
+    val uf = new MinUnionFind(rows.length)
+    rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+    val seen = new java.util.HashSet[Long](rows.length * 2)
+    val out = Vector.newBuilder[org.apache.spark.sql.Row]
+    rows.foreach { r =>
+      Seq(r.getLong(0), r.getLong(1)).foreach { n =>
+        if (seen.add(n))
+          out += org.apache.spark.sql.Row(n, uf.find(n))
+      }
+    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("node",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("label",
+        org.apache.spark.sql.types.LongType, nullable = false)))
+    val rs = out.result()
+    Some((driverFrame(edges.sparkSession, rs, schema), rs.length.toLong))
+  }
+
+  /** A frame of driver-built rows, spread over parallelize slices
+    * that follow the transactionGraph data-proportional rule (~200k
+    * rows per partition), so downstream consumers of a LARGE
+    * driver-side result still parallelize — and the rows stay out of
+    * the plan, where a local relation would carry them. */
+  private[graft] def driverFrame(s: SparkSession,
+      rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val slices = math.max(1, (rows.length + 199999) / 200000)
+    s.createDataFrame(s.sparkContext.parallelize(rows, slices), schema)
+  }
+
+  /** Union-by-min with path halving: the root of every set is its
+    * minimum member, so `find(x)` IS the min id reachable from x — the
+    * labeling contract of every component solver here. */
+  private[graft] final class MinUnionFind(sizeHint: Int) {
+    private val parent = new java.util.HashMap[Long, Long](sizeHint * 2)
     def find(x0: Long): Long = {
       var x = x0
       var p = parent.getOrDefault(x, x)
@@ -574,38 +609,17 @@ object PipelineOps {
       }
       x
     }
-    rows.foreach { r =>
-      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+    def union(a0: Long, b0: Long): Unit = {
+      val (a, b) = (find(a0), find(b0))
       if (a != b) {
         if (a < b) parent.put(b, a) else parent.put(a, b)
       }
     }
-    val seen = new java.util.HashSet[Long](rows.length * 2)
-    val out = Vector.newBuilder[org.apache.spark.sql.Row]
-    rows.foreach { r =>
-      Seq(r.getLong(0), r.getLong(1)).foreach { n =>
-        if (seen.add(n))
-          out += org.apache.spark.sql.Row(n, find(n))
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("label",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val rs = out.result()
-    // slices follow the transactionGraph data-proportional rule
-    // (~200k rows per partition) so downstream consumers of a LARGE
-    // gated solve still parallelize
-    val slices = math.max(1, (rs.length / 200000) + (
-      if (rs.length % 200000 == 0) 0 else 1))
-    Some(edges.sparkSession.createDataFrame(
-      edges.sparkSession.sparkContext.parallelize(rs, slices), schema))
   }
 
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     ccDriverSolve(edges) match {
-      case Some(labels) => return labels
+      case Some((labels, _)) => return labels
       case None => ()
     }
     // undirected: propagate labels both ways. Materialized ONCE —
@@ -685,11 +699,16 @@ object PipelineOps {
   /** same, returning (labels, rounds) so specs can pin the O(log d)
     * round count. */
   private[graft] def connectedComponentsDoublingStats(edges: DataFrame,
-      maxIters: Int): (DataFrame, Int) = {
+      maxIters: Int): (DataFrame, Int) =
     ccDriverSolve(edges) match {
-      case Some(labels) => return (labels, 0)
-      case None => ()
+      case Some((labels, _)) => (labels, 0)
+      case None => doublingLoop(edges, maxIters)
     }
+
+  /** the distributed pointer-doubling rounds behind
+    * [[connectedComponentsDoubling]] (no driver-solve gate). */
+  private def doublingLoop(edges: DataFrame,
+      maxIters: Int): (DataFrame, Int) = {
     val nPart = ccPartitions(edges)
     val sym = Ckpt.cutPartitioned(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -780,19 +799,33 @@ object PipelineOps {
     * state, which is why it is what a production pipeline persists).
     */
   def mergeDeltaComponents(standing: DataFrame,
-      deltaEdges: DataFrame): DataFrame = {
+      deltaEdges: DataFrame, deltaRows: Option[Long] = None): DataFrame = {
+    // a driver-known bound on |delta| (a micro-batch's row count)
+    // decides the contraction joins' strategy without a job: within
+    // the relabel ceiling the delta-sized endpoint map broadcasts,
+    // above it it is the shuffle-hash build side. Unknown, the
+    // planner decides from its own statistics.
+    def deltaSide(df: DataFrame): DataFrame = deltaRows match {
+      case Some(n) if 2 * n <= relabelBroadcastMaxRows => broadcast(df)
+      case Some(_) => df.hint("shuffle_hash")
+      case None => df
+    }
     val deltaNodes = deltaEdges.select(col("src").as("node"))
       .union(deltaEdges.select(col("dst").as("node"))).distinct()
     // standing label per delta endpoint; a node the standing table
-    // has never seen labels itself (= its own component of one)
-    val mapped = Ckpt.cut(deltaNodes.join(standing, Seq("node"), "left")
-      .select(col("node"), coalesce(col("label"), col("node")).as("lbl")),
+    // has never seen labels itself (= its own component of one) and
+    // is flagged fresh — `seen` is non-null on every standing row, so
+    // the flag replaces a second join against standing
+    val mapped = Ckpt.cut(deltaNodes.join(standing.select(col("node"),
+        col("label"), lit(true).as("seen")), Seq("node"), "left")
+      .select(col("node"), coalesce(col("label"), col("node")).as("lbl"),
+        col("seen").isNull.as("fresh")),
       true) // read three times below (both edge ends + fresh-node set)
     val compEdges = deltaEdges
-      .join(mapped.select(col("node").as("src"), col("lbl").as("ls")),
-        "src")
-      .join(mapped.select(col("node").as("dst"), col("lbl").as("ld")),
-        "dst")
+      .join(deltaSide(mapped.select(col("node").as("src"),
+        col("lbl").as("ls"))), "src")
+      .join(deltaSide(mapped.select(col("node").as("dst"),
+        col("lbl").as("ld"))), "dst")
       .select(col("ls").as("src"), col("ld").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
     // scale-regime gate (the lpaRound precedent): the relabel map is
@@ -800,23 +833,29 @@ object PipelineOps {
     // that bridges most of the standing graph (or a backfill shard)
     // can push it past broadcastable size, and an unconditional
     // broadcast would OOM the driver at exactly the moment the merge
-    // matters most. The doubling solve's output is already
-    // checkpointed (its loop discipline), so the gating count is one
-    // cheap job over materialized blocks. Past the ceiling, the
-    // relabel joins fall back to shuffle-hash with the relabel map as
-    // build side — the |standing| table shuffles once on `label`,
-    // which is the data-proportional price of a graph-sized relabel.
-    val relabelT = connectedComponentsDoubling(compEdges)
+    // matters most. A driver-solved map's size is known for free; the
+    // distributed solve's output is checkpointed (its loop
+    // discipline), so its gating count is one cheap job over
+    // materialized blocks. Past the ceiling, the relabel joins fall
+    // back to shuffle-hash with the relabel map as build side — the
+    // |standing| table shuffles once on `label`, which is the
+    // data-proportional price of a graph-sized relabel.
+    val (solved, solvedRows) = ccDriverSolve(compEdges) match {
+      case Some((labels, n)) => (labels, n)
+      case None =>
+        val labels = doublingLoop(compEdges, 20)._1
+        (labels, labels.count())
+    }
+    val relabelT = solved
       .select(col("node").as("old"), col("label").as("merged"))
     val relabel =
-      if (relabelT.count() <= relabelBroadcastMaxRows) broadcast(relabelT)
+      if (solvedRows <= relabelBroadcastMaxRows) broadcast(relabelT)
       else relabelT.hint("shuffle_hash")
     val baseOut = standing
       .join(relabel, col("label") === col("old"), "left")
       .select(col("node"),
         coalesce(col("merged"), col("label")).as("label"))
-    val freshOut = mapped
-      .join(standing.select(col("node")), Seq("node"), "left_anti")
+    val freshOut = mapped.filter(col("fresh"))
       .join(relabel, col("lbl") === col("old"), "left")
       .select(col("node"),
         coalesce(col("merged"), col("lbl")).as("label"))

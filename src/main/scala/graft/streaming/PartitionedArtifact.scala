@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -47,6 +48,16 @@ import org.apache.spark.sql.types.StructType
   *    only for those — partitions in `touched` are REPLACED by the
   *    delta's rows for them (zero rows = partition dropped), all
   *    others carry forward untouched.
+  *
+  * Job budget — the Spark jobs of one absorb are bounded like its
+  * I/O: [[absorbBatch]] persists the micro-batch, so the source slice
+  * is read and parsed once however many plans consume it; every read
+  * of the standing state carries the declared storage schema, so
+  * planning one runs no schema-inference job (a committed version is
+  * planned with zero jobs); `_STATS` row counts are observed on the
+  * writes themselves; and a channel the optimizer proves empty is not
+  * written. An absorb costs its loop's own delta-sized jobs plus one
+  * write job per non-empty channel.
   *
   * CLUSTER CONTRACT: same as SideTables/VersionedArtifact — `root`
   * must be storage the driver and every executor see at one path.
@@ -129,7 +140,9 @@ object PartitionedArtifact {
       * nothing is live. */
     def table(name: String): DataFrame = specs(name).layout match {
       case Whole => version match {
-        case Some(v) => cast(s.read.parquet(s"$root/v=$v/$name"), name)
+        case Some(v) =>
+          val dir = s"$root/v=$v/$name"
+          scan(name, dir, Seq(dir))
         case None => empty(name)
       }
       case ByPart(_) => readParts(name, parts(name))
@@ -159,23 +172,26 @@ object PartitionedArtifact {
         opened.getOrElseUpdate(name, collection.mutable.Set.empty) ++=
           byDir.values.flatten.map { case (_, p) => p })
       if (byDir.isEmpty) empty(name)
-      else cast(byDir.map { case ((v, sub), vps) =>
+      else byDir.map { case ((v, sub), vps) =>
         val base = s"$root/v=$v/$name$sub"
-        s.read.option("basePath", base)
-          .parquet(vps.map { case (_, p) => s"$base/$partCol=$p" }
-            .distinct.sorted: _*)
-      }.reduce(_ unionByName _), name)
+        scan(name, base, vps.map { case (_, p) => s"$base/$partCol=$p" }
+          .distinct.sorted)
+      }.reduce(_ unionByName _)
     }
 
+    // an empty LocalRelation, so the optimizer prunes what consumes it
     private def empty(name: String): DataFrame = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      specs(name).schema)
+      java.util.Collections.emptyList[Row](), specs(name).schema)
 
-    // partition-directory inference types drift (int vs long), so
-    // every read lands on the declared storage schema
-    private def cast(df: DataFrame, name: String): DataFrame =
-      df.select(specs(name).schema.fields.toSeq
-        .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    // every read carries the declared storage schema — a ByPart column
+    // resolves from the path under its declared type — so planning a
+    // read runs no schema-inference job
+    private def scan(name: String, base: String,
+        paths: Seq[String]): DataFrame = {
+      val schema = specs(name).schema
+      s.read.schema(schema).option("basePath", base).parquet(paths: _*)
+        .select(schema.fieldNames.toSeq.map(col): _*)
+    }
   }
 
   private val keepBehind = 2
@@ -322,30 +338,37 @@ object PartitionedArtifact {
     if (fs.exists(verDir)) fs.delete(verDir, true)
     var manifest = prevManifest
     val stats = collection.mutable.ArrayBuffer.empty[(String, Long)]
-    // write one channel, return the partition values it produced
-    // bytes for plus their row count (parquet-metadata count)
-    def writeChannel(rows: DataFrame, schema: StructType,
-        partCol: String, tdir: String): (Seq[Long], Long) = {
-      rows.select(schema.fieldNames.toSeq.map(col): _*)
-        .write.partitionBy(partCol).mode("overwrite").parquet(tdir)
-      val written = fs.listStatus(new Path(tdir)).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith(partCol + "="))
-        .map(_.stripPrefix(partCol + "=").toLong)
-      val n = if (written.isEmpty) 0L
-        else s.read.option("basePath", tdir)
-          .parquet(written.map(p => s"$tdir/$partCol=$p"): _*)
-          .count()
-      (written, n)
+    // write rows in storage order; the `_STATS` row count is observed
+    // on the write itself (no re-read, no extra job)
+    def writeCounted(rows: DataFrame, schema: StructType, tdir: String,
+        partCol: Option[String]): Long = {
+      val obs = Observation()
+      val w = rows.select(schema.fieldNames.toSeq.map(col): _*)
+        .observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+      partCol.fold(w)(c => w.partitionBy(c)).parquet(tdir)
+      obs.get("n").asInstanceOf[Long]
     }
+    // write one channel, return the partition values it produced
+    // bytes for plus their row count. A channel the optimizer proves
+    // empty is not written at all: it produces no partition, exactly
+    // as an executed empty write would
+    def writeChannel(rows: DataFrame, schema: StructType,
+        partCol: String, tdir: String): (Seq[Long], Long) =
+      if (provablyEmpty(rows)) (Seq.empty, 0L)
+      else {
+        val n = writeCounted(rows, schema, tdir, Some(partCol))
+        val written = fs.listStatus(new Path(tdir)).toSeq
+          .filter(_.isDirectory)
+          .map(_.getPath.getName)
+          .filter(_.startsWith(partCol + "="))
+          .map(_.stripPrefix(partCol + "=").toLong)
+        (written, n)
+      }
     specs.toSeq.sortBy(_._1).foreach { case (name, spec) =>
       val tdir = s"$root/v=$v/$name"
       (spec.layout, deltas(name)) match {
         case (Whole, WholeDelta(rows)) =>
-          rows.select(spec.schema.fieldNames.toSeq.map(col): _*)
-            .write.mode("overwrite").parquet(tdir)
-          stats += name -> s.read.parquet(tdir).count()
+          stats += name -> writeCounted(rows, spec.schema, tdir, None)
         case (ByPart(partCol), PartsDelta(replace, replaced, append)) =>
           val (written, nRep) =
             writeChannel(replace, spec.schema, partCol, tdir)
@@ -391,10 +414,19 @@ object PartitionedArtifact {
     fs.create(commitMarker(root, v), true).close()
   }
 
-  /** one absorb step — [[VersionedArtifact.absorbBatchTables]]'
-    * replay contract (committed id → reader-safe no-op; uncommitted
-    * debris → recompute from the predecessor and overwrite whole),
-    * with partition-scoped writes. */
+  /** true when the optimizer proves `df` empty (its optimized plan
+    * is an empty LocalRelation) — decided without running a job. */
+  private def provablyEmpty(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data.isEmpty
+      case _ => false
+    }
+
+  /** one absorb step — [[VersionedArtifact.absorbBatch]]'s replay
+    * contract (committed id → reader-safe no-op; uncommitted debris →
+    * recompute from the predecessor and overwrite whole), with
+    * partition-scoped writes. The micro-batch stays persisted for
+    * the whole absorb (see the job budget above). */
   def absorbBatch(batch: DataFrame, batchId: Long, root: String,
       specs: Map[String, TableSpec], firstOfRun: Boolean = false)
       (absorb: (Standing, DataFrame, Long) => Map[String, Delta]): Unit = {
@@ -408,12 +440,15 @@ object PartitionedArtifact {
       val standing = standingAt(s, root, specs, prevV)
       val prevManifest = prevV
         .map(readManifest(s, root, _)).getOrElse(Map.empty)
-      val deltas = compactFragmented(standing, prevManifest, specs,
-        absorb(standing, batch, batchId))
-      // the absorb and the compaction have built every plan by now,
-      // so the handle's opened-partition log is complete
-      writeVersion(s, root, batchId, specs, prevManifest, deltas,
-        reads = standing.readsSnapshot)
+      batch.persist()
+      try {
+        val deltas = compactFragmented(standing, prevManifest, specs,
+          absorb(standing, batch, batchId))
+        // the absorb and the compaction have built every plan by now,
+        // so the handle's opened-partition log is complete
+        writeVersion(s, root, batchId, specs, prevManifest, deltas,
+          reads = standing.readsSnapshot)
+      } finally { batch.unpersist(); () }
     }
     prune(s, root, batchId)
   }

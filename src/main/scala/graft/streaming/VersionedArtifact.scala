@@ -187,108 +187,4 @@ object VersionedArtifact {
           firstOfRun = first.getAndSet(false))(absorb))
       .start()
   }
-
-  // ------------------------------------------------------------------
-  // MULTI-TABLE versions — for standing state that is several tables
-  // with different schemas updated atomically per batch (e.g. a graph
-  // artifact = edge list + label table: deletion support NEEDS the
-  // edges, so labels alone aren't a sufficient state). Layout:
-  // `root/v=<id>/<table>/` parquet per table, plus an explicit
-  // `root/v=<id>/_COMMIT` marker written AFTER every table — parquet's
-  // own per-table `_SUCCESS` can't express "all tables landed", so
-  // the version-level marker is the commit point. A committed version
-  // is immutable (replays no-op on it, see absorbBatch); only
-  // marker-less crash debris is ever overwritten.
-  // ------------------------------------------------------------------
-
-  private def commitMarker(root: String, v: Long) =
-    new Path(s"$root/v=$v", "_COMMIT")
-
-  /** committed multi-table version ids under `root`, ascending. */
-  private[graft] def committedTableVersions(s: SparkSession,
-      root: String): Seq[Long] = {
-    val rootP = new Path(root)
-    val fs = fsFor(s, rootP)
-    if (!fs.exists(rootP)) return Seq.empty
-    fs.listStatus(rootP).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .filter(v => fs.exists(commitMarker(root, v)))
-      .sorted
-  }
-
-  private def readTables(s: SparkSession, root: String, v: Long,
-      schemas: Map[String, StructType]): Map[String, DataFrame] =
-    schemas.keys.map(n => n -> s.read.parquet(s"$root/v=$v/$n")).toMap
-
-  private def emptyTables(s: SparkSession,
-      schemas: Map[String, StructType]): Map[String, DataFrame] =
-    schemas.map { case (n, sch) => n -> s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch) }
-
-  /** the newest committed state, one DataFrame per table — zero-row
-    * tables before any commit. */
-  def readLatestTables(s: SparkSession, root: String,
-      schemas: Map[String, StructType]): Map[String, DataFrame] =
-    committedTableVersions(s, root).lastOption match {
-      case Some(v) => readTables(s, root, v, schemas)
-      case None => emptyTables(s, schemas)
-    }
-
-  /** seed a multi-table loop from batch-built tables (version -1). */
-  def bootstrapTables(tables: Map[String, DataFrame],
-      root: String): Unit = {
-    require(tables.nonEmpty, "bootstrapTables needs at least one table")
-    val s = tables.head._2.sparkSession
-    require(committedTableVersions(s, root).isEmpty,
-      s"versioned-artifact root $root already has committed versions")
-    tables.foreach { case (n, df) =>
-      df.write.mode("overwrite").parquet(s"$root/v=-1/$n") }
-    fsFor(s, new Path(root)).create(commitMarker(root, -1L), true).close()
-  }
-
-  /** one multi-table absorb step — same replay contract as
-    * [[absorbBatch]] (committed version → reader-safe no-op;
-    * uncommitted debris → recompute from the predecessor); `absorb`
-    * must return every table in `schemas`. */
-  def absorbBatchTables(batch: DataFrame, batchId: Long, root: String,
-      schemas: Map[String, StructType], firstOfRun: Boolean = false)
-      (absorb: (Map[String, DataFrame], DataFrame, Long)
-        => Map[String, DataFrame]): Unit = {
-    val s = batch.sparkSession
-    val committed = committedTableVersions(s, root)
-    guardCheckpointReset(batchId, committed, root)
-    if (firstOfRun) guardFirstBatch(batchId, committed, root)
-    val fs = fsFor(s, new Path(root))
-    if (!committed.contains(batchId)) {
-      val standing = committed.filter(_ < batchId).lastOption match {
-        case Some(v) => readTables(s, root, v, schemas)
-        case None => emptyTables(s, schemas)
-      }
-      val out = absorb(standing, batch, batchId)
-      require(out.keySet == schemas.keySet,
-        s"absorb returned tables ${out.keySet}, expected ${schemas.keySet}")
-      out.foreach { case (n, df) =>
-        df.write.mode("overwrite").parquet(s"$root/v=$batchId/$n") }
-      fs.create(commitMarker(root, batchId), true).close()
-    }
-    val live = committedTableVersions(s, root).filter(_ <= batchId)
-    live.dropRight(keepBehind + 1)
-      .foreach(v => fs.delete(new Path(root, s"v=$v"), true))
-  }
-
-  /** start a multi-table maintenance loop. */
-  def maintainTables(stream: DataFrame, root: String, checkpoint: String,
-      schemas: Map[String, StructType])
-      (absorb: (Map[String, DataFrame], DataFrame, Long)
-        => Map[String, DataFrame]): StreamingQuery = {
-    val first = new java.util.concurrent.atomic.AtomicBoolean(true)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((b: DataFrame, id: Long) =>
-        absorbBatchTables(b, id, root, schemas,
-          firstOfRun = first.getAndSet(false))(absorb))
-      .start()
-  }
 }

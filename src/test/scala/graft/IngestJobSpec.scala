@@ -15,6 +15,10 @@ class IngestJobSpec extends SparkSpec {
     s"""{"stream":"ticker","symbol":"$sym","data":"{\\"last_price\\":\\"$i.0\\",\\"event_time\\":$i}"}"""
   private def tradeFrame(sym: String, i: Int) =
     s"""{"stream":"trades","symbol":"$sym","data":"{\\"price\\":\\"$i.5\\",\\"event_time\\":$i,\\"is_buyer_maker\\":\\"True\\"}"}"""
+  // the kline payload repeats the envelope's symbol
+  private def klineFrame(sym: String, i: Int) =
+    s"""{"stream":"klines","symbol":"$sym","data":"{\\"event_time\\":$i,""" +
+      s"""\\"symbol\\":\\"$sym\\",\\"interval\\":\\"1m\\",\\"close_price\\":\\"$i.25\\"}"}"""
 
   test("replay ingest routes, projects, partitions, caps and fans out") {
     val replay = Files.createTempFile("ingest", ".jsonl")
@@ -46,5 +50,29 @@ class IngestJobSpec extends SparkSpec {
 
     // symbol-partitioned directory layout
     assert(new java.io.File(s"$out/stream=ticker/fmt=parquet/symbol=BTCUSDT").exists())
+  }
+
+  test("klines drain into stream=klines with the envelope's symbol as key") {
+    val replay = Files.createTempFile("ingest-klines", ".jsonl")
+    val frames = (1 to 3).map(i => klineFrame("BTCUSDT", i)) ++
+      (1 to 2).map(i => klineFrame("ETHUSDT", i)) ++
+      (1 to 2).map(i => tickerFrame("BTCUSDT", i))
+    Files.writeString(replay, frames.mkString("", "\n", "\n"))
+    val out = Files.createTempDirectory("ingest-klines-out").toString
+
+    IngestJob.runReplay(spark, replay.toString, IngestConfig(
+      symbols = Seq("BTCUSDT", "ETHUSDT"),
+      loadTypes = Seq("klines"),
+      outputDir = out))
+
+    val klines = spark.read.parquet(s"$out/stream=klines/fmt=parquet")
+    assert(klines.columns.count(_ == "symbol") == 1)
+    assert(klines.columns.contains("close_price"))
+    val bySym = klines.groupBy($"symbol").count()
+      .as[(String, Long)].collect().toMap
+    assert(bySym == Map("BTCUSDT" -> 3L, "ETHUSDT" -> 2L))
+    assert(klines.filter($"symbol" === "ETHUSDT")
+      .select($"interval").as[String].collect().toSet == Set("1m"))
+    assert(new java.io.File(s"$out/stream=klines/fmt=parquet/symbol=ETHUSDT").exists())
   }
 }

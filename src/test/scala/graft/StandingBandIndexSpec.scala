@@ -62,6 +62,21 @@ class StandingBandIndexSpec extends SparkSpec {
       .count() == (b0 ++ b1 ++ b2).size)
   }
 
+  test("planning a read of a committed version runs no Spark job") {
+    val root = tmp("sbi-plan")
+    StandingBandIndex.absorbBatch(b0.toDF("doc_id", "band_id", "bh"),
+      0L, root)
+    StandingBandIndex.absorbBatch(b1.toDF("doc_id", "band_id", "bh"),
+      1L, root)
+    // the epoch partitions resolve under the declared schema: no
+    // footer is opened to infer one
+    val (tables, jobs) = JobLog.during(spark)(
+      StandingBandIndex.readLatest(spark, root))
+    assert(jobs.isEmpty, jobs.toString)
+    assert(tables("collisions").as[(Long, Long, Long)].collect().toSet ==
+      Set((1L, 2L, 1L), (1L, 3L, 2L), (2L, 3L, 1L)))
+  }
+
   test("replay: committed version no-ops, crash debris recomputes") {
     val root = tmp("sbi-replay")
     StandingBandIndex.absorbBatch(b0.toDF("doc_id", "band_id", "bh"),

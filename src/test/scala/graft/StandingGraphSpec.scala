@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.queries.PipelineOps
-import graft.streaming.StandingGraph
+import graft.streaming.{PartitionedArtifact, StandingGraph}
 
 /** The CDC graph loop: a changelog of edge adds and node deletes,
   * absorbed batch-by-batch into a standing (edges, labels) artifact,
@@ -241,6 +242,152 @@ class StandingGraphSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "v=1")))
     assert(edges(root) == Set((1L, 2L)))
+  }
+
+  /** Spark jobs one pure-insert absorb may start on a giant-component
+    * graph: the batch-size aggregate, three delta-sized collects (the
+    * distinct adds, the endpoints' standing labels, the dedupe probe)
+    * and the two channel writes — the same 11 the `standing_absorb`
+    * benchmark traces per batch on a 2000-node graph. */
+  private val PureInsertJobBudget = 11
+
+  test("a pure-insert absorb runs within the job budget; a delete batch retracts exactly") {
+    val root = tmp("sg-budget")
+    // one giant component, the standing shape of a transaction graph:
+    // a random tree plus chords
+    val r = new scala.util.Random(11)
+    val n0 = 400
+    def pair(): (Long, Long) = {
+      val a = r.nextInt(n0).toLong
+      val b = (a + 1 + r.nextInt(n0 - 1)) % n0
+      (a, b)
+    }
+    val baseEdges = (1 until n0).map(i => (i.toLong, r.nextInt(i).toLong)) ++
+      (0 until n0 / 4).map(_ => pair())
+    val base = baseEdges.toDF("src", "dst")
+    StandingGraph.bootstrap(base, PipelineOps.connectedComponents(base), root)
+    // the micro-batch counts every row it yields, per evaluation
+    val rowsRead = spark.sparkContext.longAccumulator("batch-rows-read")
+    def batch(rows: Seq[(String, Long, Long)]): DataFrame =
+      spark.sparkContext.parallelize(rows, 2)
+        .map { row => rowsRead.add(1); row }
+        .toDF("kind", "src", "dst")
+    // two in three adds attach a new node, the rest join two standing
+    // nodes — every one lands in the giant component
+    val adds = (0 until 90).map { i =>
+      if (i % 3 == 0) { val (a, b) = pair(); ("add", a, b) }
+      else ("add", 1000L + i, r.nextInt(n0).toLong)
+    }
+    val conf0 = spark.conf.getAll
+    val (_, jobs) = JobLog.during(spark)(
+      StandingGraph.absorbBatch(batch(adds), 0L, root))
+    // the absorb shares its session with readers: it leaves the
+    // session conf as it found it
+    assert(spark.conf.getAll == conf0)
+    assert(jobs.size <= PureInsertJobBudget, jobs.mkString("\n"))
+    assert(jobs.forall(_.inSqlExecution),
+      s"jobs outside a SQL execution (schema inference): ${jobs.filterNot(_.inSqlExecution)}")
+    assert(rowsRead.value == adds.size.toLong,
+      s"the micro-batch was read ${rowsRead.value} rows for ${adds.size}")
+    val afterAdds = (baseEdges ++ adds.map { case (_, a, b) => (a, b) }).toSet
+    assert(edges(root) == afterAdds)
+    def scratchLabels(es: Set[(Long, Long)]): Map[Long, Long] =
+      PipelineOps.connectedComponents(es.toSeq.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+    assert(labels(root) == scratchLabels(afterAdds))
+
+    // the retraction path: deleting tree nodes near the root splits
+    // the giant component; neighbours left with no edge stay labeled
+    // as themselves
+    val gone = Set(1L, 2L, 5L)
+    StandingGraph.absorbBatch(
+      batch(gone.toSeq.map(n => ("del", n, -1L))), 1L, root)
+    assert(spark.conf.getAll == conf0)
+    val survivingEdges = afterAdds.filterNot { case (a, b) =>
+      gone(a) || gone(b) }
+    assert(edges(root) == survivingEdges)
+    val scratch = scratchLabels(survivingEdges)
+    val nodes = afterAdds.flatMap { case (a, b) => Seq(a, b) } -- gone
+    assert(labels(root) == nodes.map(v => v -> scratch.getOrElse(v, v)).toMap)
+
+    // `_STATS` is counted on the write itself; a re-read of each
+    // version's written bytes must agree, table by table
+    def reread(v: Long, table: String): Long =
+      Seq(s"$root/v=$v/$table", s"$root/v=$v/$table.app")
+        .filter(d => new java.io.File(d).exists())
+        .map(d => spark.read.schema(StandingGraph.Specs(table).schema)
+          .parquet(d).count()).sum
+    Seq(-1L, 0L, 1L).foreach { v =>
+      val stats = PartitionedArtifact.writeStats(spark, root, v)
+      assert(stats.keySet == StandingGraph.Specs.keySet)
+      stats.foreach { case (t, n) =>
+        assert(reread(v, t) == n, s"v=$v $t: _STATS $n") }
+    }
+
+    // planning a read of the committed version runs no job
+    val (_, readJobs) = JobLog.during(spark)(
+      StandingGraph.readLatest(spark, root))
+    assert(readJobs.isEmpty, readJobs.toString)
+  }
+
+  test("driver insert path, fetch-bound and past-ceiling gates all reach the same state") {
+    // two standing components (random trees plus chords); a pure-insert
+    // batch that bridges them and attaches new nodes, then a batch that
+    // deletes in both components and adds on top
+    val r = new scala.util.Random(5)
+    def tree(off: Long, n: Int): Seq[(Long, Long)] =
+      (1 until n).map(i => (off + i, off + r.nextInt(i))) ++
+        (0 until n / 4).map(_ => (off + r.nextInt(n), off + r.nextInt(n)))
+          .filter { case (a, b) => a != b }
+    val base = (tree(0L, 30) ++ tree(100L, 30)).toDF("src", "dst")
+    val baseLabels = PipelineOps.connectedComponents(base).cache()
+    val inserts = Seq(("add", 3L, 104L)) ++ (0 until 20).map { i =>
+      if (i % 2 == 0) ("add", 500L + i, r.nextInt(30).toLong)
+      else ("add", 100L + r.nextInt(30), 600L + i)
+    }
+    val mixed = Seq(("del", 1L, -1L), ("del", 101L, -1L),
+      ("add", 700L, 2L), ("add", 700L, 102L), ("add", 500L, 501L))
+    def run(props: (String, String)*)
+        : (Map[Long, Long], Set[(Long, Long)], Seq[JobLog.Job]) = {
+      props.foreach { case (k, v) => System.setProperty(k, v) }
+      try {
+        val root = tmp("sg-regime")
+        StandingGraph.bootstrap(base, baseLabels, root)
+        val (_, jobs) = JobLog.during(spark)(StandingGraph.absorbBatch(
+          inserts.toDF("kind", "src", "dst"), 0L, root))
+        StandingGraph.absorbBatch(mixed.toDF("kind", "src", "dst"), 1L, root)
+        (labels(root), edges(root), jobs)
+      } finally props.foreach { case (k, _) => System.clearProperty(k) }
+    }
+    val driverGate = "graft.standing.driver.max.adds"
+    def cuts(jobs: Seq[JobLog.Job]) = jobs.filter(_.callSite.contains("Ckpt.scala"))
+    // a batch AT the insert gate stays on the driver (no lineage cut);
+    // one add past it takes the distributed merge
+    val atGate = run(driverGate -> inserts.size.toString)
+    assert(cuts(atGate._3).isEmpty, atGate._3.mkString("\n"))
+    val pastGate = run(driverGate -> (inserts.size - 1).toString)
+    assert(cuts(pastGate._3).nonEmpty, pastGate._3.mkString("\n"))
+    // distributed, with every gated label list past the driver fetch
+    // bound (sized by a count, then collected) and the contracted
+    // solve on its distributed loop ...
+    val pastFetch = run(driverGate -> "0", "graft.cc.driver.max.edges" -> "1")
+    // ... and past the broadcast ceiling (whole-table rewrites,
+    // shuffle-hash joins)
+    val pastCeiling = run("graft.relabel.bcast.max.rows" -> "1")
+    val survivingEdges = (base.as[(Long, Long)].collect().toSet ++
+      inserts.map { case (_, a, b) => (a, b) })
+      .filterNot { case (a, b) => Set(1L, 101L)(a) || Set(1L, 101L)(b) } ++
+      mixed.collect { case ("add", a, b) => (a, b) }
+    val scratch = PipelineOps.connectedComponents(
+        survivingEdges.toSeq.toDF("src", "dst"))
+      .as[(Long, Long)].collect().toMap
+    for ((l, e, _) <- Seq(atGate, pastGate, pastFetch, pastCeiling)) {
+      assert(e == survivingEdges)
+      assert(l.filter { case (n, _) => scratch.contains(n) } == scratch)
+      // survivors left with no edge label themselves
+      assert(l.forall { case (n, lbl) => scratch.getOrElse(n, n) == lbl })
+    }
+    baseLabels.unpersist()
   }
 
   test("bootstrap seeds the loop from a batch-built graph") {
