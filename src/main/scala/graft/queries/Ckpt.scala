@@ -142,40 +142,27 @@ object Ckpt {
     * from the DATA (the caller passes the edge list's own partition
     * count, which transactionGraph/symByU size by input rows), so the
     * setting scales exactly like the layout it matches — NOT a
-    * local-core-count constant.
-    *
-    * The knob `graft.loop.adaptive` (sysprop; env
-    * GRAFT_LOOP_ADAPTIVE) = "true" keeps AQE on inside loops for
-    * deployments that want runtime skew-splitting of the per-round
-    * join at extreme scale; the loops' layouts make that a
-    * second-order effect, and the default favors the measured
-    * round-latency win. */
+    * local-core-count constant. */
   def staticLoopScope[T](df: DataFrame, partitions: Int)(body: => T): T = {
-    val adaptive = sys.props.get("graft.loop.adaptive")
-      .orElse(sys.env.get("GRAFT_LOOP_ADAPTIVE"))
-      .exists(_.equalsIgnoreCase("true"))
-    if (adaptive) body
-    else {
-      val conf = df.sparkSession.conf
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val spKey = "spark.sql.shuffle.partitions"
-      // constraint propagation re-derives isNotNull/equality
-      // constraint sets over every join per PLANNING pass — pure
-      // driver CPU that a loop pays once per round on plans whose
-      // shape is already pinned; off for the loop body, like the
-      // long-standing advice for iterative ML plans (SPARK-19846's
-      // knob exists for exactly this).
-      val cpKey = "spark.sql.constraintPropagation.enabled"
-      val (aqe0, sp0, cp0) =
-        (conf.get(aqeKey), conf.get(spKey), conf.get(cpKey))
-      conf.set(aqeKey, "false")
-      conf.set(spKey, math.max(1, partitions).toString)
-      conf.set(cpKey, "false")
-      try body
-      finally {
-        conf.set(aqeKey, aqe0); conf.set(spKey, sp0)
-        conf.set(cpKey, cp0)
-      }
+    val conf = df.sparkSession.conf
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val spKey = "spark.sql.shuffle.partitions"
+    // constraint propagation re-derives isNotNull/equality
+    // constraint sets over every join per PLANNING pass — pure
+    // driver CPU that a loop pays once per round on plans whose
+    // shape is already pinned; off for the loop body, like the
+    // long-standing advice for iterative ML plans (SPARK-19846's
+    // knob exists for exactly this).
+    val cpKey = "spark.sql.constraintPropagation.enabled"
+    val (aqe0, sp0, cp0) =
+      (conf.get(aqeKey), conf.get(spKey), conf.get(cpKey))
+    conf.set(aqeKey, "false")
+    conf.set(spKey, math.max(1, partitions).toString)
+    conf.set(cpKey, "false")
+    try body
+    finally {
+      conf.set(aqeKey, aqe0); conf.set(spKey, sp0)
+      conf.set(cpKey, cp0)
     }
   }
 }

@@ -10,13 +10,43 @@ import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-/** PARTITION-SCOPED batch-id versioning — [[VersionedArtifact]]'s
-  * contract (commit markers, replay no-ops, crash-debris recompute,
-  * bootstrap at `v=-1`, first-batch/reset guards) with the one change
-  * that makes per-batch I/O O(delta) instead of O(standing): a
-  * version writes only the partitions its batch TOUCHED plus a small
-  * manifest, and untouched partitions carry forward by REFERENCE to
-  * the version directory that last wrote them.
+/** Batch-id-versioned standing artifact with PARTITION-SCOPED
+  * versions — the one layer under every foreachBatch maintenance loop
+  * (the `Standing*` objects): a disk artifact whose version directory
+  * is the micro-batch id, which converts foreachBatch's at-least-once
+  * delivery into exactly-once state. A version writes only the
+  * partitions its batch TOUCHED plus a small manifest, and untouched
+  * partitions carry forward by REFERENCE to the version directory
+  * that last wrote them, so per-batch I/O is O(delta), not
+  * O(standing).
+  *
+  * The exactly-once contract, shared by every loop:
+  *  - a version is COMMITTED iff its `_COMMIT` marker exists; the
+  *    marker is written after every table, the manifest and the
+  *    stats, so an aborted write is invisible;
+  *  - a replayed batch whose version is already COMMITTED is a
+  *    reader-safe NO-OP (the id's offset range was pinned in the WAL
+  *    before processing, so the rows are the same and the
+  *    deterministic absorb would rewrite identical bytes — but the
+  *    rewrite would first delete files a concurrent reader may be
+  *    scanning);
+  *  - an absorb whose version is absent or UNCOMMITTED crash debris
+  *    reads the newest committed version STRICTLY BELOW its id —
+  *    never its own failed attempt — deletes the debris and writes
+  *    `v=N` afresh (the absorb must be a deterministic function of
+  *    (predecessor state, batch rows, batch id) — every loop's is);
+  *  - `v=-1` is the bootstrap slot: a batch-built artifact handed
+  *    into the loop sorts before every real batch id;
+  *  - pruning keeps the newest [[keepBehind]]+1 manifests at or below
+  *    the batch just written plus every directory they reference,
+  *    never touches state ahead of a replayed batch, and deletes a
+  *    dereferenced directory only after the [[pruneLeaseMs]] read
+  *    lease;
+  *  - a stream starting at batch 0 over a root with later history
+  *    fails ([[guardCheckpointReset]]), and so does a run whose first
+  *    batch is neither the root's high-water mark nor its successor
+  *    ([[guardFirstBatch]]) — either mismatch would otherwise turn
+  *    arriving rows into silent replay no-ops.
   *
   * Layout per version:
   * {{{
@@ -41,7 +71,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Table layouts:
   *  - [[Whole]]: rewritten whole every version — for small state
-  *    (label vectors, register tables) where versioned snapshots are
+  *    (label vectors, codebooks) where versioned snapshots are
   *    cheaper than manifest indirection;
   *  - [[ByPart]]: partitioned by a LONG column; the absorb returns a
   *    [[PartsDelta]] naming the touched partition values, and rows
@@ -59,8 +89,9 @@ import org.apache.spark.sql.types.StructType
   * written. An absorb costs its loop's own delta-sized jobs plus one
   * write job per non-empty channel.
   *
-  * CLUSTER CONTRACT: same as SideTables/VersionedArtifact — `root`
-  * must be storage the driver and every executor see at one path.
+  * CLUSTER CONTRACT: like SideTables, `root` must be storage the
+  * driver and every executor see at one path; all probes go through
+  * the Hadoop FileSystem of the root's scheme.
   */
 object PartitionedArtifact {
 
@@ -201,6 +232,60 @@ object PartitionedArtifact {
 
   private def commitMarker(root: String, v: Long) =
     new Path(s"$root/v=$v", "_COMMIT")
+
+  /** A FRESH stream (batch id 0) over a root that already has
+    * committed post-bootstrap history is a checkpoint/root mismatch —
+    * the operator reset or relocated the offset checkpoint but kept
+    * the artifact root. Under the committed-version no-op rule every
+    * replayed-looking batch up to the old high-water mark would be
+    * SILENTLY SKIPPED (arriving rows discarded with no error), so the
+    * mismatch must fail loudly at the first batch instead. Batch ids
+    * only advance after the previous offset commit, so a legitimate
+    * batch-0 replay can coexist with at most version 0 (plus the
+    * bootstrap's -1) — anything newer proves the WAL and the root
+    * disagree. */
+  private def guardCheckpointReset(batchId: Long,
+      committed: Seq[Long], root: String): Unit =
+    if (batchId == 0L && committed.exists(_ > 0L))
+      throw new IllegalStateException(
+        s"artifact root $root has committed versions up to " +
+          s"${committed.max} but the stream is starting at batch 0 — " +
+          "its checkpoint was reset or points elsewhere. Reprocessing " +
+          "into this root needs a fresh (or deliberately emptied) root; " +
+          "resuming needs the original checkpointLocation.")
+
+  /** The FIRST batch after a (re)start must line up with the root's
+    * committed high-water mark — [[guardCheckpointReset]] only
+    * catches a reset to batch 0, but a WRONG-BUT-NONZERO checkpoint
+    * (copied from another stream, or a root swapped under a live
+    * checkpoint) whose next batch id is at or below the high-water
+    * mark would hit the committed-version no-op rule and silently
+    * discard arriving rows. Structured Streaming pins a batch's
+    * offsets in the WAL before processing and its commit log lags the
+    * WAL by at most one batch, while the artifact version commits
+    * INSIDE the batch — so a legitimate first batch is either
+    * `hi` (crash between artifact commit and the stream's commit log;
+    * replays as a no-op) or `hi + 1` (normal advance). Anything else
+    * proves the WAL and the root disagree. A root with no real
+    * versions (fresh, or bootstrap-only `v=-1`) can only legitimately
+    * meet batch 0. Enforced on the first batch of every [[maintain]]
+    * run; direct [[absorbBatch]] calls check it only when passed
+    * `firstOfRun`. */
+  private def guardFirstBatch(batchId: Long, committed: Seq[Long],
+      root: String): Unit = {
+    val hi = committed.filter(_ >= 0L).lastOption
+    val ok = hi match {
+      case Some(h) => batchId == h || batchId == h + 1
+      case None => batchId == 0L
+    }
+    if (!ok)
+      throw new IllegalStateException(
+        s"artifact root $root has committed high-water mark " +
+          s"${hi.getOrElse(-1L)} but this run's first batch id is " +
+          s"$batchId — the offset checkpoint belongs to a different " +
+          "stream or the root was swapped under a live checkpoint. " +
+          "Resuming needs the matching (root, checkpointLocation) pair.")
+  }
 
   /** committed version ids under `root`, ascending. */
   private[graft] def committedVersions(s: SparkSession,
@@ -422,19 +507,17 @@ object PartitionedArtifact {
       case _ => false
     }
 
-  /** one absorb step — [[VersionedArtifact.absorbBatch]]'s replay
-    * contract (committed id → reader-safe no-op; uncommitted debris →
-    * recompute from the predecessor and overwrite whole), with
-    * partition-scoped writes. The micro-batch stays persisted for
-    * the whole absorb (see the job budget above). */
+  /** one absorb step — the foreachBatch body, under the replay
+    * contract above (committed id → reader-safe no-op; uncommitted
+    * debris → recompute from the predecessor). The micro-batch stays
+    * persisted for the whole absorb (see the job budget above). */
   def absorbBatch(batch: DataFrame, batchId: Long, root: String,
       specs: Map[String, TableSpec], firstOfRun: Boolean = false)
       (absorb: (Standing, DataFrame, Long) => Map[String, Delta]): Unit = {
     val s = batch.sparkSession
     val committed = committedVersions(s, root)
-    VersionedArtifact.guardCheckpointReset(batchId, committed, root)
-    if (firstOfRun)
-      VersionedArtifact.guardFirstBatch(batchId, committed, root)
+    guardCheckpointReset(batchId, committed, root)
+    if (firstOfRun) guardFirstBatch(batchId, committed, root)
     if (!committed.contains(batchId)) {
       val prevV = committed.filter(_ < batchId).lastOption
       val standing = standingAt(s, root, specs, prevV)
@@ -453,22 +536,33 @@ object PartitionedArtifact {
     prune(s, root, batchId)
   }
 
+  /** live-epoch ceiling of an epoch-partitioned table before its
+    * oldest epochs fold into the `-1` base. Env
+    * `GRAFT_ARTIFACT_MAX_EPOCHS` / sysprop `graft.artifact.max.epochs`;
+    * floor 2 (base + newest). */
+  private[graft] def maxLiveEpochs: Int =
+    math.max(2, sys.env.get("GRAFT_ARTIFACT_MAX_EPOCHS")
+      .orElse(sys.props.get("graft.artifact.max.epochs"))
+      .map(_.toInt).getOrElse(64))
+
   /** The epochs of `parts` that fold into the `-1` base partition
-    * when adding one more would exceed `maxLive` — the horizon
-    * compaction every epoch-append loop shares
+    * when adding one more would exceed [[maxLiveEpochs]] — the
+    * horizon compaction every epoch-append loop shares
     * ([[graft.streaming.StandingBandIndex]], StandingPq,
     * StandingTriangles): deterministic from the PREDECESSOR partition
-    * list, keeps the newest `maxLive/2` epochs individually live, so
-    * the manifest, version listing, and reader fan-in stay bounded on
-    * an unbounded stream. Amortized fold cost is
-    * O(standing / (maxLive/2)) rows per batch — the LSM trade. */
-  private[streaming] def epochFoldSet(parts: Seq[Long],
-      maxLive: Int): Seq[Long] =
+    * list, keeps the newest `maxLiveEpochs/2` epochs individually
+    * live, so the manifest, version listing, and reader fan-in stay
+    * bounded on an unbounded stream. Amortized fold cost is
+    * O(standing / (maxLiveEpochs/2)) rows per batch — the LSM
+    * trade. */
+  private[streaming] def epochFoldSet(parts: Seq[Long]): Seq[Long] = {
+    val maxLive = maxLiveEpochs
     if (parts.size + 1 <= maxLive) Seq.empty
     else {
       val keepRecent = math.max(1, maxLive / 2)
       parts.filter(_ >= 0L).sorted.dropRight(keepRecent)
     }
+  }
 
   /** ref-list ceiling above which a partition compacts — each append
     * adds one file set per version, so unbounded appends fragment a
@@ -481,8 +575,8 @@ object PartitionedArtifact {
       .map(_.toInt).getOrElse(8))
 
   /** INLINE COMPACTION — the fragmentation sweep the append channel
-    * needs, folded into the absorb exactly like
-    * [[StandingHllRegisters]]' horizon compaction so it stays a
+    * needs, folded into the absorb exactly like the epoch-horizon
+    * folds ([[epochFoldSet]]) so it stays a
     * deterministic function of (predecessor manifest, batch deltas)
     * and therefore replay-safe: any partition whose reference list
     * has reached [[maxPartRefs]] is PROMOTED from the append channel

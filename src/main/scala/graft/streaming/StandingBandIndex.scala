@@ -9,11 +9,11 @@ import graft.queries.{Ckpt, TextOps}
 import PartitionedArtifact.{ByPart, PartsDelta, TableSpec}
 
 /** The dedup-index instance of the maintenance loop — completing the
-  * family symmetry (components [[StandingLabels]], sketches
-  * [[StandingHllRegisters]], CDC graph [[StandingGraph]], ranks
-  * [[StandingRanks]]): each micro-batch of arriving documents' BAND
-  * ROWS (doc_id, band_id, bh — the per-doc MinHash band digests,
-  * which are slice-independent, so any upstream signature stage can
+  * family symmetry (sketches [[StandingHllRegisters]], CDC graph and
+  * components [[StandingGraph]], ranks [[StandingRanks]]): each
+  * micro-batch of arriving documents' BAND ROWS (doc_id, band_id,
+  * bh — the per-doc MinHash band digests, which are
+  * slice-independent, so any upstream signature stage can
   * feed the stream) absorbs into a standing (bands, collisions)
   * artifact by q265's proven delta legs ([[TextOps.bandDeltaLegs]]):
   * the shard probes the standing band index asymmetrically (|shard
@@ -48,8 +48,8 @@ import PartitionedArtifact.{ByPart, PartsDelta, TableSpec}
   * ADVICE finding — one live partition per batch forever would grow
   * the manifest and reader fan-in without bound over a long-running
   * stream): when the live epoch count would exceed
-  * [[maxLiveEpochs]], every epoch older than the newest
-  * `maxLiveEpochs/2` folds into the `epoch = -1` base inside the
+  * [[PartitionedArtifact.maxLiveEpochs]], every epoch older than the
+  * newest `maxLiveEpochs/2` folds into the `epoch = -1` base inside the
   * absorb — deterministic from (predecessor manifest, batch), so
   * replays compact identically, exactly
   * [[StandingHllRegisters]]' discipline. Amortized fold cost is
@@ -77,17 +77,6 @@ object StandingBandIndex {
   private[graft] val Specs: Map[String, TableSpec] = Map(
     "bands" -> TableSpec(BandSchema, ByPart("epoch")),
     "collisions" -> TableSpec(CollSchema, ByPart("epoch")))
-
-  /** live-epoch ceiling per table before the oldest fold into the
-    * base. Env `GRAFT_BAND_MAX_EPOCHS` / sysprop
-    * `graft.band.max.epochs`; floor 2 (base + newest). */
-  private[graft] def maxLiveEpochs: Int =
-    math.max(2, sys.env.get("GRAFT_BAND_MAX_EPOCHS")
-      .orElse(sys.props.get("graft.band.max.epochs"))
-      .map(_.toInt).getOrElse(64))
-
-  private def foldSet(parts: Seq[Long]): Seq[Long] =
-    PartitionedArtifact.epochFoldSet(parts, maxLiveEpochs)
 
   private val absorb: (PartitionedArtifact.Standing, DataFrame, Long)
       => Map[String, PartitionedArtifact.Delta] =
@@ -124,8 +113,9 @@ object StandingBandIndex {
             .select(col("epoch")))
           .distinct().collect().map(_.getLong(0)).toSeq.sorted
       // ---- horizon fold, decided on the PREDECESSOR partition list
-      val bandFold = foldSet(standing.parts("bands"))
-      val collFold = foldSet(standing.parts("collisions"))
+      val bandFold = PartitionedArtifact.epochFoldSet(standing.parts("bands"))
+      val collFold =
+        PartitionedArtifact.epochFoldSet(standing.parts("collisions"))
       // post-delete corpus view (all live epochs minus deleted docs)
       def survBands(ps: Seq[Long]): DataFrame =
         (if (hasDels)
@@ -189,10 +179,6 @@ object StandingBandIndex {
           f => f.groupBy(col("da"), col("db"))
             .agg(sum(col("n_bands")).as("n_bands"))))
     }
-
-  private[graft] def committedVersions(s: SparkSession,
-      root: String): Seq[Long] =
-    PartitionedArtifact.committedVersions(s, root)
 
   /** the current (bands, collisions) views — the epoch partitioning
     * is internal; `collisions` is the summed pair table downstream

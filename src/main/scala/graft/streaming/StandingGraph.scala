@@ -8,12 +8,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import graft.queries.{Ckpt, PipelineOps}
 import PartitionedArtifact.{ByPart, PartsDelta, TableSpec, Whole, WholeDelta}
 
-/** CDC maintenance of a standing graph — the full-algebra loop:
-  * [[StandingLabels]] absorbs edge arrivals, but a real changelog
-  * also DELETES (GDPR purges, corpus retractions), and deletion
-  * needs the edge list (a split re-solves the touched components'
-  * surviving induced edges — labels alone are not a sufficient
-  * state, which is exactly why this instance is multi-table). The
+/** CDC maintenance of a standing graph — the full-algebra loop: a
+  * stream of only `kind = "add"` events maintains component labels
+  * by the merge law alone, but a real changelog also DELETES (GDPR
+  * purges, corpus retractions), and deletion needs the edge list (a
+  * split re-solves the touched components' surviving induced edges
+  * — labels alone are not a sufficient state, which is exactly why
+  * this instance is multi-table). The
   * standing artifact is therefore (edges, labels), versioned
   * atomically per batch by [[PartitionedArtifact]].
   *
@@ -326,10 +327,6 @@ object StandingGraph {
         moved, Some(rekeyed)),
       "labels" -> WholeDelta(labels2))
   }
-
-  private[graft] def committedVersions(s: SparkSession,
-      root: String): Seq[Long] =
-    PartitionedArtifact.committedVersions(s, root)
 
   /** the current (edges, labels) views — the label partitioning of
     * the edge table is internal. */

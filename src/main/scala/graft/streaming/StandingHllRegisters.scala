@@ -6,9 +6,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.queries.SketchOps
+import PartitionedArtifact.{ByPart, TableSpec}
 
 /** Streaming-maintained EPOCH-PARTITIONED HLL registers — the sketch
-  * instance of the [[VersionedArtifact]] loop, and the streaming form
+  * instance of the [[PartitionedArtifact]] loop, and the streaming form
   * of the whole q273/q277/q281 family in one standing table: each
   * micro-batch of (grp, h) observations becomes ONE EPOCH (part =
   * batch id) max-merged into the registers (q273's absorb law, exact
@@ -23,8 +24,14 @@ import graft.queries.SketchOps
   * per-group distinct counts fresh for the price of one scan of each
   * arriving shard.
   *
+  * The registers are one table partitioned by `part`: an absorb
+  * writes only its own epoch, and when epochs age past the horizon it
+  * reads only the base and those epochs, replaces the base with their
+  * max-fold and drops them — so per-batch I/O is the shard's
+  * registers plus, on folding batches, the base.
+  *
   * Exactly-once on top of foreachBatch's at-least-once is
-  * [[VersionedArtifact]]'s versioned-by-batch-id contract. Note the
+  * [[PartitionedArtifact]]'s versioned-by-batch-id contract. Note the
   * interplay with compaction: a replayed batch re-reads its
   * PREDECESSOR version, so the epoch it appends and the epochs it
   * compacts are recomputed identically — compaction inside the absorb
@@ -39,13 +46,16 @@ object StandingHllRegisters {
   private[graft] val RegSchema = StructType(Seq(
     StructField("grp", StringType), StructField("part", LongType),
     StructField("bucket", LongType), StructField("m", LongType)))
+  private val Specs: Map[String, TableSpec] =
+    Map("registers" -> TableSpec(RegSchema, ByPart("part")))
 
   /** epochs kept individually retractable behind the newest; older
     * ones fold into the `part = -1` base during absorb. */
   val DefaultHorizon = 8
 
   private def absorb(horizonEpochs: Int)
-      : (DataFrame, DataFrame, Long) => DataFrame =
+      : (PartitionedArtifact.Standing, DataFrame, Long)
+        => Map[String, PartitionedArtifact.Delta] =
     (standing, batch, batchId) => {
       val shard = SketchOps.hllRho(batch.select(col("grp"), col("h")))
         .groupBy(col("grp"), col("bucket"))
@@ -53,26 +63,33 @@ object StandingHllRegisters {
         .select(col("grp"), lit(batchId).as("part"),
           col("bucket").cast("long").as("bucket"), col("m").cast("long").as("m"))
       val horizon = batchId - horizonEpochs
-      standing.unionByName(shard)
-        .withColumn("part",
-          when(col("part") < horizon, lit(-1L)).otherwise(col("part")))
-        .groupBy(col("grp"), col("part"), col("bucket"))
-        .agg(max(col("m")).as("m"))
+      // epochs below the horizon, decided on the PREDECESSOR partition
+      // list (plus this batch's own epoch under a negative horizon)
+      val aged = (standing.parts("registers") :+ batchId)
+        .filter(p => p >= 0L && p < horizon)
+      val rows =
+        if (aged.isEmpty) shard
+        else standing.readParts("registers", -1L +: aged)
+          .unionByName(shard)
+          .withColumn("part",
+            when(col("part") < horizon, lit(-1L)).otherwise(col("part")))
+          .groupBy(col("grp"), col("part"), col("bucket"))
+          .agg(max(col("m")).as("m"))
+      // the aged epochs are replaced by zero rows, i.e. dropped
+      val replaced =
+        if (aged.isEmpty) Seq(batchId) else (-1L +: aged :+ batchId).distinct
+      Map("registers" -> PartitionedArtifact.PartsDelta(rows, replaced))
     }
-
-  private[graft] def committedVersions(s: SparkSession,
-      root: String): Seq[Long] =
-    VersionedArtifact.committedVersions(s, root)
 
   /** the current registers (grp, part, bucket, m). */
   def readLatest(s: SparkSession, root: String): DataFrame =
-    VersionedArtifact.readLatest(s, root, RegSchema)
+    PartitionedArtifact.readLatestStanding(s, root, Specs).table("registers")
 
   /** one absorb step — the foreachBatch body, callable directly for
     * deterministic-replay tests. */
   def absorbBatch(obs: DataFrame, batchId: Long, root: String,
       horizonEpochs: Int = DefaultHorizon): Unit =
-    VersionedArtifact.absorbBatch(obs, batchId, root, RegSchema)(
+    PartitionedArtifact.absorbBatch(obs, batchId, root, Specs)(
       absorb(horizonEpochs))
 
   /** start the loop over a stream of (grp, h) observations — `h` the
@@ -83,7 +100,7 @@ object StandingHllRegisters {
     require(Set("grp", "h").subsetOf(obs.schema.fieldNames.toSet),
       s"observation stream must have columns (grp, h), got " +
         obs.schema.fieldNames.mkString(","))
-    VersionedArtifact.maintain(obs, root, checkpoint, RegSchema)(
+    PartitionedArtifact.maintain(obs, root, checkpoint, Specs)(
       absorb(horizonEpochs))
   }
 
@@ -97,28 +114,25 @@ object StandingHllRegisters {
     * epoch, not one epoch), and an epoch id already folded past the
     * horizon — or never absorbed — is silently absent from the
     * standing parts, so filtering it would be a no-op the caller
-    * mistakes for a completed purge. The presence probe collects the
-    * distinct live parts — bounded at horizonEpochs + 2 rows by the
-    * compaction invariant, a k-row driver step. */
+    * mistakes for a completed purge. The presence probe reads the
+    * version's manifest, so planning the estimate runs no job, and
+    * only the kept epochs' partitions are opened. */
   def estimates(s: SparkSession, root: String,
       dropEpochs: Seq[Long] = Seq.empty): DataFrame = {
     require(!dropEpochs.contains(-1L),
       "epoch -1 is the compacted base: epochs folded past the " +
         "retention horizon cannot be individually retracted (size " +
         "horizonEpochs to the deployment's purge window)")
-    val latest = readLatest(s, root)
-    if (dropEpochs.nonEmpty) {
-      val present = latest.select(col("part")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val missing = dropEpochs.filterNot(present)
-      require(missing.isEmpty,
-        s"epochs ${missing.mkString(",")} are not individually " +
-          "present in the standing registers (already compacted into " +
-          "the base, or never absorbed) — refusing a retraction that " +
-          "cannot be honored")
-    }
+    val latest = PartitionedArtifact.readLatestStanding(s, root, Specs)
+    val present = latest.parts("registers")
+    val missing = dropEpochs.filterNot(present.contains)
+    require(missing.isEmpty,
+      s"epochs ${missing.mkString(",")} are not individually " +
+        "present in the standing registers (already compacted into " +
+        "the base, or never absorbed) — refusing a retraction that " +
+        "cannot be honored")
     val regs = latest
-      .filter(!col("part").isin(dropEpochs: _*))
+      .readParts("registers", present.filterNot(dropEpochs.contains))
       .groupBy(col("grp"), col("bucket")).agg(max(col("m")).as("m"))
     SketchOps.hllEstimate(regs, Seq("grp"))
       .select(col("grp"), col("s_fp"), col("est_fp"))

@@ -150,10 +150,6 @@ object StandingIvf {
       }
     }
 
-  private[graft] def committedVersions(s: SparkSession,
-      root: String): Seq[Long] =
-    PartitionedArtifact.committedVersions(s, root)
-
   /** the current views: `cells` (label, sv, n) — q278's artifact
     * shape — and `vec_ids` membership. */
   def readLatest(s: SparkSession, root: String): Map[String, DataFrame] = {

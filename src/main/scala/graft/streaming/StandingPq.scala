@@ -28,7 +28,7 @@ import PartitionedArtifact.{ByPart, PartsDelta, TableSpec, Whole, WholeDelta}
   * rows (`_STATS`-checked); the live epoch count is bounded by the
   * same horizon fold as the band index
   * ([[PartitionedArtifact.epochFoldSet]], knob
-  * `GRAFT_PQ_MAX_EPOCHS` / `graft.pq.max.epochs`) — folded codes stay
+  * [[PartitionedArtifact.maxLiveEpochs]]) — folded codes stay
   * deletable because deletes probe by CONTENT, not epoch id.
   * Exactly-once, replay, bootstrap (from the q269 artifacts
   * `pq_codebook_base_m4` + `pq_codes_base_m4`) are
@@ -47,11 +47,6 @@ object StandingPq {
   private[graft] val Specs: Map[String, TableSpec] = Map(
     "codebook" -> TableSpec(CbSchema, Whole),
     "codes" -> TableSpec(CodeSchema, ByPart("epoch")))
-
-  private[graft] def maxLiveEpochs: Int =
-    math.max(2, sys.env.get("GRAFT_PQ_MAX_EPOCHS")
-      .orElse(sys.props.get("graft.pq.max.epochs"))
-      .map(_.toInt).getOrElse(64))
 
   private val absorb: (PartitionedArtifact.Standing, DataFrame, Long)
       => Map[String, PartitionedArtifact.Delta] =
@@ -76,8 +71,7 @@ object StandingPq {
           .join(dels, Seq("vec_id"), "left_semi")
           .select(col("epoch")).distinct()
           .collect().map(_.getLong(0)).toSeq.sorted
-      val fold = PartitionedArtifact.epochFoldSet(
-        standing.parts("codes"), maxLiveEpochs)
+      val fold = PartitionedArtifact.epochFoldSet(standing.parts("codes"))
       def surv(ps: Seq[Long]): DataFrame =
         (if (hasDels)
           standing.readParts("codes", ps).join(dels, Seq("vec_id"),
@@ -109,10 +103,6 @@ object StandingPq {
         "codebook" -> WholeDelta(cb),
         "codes" -> PartsDelta(rows, replacedEpochs))
     }
-
-  private[graft] def committedVersions(s: SparkSession,
-      root: String): Seq[Long] =
-    PartitionedArtifact.committedVersions(s, root)
 
   /** the current views: the frozen `codebook` and the `codes` table
     * (vec_id, sp, code) — q269's merged-artifact shape. */

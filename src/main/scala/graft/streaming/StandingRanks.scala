@@ -179,10 +179,6 @@ object StandingRanks {
       }
     }
 
-  private[graft] def committedVersions(s: SparkSession,
-      root: String): Seq[Long] =
-    PartitionedArtifact.committedVersions(s, root)
-
   /** the current (edges, ranks) views — bucket partitioning and the
     * push state are internal; `edges` is the as-delivered directed
     * pair set, `ranks` the normalized (node, r, push_rounds) vector

@@ -38,7 +38,7 @@ import PartitionedArtifact.{ByPart, PartsDelta, TableSpec}
   *    epoch-append like the band index's collision table: an absorb
   *    writes only its own delta rows (+gained / −lost), the read view
   *    sums per node, and the [[PartitionedArtifact.epochFoldSet]]
-  *    horizon (knob `GRAFT_TRI_MAX_EPOCHS` / `graft.tri.max.epochs`)
+  *    horizon (knob [[PartitionedArtifact.maxLiveEpochs]])
   *    folds aged epochs into the base so the partition count stays
   *    bounded on an unbounded stream.
   *
@@ -63,11 +63,6 @@ object StandingTriangles {
   private def nb: Int = graft.queries.PushRanks.numBuckets
   private def bucketOf(c: org.apache.spark.sql.Column) =
     graft.queries.PushRanks.bucketOf(c, nb)
-
-  private[graft] def maxLiveEpochs: Int =
-    math.max(2, sys.env.get("GRAFT_TRI_MAX_EPOCHS")
-      .orElse(sys.props.get("graft.tri.max.epochs"))
-      .map(_.toInt).getOrElse(64))
 
   /** canonical distinct (u < v) edge set of an event slice. */
   private def canon(df: DataFrame): DataFrame = df
@@ -169,8 +164,7 @@ object StandingTriangles {
             .filter(col("tri") =!= 0))
           .getOrElse(standing.readParts("counts", Seq.empty)
             .select(col("node"), col("tri")))
-        val fold = PartitionedArtifact.epochFoldSet(
-          standing.parts("counts"), maxLiveEpochs)
+        val fold = PartitionedArtifact.epochFoldSet(standing.parts("counts"))
         val foldTo = if (fold.isEmpty) Seq.empty
           else (fold :+ -1L).distinct
         val folded =
@@ -189,10 +183,6 @@ object StandingTriangles {
           "counts" -> PartsDelta(cntRows, cntReplaced))
       }
     }
-
-  private[graft] def committedVersions(s: SparkSession,
-      root: String): Seq[Long] =
-    PartitionedArtifact.committedVersions(s, root)
 
   /** the current views: `adj` (node, nb) and the summed per-node
     * `counts` (node, tri) — q272's artifact shapes. */

@@ -14,8 +14,9 @@ import graft.streaming.{PartitionedArtifact, StandingBandIndex, StandingGraph}
   * version): bootstrap the standing artifact, absorb one shard batch,
   * report bytes on disk per version plus the `_STATS` written-row
   * counters. "Whole-rewrite equivalent" = standing bytes + delta
-  * bytes — exactly what a whole-rewrite version
-  * (`VersionedArtifact.absorbBatch`'s layout) writes per batch. Run at sf10 for PERF.md:
+  * bytes — exactly what a whole-rewrite version (the round-12
+  * layout, one full copy of every table per version) writes per
+  * batch. Run at sf10 for PERF.md:
   * {{{ sbt "runMain graft.tools.DeltaWriteProbe /root/repo/testdata_sf10 /tmp/dwp" }}}
   */
 object DeltaWriteProbe {

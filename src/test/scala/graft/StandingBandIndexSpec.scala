@@ -263,7 +263,7 @@ class StandingBandIndexSpec extends SparkSpec {
   }
 
   test("epoch horizon fold bounds live partitions; folded docs stay deletable") {
-    System.setProperty("graft.band.max.epochs", "3")
+    System.setProperty("graft.artifact.max.epochs", "3")
     try {
       val root = tmp("sbi-fold")
       StandingBandIndex.bootstrap(b0.toDF("doc_id", "band_id", "bh"),
@@ -293,7 +293,7 @@ class StandingBandIndexSpec extends SparkSpec {
         scratch(surv.toDF("doc_id", "band_id", "bh")))
       assert(StandingBandIndex.readLatest(spark, root)("bands")
         .as[(Long, Long, String)].collect().toSet == surv.toSet)
-    } finally System.clearProperty("graft.band.max.epochs")
+    } finally System.clearProperty("graft.artifact.max.epochs")
   }
 
   test("bootstrap hands the batch-built index into the loop") {

@@ -27,6 +27,34 @@ class StandingGraphSpec extends SparkSpec {
     StandingGraph.readLatest(spark, root)("edges")
       .as[(Long, Long)].collect().toSet
 
+  private def adds(es: (Long, Long)*): DataFrame =
+    es.map { case (a, b) => ("add", a, b) }.toDF("kind", "src", "dst")
+
+  test("add-only stream: labels equal from-scratch CC over all arrived edges") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmp("sg-addonly")
+    val in = MemoryStream[(String, Long, Long)]
+    val q = StandingGraph.maintainStream(
+      in.toDF().toDF("kind", "src", "dst"), root, tmp("sg-addonly-ckpt"))
+    try {
+      // batch 1: two components; batch 2 BRIDGES them and plants a
+      // fresh one; batch 3 chains the fresh one in — the cross-batch
+      // interactions a single-batch test can't see
+      in.addData(("add", 1L, 2L), ("add", 10L, 11L)); q.processAllAvailable()
+      in.addData(("add", 2L, 10L), ("add", 100L, 101L))
+      q.processAllAvailable()
+      assert(labels(root) ==
+        Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L,
+          100L -> 100L, 101L -> 100L))
+      in.addData(("add", 101L, 11L)); q.processAllAvailable()
+    } finally q.stop()
+    val all = Seq((1L, 2L), (10L, 11L), (2L, 10L), (100L, 101L),
+      (101L, 11L)).toDF("src", "dst")
+    val scratch = PipelineOps.connectedComponents(all)
+      .as[(Long, Long)].collect().toMap
+    assert(labels(root) == scratch)
+  }
+
   test("CDC stream: deletes split, adds re-bridge and resurrect, state tracks truth") {
     implicit val sqlCtx = spark.sqlContext
     val root = tmp("sg-state")
@@ -87,7 +115,7 @@ class StandingGraphSpec extends SparkSpec {
       Seq(("del", 11L, -1L)).toDF("kind", "src", "dst"), 1L, root)
     assert(labels(root) == Map(1L -> 1L, 2L -> 1L, 10L -> 10L))
     assert(edges(root) == Set((1L, 2L)))
-    assert(StandingGraph.committedVersions(spark, root) == Seq(0L, 1L))
+    assert(PartitionedArtifact.committedVersions(spark, root) == Seq(0L, 1L))
   }
 
   test("re-adding standing edges never accretes duplicates, in both gate regimes") {
@@ -406,5 +434,113 @@ class StandingGraphSpec extends SparkSpec {
     } finally q.stop()
     assert(labels(root) == Map(1L -> 1L, 2L -> 1L, 11L -> 1L))
     assert(edges(root) == Set((1L, 2L), (2L, 11L)))
+    // a live root refuses a second bootstrap and keeps its state
+    intercept[IllegalArgumentException] {
+      StandingGraph.bootstrap(base,
+        PipelineOps.connectedComponents(base), root)
+    }
+    assert(labels(root) == Map(1L -> 1L, 2L -> 1L, 11L -> 1L))
+  }
+
+  test("a reset checkpoint over a retained root fails loudly at batch 0") {
+    // the committed-version no-op rule would otherwise SILENTLY skip
+    // every batch up to the old high-water mark — the operator must
+    // get an error, not discarded data
+    val root = tmp("sg-reset")
+    StandingGraph.absorbBatch(adds((1L, 2L)), 0L, root)
+    StandingGraph.absorbBatch(adds((2L, 3L)), 1L, root)
+    val e = intercept[IllegalStateException] {
+      StandingGraph.absorbBatch(adds((9L, 10L)), 0L, root)
+    }
+    assert(e.getMessage.contains("checkpoint"))
+    // a legitimate batch-0 replay (only v=0, or v=0 + bootstrap) is
+    // NOT a reset and must stay a quiet no-op
+    val root2 = tmp("sg-replay0")
+    StandingGraph.absorbBatch(adds((1L, 2L)), 0L, root2)
+    StandingGraph.absorbBatch(adds((5L, 6L)), 0L, root2)
+    assert(labels(root2) == Map(1L -> 1L, 2L -> 1L))
+  }
+
+  test("a swapped root or foreign checkpoint fails loudly at a run's FIRST batch") {
+    implicit val sqlCtx = spark.sqlContext
+    // loop 1 advances the checkpoint past batch 1 against root1
+    val ckpt = tmp("sg-swap-ckpt")
+    val root1 = tmp("sg-swap-root1")
+    val in = MemoryStream[(String, Long, Long)]
+    val q1 = StandingGraph.maintainStream(
+      in.toDF().toDF("kind", "src", "dst"), root1, ckpt)
+    try {
+      in.addData(("add", 1L, 2L)); q1.processAllAvailable()
+      in.addData(("add", 2L, 3L)); q1.processAllAvailable()
+    } finally q1.stop()
+    // swap a FRESH root under the live checkpoint: the restart's
+    // first batch id (2) is past the fresh root's high-water mark
+    // (none), so batches 0-1's state is missing — the batch-0 guard
+    // can't see this, the first-batch guard must
+    val root2 = tmp("sg-swap-root2")
+    in.addData(("add", 3L, 4L))
+    val q2 = StandingGraph.maintainStream(
+      in.toDF().toDF("kind", "src", "dst"), root2, ckpt)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q2.processAllAvailable()
+    }
+    q2.stop()
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("high-water mark")))
+    // a wrong-but-nonzero STALE checkpoint (first batch at or below
+    // the mark, but not a legal replay of it) fails too — under the
+    // committed-version no-op rule its rows would silently vanish
+    val root3 = tmp("sg-stale-root")
+    (0L to 4L).foreach { i =>
+      StandingGraph.absorbBatch(adds((i * 10, i * 10 + 1)), i, root3)
+    }
+    val noAbsorb: (PartitionedArtifact.Standing, DataFrame, Long)
+        => Map[String, PartitionedArtifact.Delta] =
+      (_, _, _) => fail("the batch must not reach its absorb")
+    def firstBatch(id: Long)(absorb: (PartitionedArtifact.Standing,
+        DataFrame, Long) => Map[String, PartitionedArtifact.Delta]): Unit =
+      PartitionedArtifact.absorbBatch(adds((9L, 9L)), id, root3,
+        StandingGraph.Specs, firstOfRun = true)(absorb)
+    val e2 = intercept[IllegalStateException](firstBatch(2L)(noAbsorb))
+    assert(e2.getMessage.contains("high-water mark"))
+    // the two LEGAL first batches: a replay of the mark itself (4)
+    // no-ops without reaching the absorb; the next id (5) absorbs
+    firstBatch(4L)(noAbsorb)
+    firstBatch(5L)((standing, _, _) => Map(
+      "edges" -> PartitionedArtifact.PartsDelta(
+        standing.readParts("edges", Seq.empty), Seq.empty),
+      "labels" -> PartitionedArtifact.WholeDelta(standing.table("labels"))))
+    assert(PartitionedArtifact.committedVersions(spark, root3).last == 5L)
+    StandingGraph.absorbBatch(adds((50L, 51L)), 6L, root3)
+    assert(labels(root3).contains(50L))
+  }
+
+  test("old versions are pruned to the keep window, newest state intact") {
+    // lease 0: a dereferenced directory is deleted by the first prune
+    // that finds it outside the keep window
+    System.setProperty("graft.artifact.prune.lease.ms", "0")
+    try {
+      val root = tmp("sg-prune")
+      // component {10, 11} is bootstrapped and never touched again
+      val base = Seq((1L, 2L), (10L, 11L)).toDF("src", "dst")
+      StandingGraph.bootstrap(base,
+        PipelineOps.connectedComponents(base), root)
+      // each batch REPLACES component {1, 2}'s partition, so every
+      // older version directory is dereferenced once it leaves the
+      // keep window
+      (0L until 6L).foreach { i =>
+        StandingGraph.absorbBatch(
+          Seq(("del", 2L, -1L), ("add", 1L, 2L))
+            .toDF("kind", "src", "dst"), i, root)
+      }
+      // keepBehind=2 keeps {3, 4, 5}; the bootstrap directory lives
+      // on because component {10, 11}'s partition still points into it
+      val vs = PartitionedArtifact.committedVersions(spark, root)
+      assert(vs == Seq(-1L, 3L, 4L, 5L), vs.toString)
+      assert(edges(root) == Set((1L, 2L), (10L, 11L)))
+      assert(labels(root) == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L))
+    } finally System.clearProperty("graft.artifact.prune.lease.ms")
   }
 }

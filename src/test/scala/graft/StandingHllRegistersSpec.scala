@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 
+import graft.functions.PortableHll
 import graft.queries.SketchOps
 import graft.streaming.StandingHllRegisters
 
@@ -21,9 +23,12 @@ class StandingHllRegistersSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def obs(grp: String, members: Seq[String]): DataFrame =
-    members.map((grp, _)).toDF("grp", "member")
+  private def obsOf(rows: Seq[(String, String)]): DataFrame =
+    rows.toDF("grp", "member")
       .withColumn("h", md5(col("member"))).drop("member")
+
+  private def obs(grp: String, members: Seq[String]): DataFrame =
+    obsOf(members.map((grp, _)))
 
   /** batch-side expected registers for one epoch's observations. */
   private def epochRegs(shard: DataFrame, part: Long): DataFrame =
@@ -70,11 +75,11 @@ class StandingHllRegistersSpec extends SparkSpec {
     StandingHllRegisters.absorbBatch(obs("a", Seq("w1")), 1L, root)
     assert(regSet(StandingHllRegisters.readLatest(spark, root)) ==
       committed)
-    // crash mid-write (no _SUCCESS): the replay must read v=0 — were
+    // crash mid-write (no _COMMIT): the replay must read v=0 — were
     // the debris consulted, y1's register contribution would survive;
     // the law demands exactly merge(v0, replayed batch)
     java.nio.file.Files.delete(
-      java.nio.file.Paths.get(root, "v=1", "_SUCCESS"))
+      java.nio.file.Paths.get(root, "v=1", "_COMMIT"))
     StandingHllRegisters.absorbBatch(obs("a", Seq("z1", "z2")), 1L, root)
     val expected = epochRegs(obs("a", Seq("x1", "x2")), 0L)
       .union(epochRegs(obs("a", Seq("z1", "z2")), 1L))
@@ -143,5 +148,116 @@ class StandingHllRegistersSpec extends SparkSpec {
       .select(col("grp"), col("s_fp"), col("est_fp"))
       .as[(String, Long, Long)].collect().toSet
     assert(got == expected)
+  }
+
+  test("planning an estimate with dropped epochs runs no job") {
+    val root = tmp("hll-jobs")
+    (0 to 2).foreach { i =>
+      StandingHllRegisters.absorbBatch(obs("a", Seq(s"x$i", s"y$i")),
+        i.toLong, root)
+    }
+    // the presence probe reads the manifest and every read carries the
+    // declared schema: the estimate itself is the first job
+    val (est, jobs) = JobLog.during(spark)(
+      StandingHllRegisters.estimates(spark, root, dropEpochs = Seq(1L)))
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert(est.count() == 1L)
+  }
+
+  test("property: random batches, replays and crash debris keep the horizon law") {
+    // 20 generated runs of at most 6 batches each. After every step
+    // the standing registers must equal the epoch derivation of what
+    // each committed batch absorbed, folded under the horizon law
+    // (epochs below newest - horizonEpochs live in part -1), and the
+    // estimates must equal hllEstimate over those registers; each
+    // run's final state also retracts one live epoch at read time.
+    val member = for (g <- Gen.oneOf("a", "b", "c"); m <- Gen.choose(0, 60))
+      yield (g, s"m$m")
+    val batch = Gen.choose(0, 8).flatMap(Gen.listOfN(_, member))
+    // after an absorb: 0 = nothing; 1 = replay the committed id with
+    // other rows (a no-op); 2 = crash debris — the newest version
+    // loses its _COMMIT and the id is absorbed again with other rows
+    val step = for (rows <- batch; act <- Gen.frequency(2 -> 0, 1 -> 1,
+      1 -> 2); other <- batch) yield (rows, act, other)
+    val run = for (h <- Gen.choose(-1, 3); n <- Gen.choose(1, 6);
+      steps <- Gen.listOfN(n, step)) yield (h, steps)
+    val runs = Gen.listOfN(20, run)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(7L))
+    val pick = new scala.util.Random(7L)
+
+    // the batch epoch derivation on the driver (PortableHll is the
+    // JVM twin of hllRho, pinned by SketchSpec)
+    def model(absorbed: collection.Map[Long, Seq[(String, String)]],
+        newest: Long, horizon: Int): Set[(String, Long, Long, Long)] =
+      absorbed.toSeq.flatMap { case (id, rows) =>
+        val part = if (id < newest - horizon) -1L else id
+        rows.map { case (g, m) =>
+          val (b, rho) = PortableHll.bucketRho(m)
+          ((g, part, b.toLong), rho.toLong)
+        }
+      }.groupBy(_._1).map { case ((g, p, b), ms) =>
+        (g, p, b, ms.map(_._2).max) }.toSet
+    // hllEstimate over several expected register sets in one job,
+    // keyed by the set's index
+    def estimatesOf(regs: Seq[Set[(String, Long, Long, Long)]])
+        : Map[Int, Set[(String, Long, Long)]] = {
+      val byK = SketchOps.hllEstimate(
+          regs.zipWithIndex.flatMap { case (rs, k) =>
+            rs.toSeq.map { case (g, _, b, m) => (k, g, b, m) } }
+            .toDF("k", "grp", "bucket", "m")
+            .groupBy(col("k"), col("grp"), col("bucket"))
+            .agg(max(col("m")).as("m")),
+          Seq("k", "grp"))
+        .select(col("k"), col("grp"), col("s_fp"), col("est_fp"))
+        .as[(Int, String, Long, Long)].collect().toSeq
+        .groupBy(_._1)
+      regs.indices.map(k => k -> byK.getOrElse(k, Seq.empty)
+        .map { case (_, g, sfp, est) => (g, sfp, est) }.toSet).toMap
+    }
+    def estimated(root: String, drop: Seq[Long]): Set[(String, Long, Long)] =
+      StandingHllRegisters.estimates(spark, root, drop)
+        .as[(String, Long, Long)].collect().toSet
+
+    runs.zipWithIndex.foreach { case ((horizon, steps), r) =>
+      val root = tmp(s"hll-prop$r")
+      val absorbed = collection.mutable.Map.empty[Long, Seq[(String, String)]]
+      // (context, expected registers, estimates read) per check
+      val checks = collection.mutable.ArrayBuffer.empty[
+        (String, Set[(String, Long, Long, Long)], Set[(String, Long, Long)])]
+      def absorb(id: Long, rows: Seq[(String, String)]): Unit =
+        StandingHllRegisters.absorbBatch(obsOf(rows), id, root, horizon)
+      def check(newest: Long, what: String): Unit = {
+        val ctx = s"run $r (horizon $horizon) after $what"
+        val expected = model(absorbed, newest, horizon)
+        assert(regSet(StandingHllRegisters.readLatest(spark, root)) ==
+          expected, ctx)
+        checks += ((ctx, expected, estimated(root, Seq.empty)))
+      }
+      steps.zipWithIndex.foreach { case ((rows, act, other), i) =>
+        val id = i.toLong
+        absorb(id, rows); absorbed(id) = rows
+        check(id, s"batch $id")
+        if (act == 1) {
+          absorb(id, other)
+          check(id, s"replay of $id")
+        } else if (act == 2) {
+          java.nio.file.Files.delete(
+            java.nio.file.Paths.get(root, s"v=$id", "_COMMIT"))
+          absorb(id, other); absorbed(id) = other
+          check(id, s"crash debris of $id")
+        }
+      }
+      // the final state retracts one live epoch at read time
+      val (lastCtx, last, _) = checks.last
+      val live = last.map(_._2).filter(_ >= 0L).toSeq.sorted
+      if (live.nonEmpty) {
+        val drop = live(pick.nextInt(live.size))
+        checks += ((s"$lastCtx, epoch $drop dropped",
+          last.filterNot(_._2 == drop), estimated(root, Seq(drop))))
+      }
+      val want = estimatesOf(checks.map(_._2).toSeq)
+      checks.zipWithIndex.foreach { case ((ctx, _, got), k) =>
+        assert(got == want(k), ctx) }
+    }
   }
 }

@@ -1,17 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.queries.PipelineOps
-import graft.streaming.StandingLabels
+import graft.streaming.{PartitionedArtifact, StandingGraph}
 
-/** The foreachBatch maintenance loop for standing component labels:
-  * stream-maintained state must equal a from-scratch solve over every
-  * edge that ever arrived (the q263/q279 law, driven by micro-batches
-  * instead of explicit shards), batch re-runs must be idempotent (the
-  * at-least-once contract of foreachBatch), a batch-built labeling
-  * must hand off into the loop, and old versions must be pruned.
+/** The component labels a standing graph keeps under add-only input:
+  * batch re-runs must be idempotent (the at-least-once contract of
+  * foreachBatch) with crash debris recomputed from the predecessor,
+  * and a batch-built labeling must hand off into the loop.
   */
 class StandingLabelsSpec extends SparkSpec {
   import spark.implicits._
@@ -20,161 +18,53 @@ class StandingLabelsSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def labels(root: String): Map[Long, Long] =
-    StandingLabels.readLatest(spark, root).as[(Long, Long)]
-      .collect().toMap
-
-  test("stream-maintained labels equal from-scratch CC over all arrived edges") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = tmp("sl-state")
-    val in = MemoryStream[(Long, Long)]
-    val q = StandingLabels.maintainComponentsStream(
-      in.toDF().toDF("src", "dst"), root, tmp("sl-ckpt"))
-    try {
-      // batch 1: two components; batch 2 BRIDGES them and plants a
-      // fresh one; batch 3 chains the fresh one in — the cross-batch
-      // interactions a single-batch test can't see
-      in.addData((1L, 2L), (10L, 11L)); q.processAllAvailable()
-      in.addData((2L, 10L), (100L, 101L)); q.processAllAvailable()
-      assert(labels(root) ==
-        Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L,
-          100L -> 100L, 101L -> 100L))
-      in.addData((101L, 11L)); q.processAllAvailable()
-    } finally q.stop()
-    val all = Seq((1L, 2L), (10L, 11L), (2L, 10L), (100L, 101L),
-      (101L, 11L)).toDF("src", "dst")
-    val scratch = PipelineOps.connectedComponents(all)
+    StandingGraph.readLatest(spark, root)("labels")
       .as[(Long, Long)].collect().toMap
-    assert(labels(root) == scratch)
-  }
+
+  private def adds(es: (Long, Long)*): DataFrame =
+    es.map { case (a, b) => ("add", a, b) }.toDF("kind", "src", "dst")
 
   test("replay: committed version is a reader-safe no-op; crash debris recomputes from the predecessor") {
     val root = tmp("sl-replay")
-    StandingLabels.absorbBatch(
-      Seq((1L, 2L), (10L, 11L)).toDF("src", "dst"), 0L, root)
-    StandingLabels.absorbBatch(
-      Seq((2L, 10L)).toDF("src", "dst"), 1L, root)
+    StandingGraph.absorbBatch(adds((1L, 2L), (10L, 11L)), 0L, root)
+    StandingGraph.absorbBatch(adds((2L, 10L)), 1L, root)
     val after = labels(root)
     assert(after == Map(1L -> 1L, 2L -> 1L, 10L -> 1L, 11L -> 1L))
     // replay of a COMMITTED batch must not touch the version — even
     // with (impossible in Structured Streaming) different content:
     // a concurrent reader may be mid-scan over v=1's files
-    StandingLabels.absorbBatch(
-      Seq((2L, 10L), (20L, 21L)).toDF("src", "dst"), 1L, root)
+    StandingGraph.absorbBatch(adds((2L, 10L), (20L, 21L)), 1L, root)
     assert(labels(root) == after)
-    // crash mid-write: v=1 exists but its _SUCCESS never landed —
+    // crash mid-write: v=1 exists but its _COMMIT never landed —
     // nothing can have read it, so the replay must recompute from
     // v=0 (never consult the debris) and overwrite whole
     java.nio.file.Files.delete(
-      java.nio.file.Paths.get(root, "v=1", "_SUCCESS"))
-    StandingLabels.absorbBatch(
-      Seq((2L, 10L), (20L, 21L)).toDF("src", "dst"), 1L, root)
+      java.nio.file.Paths.get(root, "v=1", "_COMMIT"))
+    StandingGraph.absorbBatch(adds((2L, 10L), (20L, 21L)), 1L, root)
     assert(labels(root) == after ++ Map(20L -> 20L, 21L -> 20L))
-    assert(StandingLabels.committedVersions(spark, root) == Seq(0L, 1L))
+    assert(PartitionedArtifact.committedVersions(spark, root) == Seq(0L, 1L))
   }
 
   test("bootstrap hands a batch-built labeling into the loop; refuses a live root") {
     implicit val sqlCtx = spark.sqlContext
     val root = tmp("sl-boot")
     val base = Seq((1L, 2L), (10L, 11L)).toDF("src", "dst")
-    StandingLabels.bootstrap(PipelineOps.connectedComponents(base), root)
-    val in = MemoryStream[(Long, Long)]
-    val q = StandingLabels.maintainComponentsStream(
-      in.toDF().toDF("src", "dst"), root, tmp("sl-boot-ckpt"))
+    StandingGraph.bootstrap(base,
+      PipelineOps.connectedComponents(base), root)
+    val in = MemoryStream[(String, Long, Long)]
+    val q = StandingGraph.maintainStream(
+      in.toDF().toDF("kind", "src", "dst"), root, tmp("sl-boot-ckpt"))
     try {
-      in.addData((2L, 10L)); q.processAllAvailable()
+      in.addData(("add", 2L, 10L)); q.processAllAvailable()
     } finally q.stop()
     val scratch = PipelineOps.connectedComponents(
         base.union(Seq((2L, 10L)).toDF("src", "dst")))
       .as[(Long, Long)].collect().toMap
     assert(labels(root) == scratch)
     intercept[IllegalArgumentException] {
-      StandingLabels.bootstrap(
+      StandingGraph.bootstrap(base,
         PipelineOps.connectedComponents(base), root)
     }
-  }
-
-  test("a reset checkpoint over a retained root fails loudly at batch 0") {
-    // the committed-version no-op rule would otherwise SILENTLY skip
-    // every batch up to the old high-water mark — the operator must
-    // get an error, not discarded data
-    val root = tmp("sl-reset")
-    StandingLabels.absorbBatch(Seq((1L, 2L)).toDF("src", "dst"), 0L, root)
-    StandingLabels.absorbBatch(Seq((2L, 3L)).toDF("src", "dst"), 1L, root)
-    val e = intercept[IllegalStateException] {
-      StandingLabels.absorbBatch(
-        Seq((9L, 10L)).toDF("src", "dst"), 0L, root)
-    }
-    assert(e.getMessage.contains("checkpoint"))
-    // a legitimate batch-0 replay (only v=0, or v=0 + bootstrap) is
-    // NOT a reset and must stay a quiet no-op
-    val root2 = tmp("sl-replay0")
-    StandingLabels.absorbBatch(Seq((1L, 2L)).toDF("src", "dst"), 0L, root2)
-    StandingLabels.absorbBatch(Seq((5L, 6L)).toDF("src", "dst"), 0L, root2)
-    assert(labels(root2) == Map(1L -> 1L, 2L -> 1L))
-  }
-
-  test("a swapped root or foreign checkpoint fails loudly at a run's FIRST batch") {
-    implicit val sqlCtx = spark.sqlContext
-    // loop 1 advances the checkpoint past batch 1 against root1
-    val ckpt = tmp("sl-swap-ckpt")
-    val root1 = tmp("sl-swap-root1")
-    val in = MemoryStream[(Long, Long)]
-    val q1 = StandingLabels.maintainComponentsStream(
-      in.toDF().toDF("src", "dst"), root1, ckpt)
-    try {
-      in.addData((1L, 2L)); q1.processAllAvailable()
-      in.addData((2L, 3L)); q1.processAllAvailable()
-    } finally q1.stop()
-    // swap a FRESH root under the live checkpoint: the restart's
-    // first batch id (2) is past the fresh root's high-water mark
-    // (none), so batches 0-1's state is missing — the batch-0 guard
-    // can't see this, the first-batch guard must
-    val root2 = tmp("sl-swap-root2")
-    in.addData((3L, 4L))
-    val q2 = StandingLabels.maintainComponentsStream(
-      in.toDF().toDF("src", "dst"), root2, ckpt)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
-    }
-    q2.stop()
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("high-water mark")))
-    // a wrong-but-nonzero STALE checkpoint (first batch at or below
-    // the mark, but not a legal replay of it) fails too — under the
-    // committed-version no-op rule its rows would silently vanish
-    val root3 = tmp("sl-stale-root")
-    (0L to 4L).foreach { i =>
-      StandingLabels.absorbBatch(
-        Seq((i * 10, i * 10 + 1)).toDF("src", "dst"), i, root3)
-    }
-    val e2 = intercept[IllegalStateException] {
-      graft.streaming.VersionedArtifact.absorbBatch(
-        Seq((9L, 9L)).toDF("src", "dst"), 2L, root3,
-        StandingLabels.readLatest(spark, root3).schema,
-        firstOfRun = true)((_, b, _) => b)
-    }
-    assert(e2.getMessage.contains("high-water mark"))
-    // the two LEGAL first batches: a replay of the mark itself (4)
-    // no-ops; the next id (5) absorbs
-    graft.streaming.VersionedArtifact.absorbBatch(
-      Seq((9L, 9L)).toDF("src", "dst"), 4L, root3,
-      StandingLabels.readLatest(spark, root3).schema,
-      firstOfRun = true)((standing, _, _) => standing)
-    StandingLabels.absorbBatch(
-      Seq((50L, 51L)).toDF("src", "dst"), 5L, root3)
-    assert(labels(root3).contains(50L))
-  }
-
-  test("old versions are pruned to the keep window, newest state intact") {
-    val root = tmp("sl-prune")
-    (0L until 6L).foreach { i =>
-      StandingLabels.absorbBatch(
-        Seq((i * 10, i * 10 + 1)).toDF("src", "dst"), i, root)
-    }
-    val vs = StandingLabels.committedVersions(spark, root)
-    assert(vs == Seq(3L, 4L, 5L), vs.toString)
-    assert(labels(root).size == 12) // all 6 shards' nodes survive
+    assert(labels(root) == scratch)
   }
 }

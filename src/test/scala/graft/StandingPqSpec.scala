@@ -96,7 +96,7 @@ class StandingPqSpec extends SparkSpec {
   }
 
   test("epoch horizon fold bounds live partitions; folded codes stay deletable") {
-    System.setProperty("graft.pq.max.epochs", "3")
+    System.setProperty("graft.artifact.max.epochs", "3")
     try {
       val root = tmp("spq-fold")
       StandingPq.bootstrap(cbDf,
@@ -116,6 +116,6 @@ class StandingPqSpec extends SparkSpec {
           .toDF("kind", "vec_id", "sp", "x"), batches.size.toLong, root)
       assert(codes(root) ==
         scratch(b0 ++ batches.flatten.filterNot(_._1 == 10L)))
-    } finally System.clearProperty("graft.pq.max.epochs")
+    } finally System.clearProperty("graft.artifact.max.epochs")
   }
 }

@@ -111,7 +111,7 @@ class StandingTrianglesSpec extends SparkSpec {
   }
 
   test("counts epoch horizon folds; totals intact through the fold") {
-    System.setProperty("graft.tri.max.epochs", "3")
+    System.setProperty("graft.artifact.max.epochs", "3")
     try {
       val root = tmp("str-fold")
       StandingTriangles.bootstrap(
@@ -130,7 +130,7 @@ class StandingTrianglesSpec extends SparkSpec {
       assert(live.size <= 3, s"live epochs $live")
       val all = b0 ++ apexes.flatMap(a => Seq((1L, a), (2L, a)))
       assert(counts(root) == scratch(all))
-    } finally System.clearProperty("graft.tri.max.epochs")
+    } finally System.clearProperty("graft.artifact.max.epochs")
   }
 
   test("on the real corpus: bootstrap + shard absorb equals the full recount") {
