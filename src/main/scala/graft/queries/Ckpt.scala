@@ -22,6 +22,8 @@ import org.apache.spark.sql.DataFrame
   * noise against the |E|-row round work the loops do anyway. Files
   * are NOT auto-deleted on context stop (that is the point); the
   * deployment owns retention of the checkpoint tree.
+  *
+  * The loops' static planning scope lives in [[Fixpoint]].
   */
 object Ckpt {
 
@@ -124,45 +126,4 @@ object Ckpt {
     }
 
   private val lock = new Object
-
-  /** Run `body` (a fixpoint loop's rounds) under STATIC planning:
-    * adaptive execution off and `spark.sql.shuffle.partitions` pinned
-    * to `partitions`. Restores both confs afterwards.
-    *
-    * Why (optimization round 14, guide §1/§2): a fixpoint round's
-    * plan is already fully pinned — edge list pre-partitioned and
-    * lineage-cut, build sides hinted, state vectors |V|-row — so AQE
-    * contributes nothing to the SHAPE, but it turns every Exchange
-    * into its own scheduler job (a materialization barrier plus a
-    * driver re-optimization). Measured at sf0.1: q260's 57 rounds ran
-    * 353 jobs / 507 tasks under AQE (~6 jobs/round, ~56 ms of pure
-    * driver latency each) and the same trajectory runs 1 job/round
-    * statically. At 100 TB the per-round data work dwarfs this
-    * latency; locally it IS the query. `partitions` must be derived
-    * from the DATA (the caller passes the edge list's own partition
-    * count, which transactionGraph/symByU size by input rows), so the
-    * setting scales exactly like the layout it matches — NOT a
-    * local-core-count constant. */
-  def staticLoopScope[T](df: DataFrame, partitions: Int)(body: => T): T = {
-    val conf = df.sparkSession.conf
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    // constraint propagation re-derives isNotNull/equality
-    // constraint sets over every join per PLANNING pass — pure
-    // driver CPU that a loop pays once per round on plans whose
-    // shape is already pinned; off for the loop body, like the
-    // long-standing advice for iterative ML plans (SPARK-19846's
-    // knob exists for exactly this).
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val (aqe0, sp0, cp0) =
-      (conf.get(aqeKey), conf.get(spKey), conf.get(cpKey))
-    conf.set(aqeKey, "false")
-    conf.set(spKey, math.max(1, partitions).toString)
-    conf.set(cpKey, "false")
-    try body
-    finally {
-      conf.set(aqeKey, aqe0); conf.set(spKey, sp0)
-      conf.set(cpKey, cp0)
-    }
-  }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import Q._
 
@@ -650,22 +651,15 @@ object GraphOps {
     // instead of three. The exact |newly| from the stat also gates
     // the build-side broadcast DETERMINISTICALLY (the old shape left
     // it to AQE's runtime estimate); past the gate the join falls
-    // back to the shuffled path. Trajectory identical: same
-    // synchronous peel arithmetic, same stop rule.
+    // back to the shuffled path.
     def belowK(d: DataFrame): Long = d
       .agg(coalesce(sum(when(col("deg") < k, 1L).otherwise(0L)),
         lit(0L))).head().getLong(0)
-    var deg = Ckpt.cutStatsLazy(sym.groupBy(col("u").as("node"))
+    val deg = Ckpt.cutStatsLazy(sym.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg")))
-    var below = belowK(deg)
-    var rounds = 0
-    // PIPELINED planning (round 14, the pagerankFixpoint discipline):
-    // the below-k stat runs on a background thread while the loop
-    // thread speculatively constructs the next peel's plan under the
-    // CURRENT broadcast regime; a regime flip (the count crossing
-    // lpaBroadcastMaxRows) discards the speculative plan and replans
-    // with the exact gate, so every EXECUTED round gates on its exact
-    // count, as before. Arithmetic untouched.
+    val below = belowK(deg)
+    // the regime is the build-side broadcast gate on the exact count
+    val bcast = (n: Long) => n <= lpaBroadcastMaxRows
     def roundPlan(d: DataFrame, bc: Boolean): DataFrame = {
       val newly0 = d.filter(col("deg") < k).select(col("node"))
       val newly = if (bc) broadcast(newly0) else newly0
@@ -679,24 +673,14 @@ object GraphOps {
         .select(col("node"),
           (col("deg") - coalesce(col("d"), lit(0L))).as("deg")))
     }
-    Ckpt.staticLoopScope(sym, sym.rdd.getNumPartitions) {
-    var bc = below <= lpaBroadcastMaxRows
-    var next = if (below > 0L) roundPlan(deg, bc) else deg
-    while (below > 0L && rounds < maxIters) {
-      val nextNow = next
-      val belowF = java.util.concurrent.CompletableFuture.supplyAsync(
-        () => belowK(nextNow))
-      val spec = roundPlan(nextNow, bc) // overlapped with the stat job
-      below = belowF.get()
-      deg = nextNow; rounds += 1
-      val bcNew = below <= lpaBroadcastMaxRows
-      next = if (bcNew == bc) spec
-        else { bc = bcNew; roundPlan(deg, bc) }
-    }
-    }
-    require(below == 0L,
-      s"k-core did not converge in $maxIters peel rounds")
-    (deg, rounds)
+    if (below == 0L) (deg, 0)
+    else Fixpoint.run("kcore", castToImpl(sym.sparkSession),
+        sym.rdd.getNumPartitions, maxIters, overlap = true)(
+        bcast(below), roundPlan(deg, bcast(below)))(belowK)(
+      done = _ == 0L,
+      regime = (_, n) => bcast(n),
+      step = roundPlan,
+      unconverged = _ => s"k-core did not converge in $maxIters peel rounds")
   }
 
   /** [[kcore]]'s production form: identical signature and output
@@ -881,12 +865,11 @@ object GraphOps {
   }
 
   /** Run-to-FIXPOINT synchronous label propagation: rounds of
-    * [[lpaRound]] until no node changes label, with the
-    * connectedComponents loop discipline (eager checkpoint per round;
-    * the changed-label count rides the materialization the next round
-    * needs). Returns (labels, rounds run). Synchronous LPA can
-    * 2-CYCLE on bipartite-ish structure (a star flips center↔leaves
-    * forever), so non-convergence inside maxIters raises — silently
+    * [[lpaRound]] until no node changes label, on [[Fixpoint]] (the
+    * changed-label count is the round's one job). Returns (labels,
+    * rounds run). Synchronous LPA can 2-CYCLE on bipartite-ish
+    * structure (a star flips center↔leaves forever), so
+    * non-convergence inside maxIters raises — silently
     * returning mid-oscillation labels would be a wrong answer, and
     * the caller's recourse (asynchronous/stabilized update order) is
     * a semantic choice they must make explicitly. The unrolled
@@ -915,14 +898,12 @@ object GraphOps {
     // materializes its edge copy even when `materialize = false`,
     // because the layout IS the point — one |E| shuffle buys
     // exchange-free edge sides for every later round.
-    var bcast = seeds.count() <= lpaBroadcastMaxRows
-    var sym =
+    val bcast = seeds.count() <= lpaBroadcastMaxRows
+    val sym =
       if (!bcast) Ckpt.cutPartitioned(sym0.repartition(col("dst")))
       else if (materialize) Ckpt.cut(sym0, true)
       else sym0
-    var labels = Ckpt.cut(seeds, true)
-    var changed = 1L
-    var rounds = 0
+    val seeded = Ckpt.cut(seeds, true)
     // FUSED round (round 14): the round's output is cut LAZILY and a
     // single aggregation job — left join to the previous labels —
     // materializes the checkpoint while computing BOTH the
@@ -930,45 +911,32 @@ object GraphOps {
     // inner-join count: unmatched rows contribute null ≠ comparisons
     // = 0) and the label-vector size the broadcast gate re-checks.
     // The old shape paid three jobs per round (eager cut, changed
-    // join, gate count). Rounds run under static planning
-    // (Ckpt.staticLoopScope) with the edge view's own partition count.
-    // PIPELINED planning (round 14, the pagerankFixpoint discipline):
-    // the stats job runs on a background thread while the loop thread
-    // speculatively constructs the next round's plan — valid because
-    // the plan depends only on the round's lazily-cut LEAF and the
-    // CURRENT broadcast regime; the rare gate demotion discards the
-    // speculative plan and rebuilds under the co-partitioned layout,
-    // so the executed trajectory is unchanged in every case.
-    def roundPlan(s0: DataFrame, l0: DataFrame, bc: Boolean): DataFrame =
-      Ckpt.cut(lpaRound(s0, l0, bc), false)
-    Ckpt.staticLoopScope(sym, sym.rdd.getNumPartitions) {
-    var next = roundPlan(sym, labels, bcast)
-    while (changed > 0 && rounds < maxIters) {
-      val (nextNow, labelsNow) = (next, labels)
-      val statsF = java.util.concurrent.CompletableFuture.supplyAsync(
-        () => nextNow
-          .join(labelsNow.withColumnRenamed("code", "old"), Seq("node"),
+    // join, gate count).
+    final case class Round(sym: DataFrame, bcast: Boolean,
+        prev: DataFrame, labels: DataFrame)
+    def round(sym: DataFrame, bc: Boolean, prev: DataFrame): Round =
+      Round(sym, bc, prev, Ckpt.cut(lpaRound(sym, prev, bc), false))
+    val (last, rounds) = Fixpoint.run("lpa", castToImpl(sym.sparkSession),
+        sym.rdd.getNumPartitions, maxIters, overlap = true)(
+        bcast, round(sym, bcast, seeded))(
+        (r: Round) => r.labels
+          .join(r.prev.withColumnRenamed("code", "old"), Seq("node"),
             "left_outer")
           .agg(coalesce(sum(when(col("code") =!= col("old"), 1L)
               .otherwise(0L)), lit(0L)),
-            count(lit(1))).head())
-      val spec = roundPlan(sym, nextNow, bcast) // overlapped with stats
-      val row = statsF.get()
-      changed = row.getLong(0)
-      val nLabels = row.getLong(1)
-      labels = nextNow; rounds += 1
-      if (bcast && nLabels > lpaBroadcastMaxRows) {
-        bcast = false
-        sym = Ckpt.cutPartitioned(sym.repartition(col("dst")))
-        next = roundPlan(sym, labels, bcast) // regime changed: replan
-      } else next = spec
-    }
-    }
-    require(changed == 0,
-      s"LPA did not converge in $maxIters rounds ($changed labels " +
-        "still changing — synchronous LPA oscillates on bipartite " +
-        "structure; raise maxIters only if the trajectory is shrinking)")
-    (labels, rounds)
+            count(lit(1))).head())(
+      done = _.getLong(0) == 0L,
+      regime = (bc, row) => bc && row.getLong(1) <= lpaBroadcastMaxRows,
+      // a demotion materializes the dst layout once, mid-flight
+      step = (r, bc) => round(
+        if (r.bcast && !bc)
+          Ckpt.cutPartitioned(r.sym.repartition(col("dst")))
+        else r.sym, bc, r.labels),
+      unconverged = row => s"LPA did not converge in $maxIters rounds " +
+        s"(${row.getLong(0)} labels still changing — synchronous LPA " +
+        "oscillates on bipartite structure; raise maxIters only if the " +
+        "trajectory is shrinking)")
+    (last.labels, rounds)
   }
 
   /** [[lpaLabels]]'s production form: the same co-purchase graph and

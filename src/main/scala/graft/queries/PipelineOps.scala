@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -159,13 +160,12 @@ object PipelineOps {
     * mass). The damping factor contracts deltas by ~0.85/round, so
     * the integer trajectory reaches any fixed eps in O(log 1/eps)
     * rounds regardless of graph size — maxIters is a loud-failure
-    * backstop, not a tuning knob. Loop discipline =
-    * [[connectedComponents]]: eager localCheckpoint per round (plans
-    * stay constant-size), and the delta aggregation rides the
-    * materialized round. The 3-round q120 stays the oracle shadow;
-    * this is the production operator behind the same (ej, n) inputs,
-    * and ConvergenceSpec checks it bit-for-bit against an in-driver
-    * integer reference on the same graph. */
+    * backstop, not a tuning knob. Rounds run on [[Fixpoint]], and the
+    * delta aggregation is each round's one job. The 3-round q120
+    * stays the oracle shadow; this is the production operator behind
+    * the same (ej, n) inputs, and ConvergenceSpec checks it
+    * bit-for-bit against an in-driver integer reference on the same
+    * graph. */
   private[graft] def pagerankFixpoint(ej: DataFrame, n: Long,
       epsFp: Long = 1000000L, maxIters: Int = 100,
       init: Option[DataFrame] = None): (DataFrame, Int) = {
@@ -201,15 +201,11 @@ object PipelineOps {
     // against the in-driver integer reference, and the q260/q270/
     // q283/q284 oracles replay it hash-exactly.
     val nPart = math.max(1, ej.rdd.getNumPartitions)
-    var st = Ckpt.cutPartitioned(init.getOrElse(
+    val st = Ckpt.cutPartitioned(init.getOrElse(
       ej.select(col("src").as("node")).distinct()
         .withColumn("r", lit(unit / n)))
       .select(col("node"), col("r"))
       .repartition(nPart, col("node")))
-    var delta = Long.MaxValue
-    var rounds = 0
-    val dbg = sys.props.contains("graft.pr.debug") ||
-      sys.env.contains("GRAFT_PR_DEBUG")
     // one fused round's plan: state references cp once per union
     // branch, the previous rank rides the aggregation, and the lazy
     // partitioned cut freezes the next round's leaf
@@ -228,41 +224,15 @@ object PipelineOps {
           (lit(base) + expr("(85 * m) div 100")).as("r"), col("old"))
       Ckpt.cutPartitioned(next, eager = false)
     }
-    // PIPELINED planning (optimization round 14, guide §1.2 step 2 /
-    // §7.3 "planning time is driver-side, single-threaded"): a round
-    // costs ~55 ms of driver plan construction + ~115 ms of job at
-    // bench SF, strictly serialized in the naive loop. Round k+1's
-    // plan depends only on round k's lazily-CUT LEAF — not on its
-    // numbers — so the delta aggregation (the job that materializes
-    // the checkpoint) runs in a background thread while the driver
-    // constructs the next round's plan. The trajectory is untouched:
-    // the same plans run in the same order against the same leaves;
-    // the one speculatively-built plan past convergence is never
-    // executed (a lazy cut holds no resources). The job thread only
-    // runs `agg.head()`; all plan/conf mutation stays on the loop
-    // thread, inside the static scope.
-    Ckpt.staticLoopScope(ej, nPart) {
-    var cp = roundPlan(st)
-    while (delta > epsFp && rounds < maxIters) {
-      val t0 = System.nanoTime()
-      val cpNow = cp
-      val deltaF = java.util.concurrent.CompletableFuture.supplyAsync(
-        () => cpNow.agg(max(abs(col("r") - col("old")))).head().getLong(0))
-      val stNext = cpNow.select(col("node"), col("r"))
-      val cpNext = roundPlan(stNext) // overlapped with the agg job
-      val t1 = System.nanoTime()
-      delta = deltaF.get()
-      if (dbg) println(s"[prfix] round=$rounds plan=${(t1 - t0) / 1000000}ms " +
-        s"agg=${(System.nanoTime() - t1) / 1000000}ms delta=$delta")
-      st = stNext
-      cp = cpNext
-      rounds += 1
-    }
-    }
-    require(delta <= epsFp,
-      s"PageRank did not converge in $maxIters rounds (max delta " +
-        s"$delta fp > $epsFp)")
-    (st, rounds)
+    val (cp, rounds) = Fixpoint.run("pagerank", castToImpl(ej.sparkSession),
+        nPart, maxIters, overlap = true)((), roundPlan(st))(
+        _.agg(max(abs(col("r") - col("old")))).head().getLong(0))(
+      done = _ <= epsFp,
+      regime = (_, _) => (),
+      step = (cp, _) => roundPlan(cp.select(col("node"), col("r"))),
+      unconverged = delta => s"PageRank did not converge in $maxIters " +
+        s"rounds (max delta $delta fp > $epsFp)")
+    (cp.select(col("node"), col("r")), rounds)
   }
 
   /** q120's production form: same transaction graph, same output
@@ -622,61 +592,67 @@ object PipelineOps {
       case Some((labels, _)) => return labels
       case None => ()
     }
-    // undirected: propagate labels both ways. Materialized ONCE —
-    // every iteration joins against this edge list, and without the
-    // checkpoint each round would re-execute the (possibly very
-    // expensive) upstream pair-mining subtree that produced it.
-    // partitioned by the per-round join key and cut with the
-    // layout VISIBLE (cutPartitioned): each round then exchanges
-    // only the |V|-row label table, never the edge list
+    // the FUSED round: its output is cut lazily, and the changed-count
+    // over it is the one job that materializes the checkpoint and
+    // decides convergence
+    ccLoop("connectedComponents", edges, maxIters, overlap = true)(
+      (sym, labels) => Ckpt.cut(ccPropagate(sym, labels), false))._1
+  }
+
+  /** The frame both distributed CC loops share: the symmetric edge
+    * list, the identity labeling, and rounds on [[Fixpoint]] until no
+    * label changes. `round(sym, labels)` plans one round whose output
+    * carries each node's pre-round label as `old`.
+    *
+    * Undirected: labels propagate both ways. The edge list is
+    * materialized ONCE — every round joins against it, and without the
+    * checkpoint each round would re-execute the (possibly very
+    * expensive) upstream pair-mining subtree that produced it. It is
+    * partitioned by the per-round join key and cut with the layout
+    * VISIBLE (cutPartitioned): each round then exchanges only the
+    * |V|-row label table, never the edge list.
+    *
+    * Fails LOUDLY on non-convergence: silently returning intermediate
+    * labels would emit wrong canonical ids (the oracle computes the
+    * exact fixpoint). HashMin needs one round per hop of min-label
+    * eccentricity, so hitting the cap means the graph is far deeper
+    * than a dedup graph should be — raise maxIters or switch to
+    * pointer-doubling, don't ship partial labels. */
+  private def ccLoop(loop: String, edges: DataFrame, maxIters: Int,
+      overlap: Boolean)(round: (DataFrame, DataFrame) => DataFrame)
+      : (DataFrame, Int) = {
     val nPart = ccPartitions(edges)
     val sym = Ckpt.cutPartitioned(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(nPart, col("src")))
-    var labels = Ckpt.cut(sym.select(col("src").as("node")).distinct()
+    val labels0 = Ckpt.cut(sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")), true)
-    var changed = 1L
-    var iter = 0
-    // FUSED round (round 14, guide §1/§2.4): the previous label rides
-    // the union's own-label branch (`cur`), so the min-agg emits
-    // (label, old) together and the changed-count needs NO second
-    // join — it aggregates over the round's lazily-cut output, and
-    // that one job both materializes the checkpoint and decides
-    // convergence. The old shape paid an eager-checkpoint job plus a
-    // separate |V|⋈|V| join job per round. Arithmetic unchanged:
-    // min over exactly the same rows, old = the unique cur row's
-    // label, so the trajectory and result are bit-identical. Rounds
-    // additionally run under static planning (see
-    // Ckpt.staticLoopScope) with the edge list's own data-derived
-    // partition count.
-    Ckpt.staticLoopScope(sym, nPart) {
-    while (changed > 0 && iter < maxIters) {
-      // labels as shuffle-hash build side: no per-round sort of the
-      // pre-partitioned edge list (see prRound)
-      val next = Ckpt.cut(
-        sym.join(labels.hint("shuffle_hash"),
-            sym("src") === labels("node"))
-        .select(col("dst").as("node"), col("label"),
-          lit(false).as("cur"))
-        .union(labels.withColumn("cur", lit(true)))
-        .groupBy(col("node")).agg(min(col("label")).as("label"),
-          max(when(col("cur"), col("label"))).as("old")), false)
-      changed = next.filter(col("label") =!= col("old")).count()
-      labels = next.select(col("node"), col("label"))
-      iter += 1
-    }
-    }
-    // fail LOUDLY on non-convergence: silently returning intermediate
-    // labels would emit wrong canonical ids (the oracle computes the
-    // exact fixpoint). HashMin needs one round per hop of min-label
-    // eccentricity, so hitting this means the graph is far deeper
-    // than a dedup graph should be — raise maxIters or switch to
-    // pointer-doubling, don't ship partial labels.
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIters rounds " +
-        s"($changed labels still changing)")
-    labels
+    val (last, rounds) = Fixpoint.run(loop, castToImpl(sym.sparkSession),
+        nPart, maxIters, overlap)((), round(sym, labels0))(
+        _.filter(col("label") =!= col("old")).count())(
+      done = _ == 0L,
+      regime = (_, _) => (),
+      step = (next, _) => round(sym, next.select(col("node"), col("label"))),
+      unconverged = changed => s"$loop did not converge in $maxIters " +
+        s"rounds ($changed labels still changing)")
+    (last.select(col("node"), col("label")), rounds)
   }
+
+  /** one HashMin propagation: every node takes the min label over
+    * itself and its neighbors. FUSED (round 14, guide §1/§2.4): the
+    * previous label rides the union's own-label branch (`cur`), so
+    * the min-agg emits (label, old) together and the round's
+    * changed-count needs NO second |V|⋈|V| join. Arithmetic as the
+    * unfused round: min over exactly the same rows, old = the unique
+    * cur row's label, so trajectories are bit-identical. */
+  private def ccPropagate(sym: DataFrame, labels: DataFrame): DataFrame =
+    // labels as shuffle-hash build side: no per-round sort of the
+    // pre-partitioned edge list (see prRound)
+    sym.join(labels.hint("shuffle_hash"), sym("src") === labels("node"))
+      .select(col("dst").as("node"), col("label"), lit(false).as("cur"))
+      .union(labels.withColumn("cur", lit(true)))
+      .groupBy(col("node")).agg(min(col("label")).as("label"),
+        max(when(col("cur"), col("label"))).as("old"))
 
   /** Pointer-doubling connected components — the O(log diameter)
     * upgrade path for graphs too deep for HashMin's one-hop-per-round
@@ -706,40 +682,23 @@ object PipelineOps {
     }
 
   /** the distributed pointer-doubling rounds behind
-    * [[connectedComponentsDoubling]] (no driver-solve gate). */
+    * [[connectedComponentsDoubling]] (no driver-solve gate). FUSED
+    * rounds (round 14): the propagation carries the pre-round label
+    * (`old`), the jump carries it through, and the changed-count
+    * aggregates over the lazily cut jump output — one propagation job
+    * plus one jump-and-count job per round instead of three.
+    * Arithmetic identical: same min/least over the same rows. The
+    * round runs the eager propagation cut, a job, so the loop runs
+    * serially. */
   private def doublingLoop(edges: DataFrame,
-      maxIters: Int): (DataFrame, Int) = {
-    val nPart = ccPartitions(edges)
-    val sym = Ckpt.cutPartitioned(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(nPart, col("src")))
-    var labels = Ckpt.cut(sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")), true)
-    var changed = 1L
-    var iter = 0
-    // FUSED rounds (round 14): the pre-round label rides the union's
-    // own-label branch into the propagation agg (`old`, the
-    // connectedComponents trick), the jump carries it through, and
-    // the changed-count aggregates over the lazily-cut jump output —
-    // so one round = one propagation job + one jump-and-count job
-    // instead of three (prop cut, jump cut, changed join). Arithmetic
-    // identical: same min/least over the same rows, old = the unique
-    // own-label row. Rounds run under static planning
-    // (Ckpt.staticLoopScope) with the edge list's own partition count.
-    Ckpt.staticLoopScope(sym, nPart) {
-    while (changed > 0 && iter < maxIters) {
+      maxIters: Int): (DataFrame, Int) =
+    ccLoop("connectedComponentsDoubling", edges, maxIters,
+        overlap = false) { (sym, labels) =>
       // checkpointed before the self-join: a Union-bearing plan joined
       // against itself trips Catalyst's constraint rewrite (missing
       // attribute in UnionBase.rewriteConstraints), and the cut also
       // keeps the jump from recomputing the propagation twice
-      val prop = Ckpt.cut(
-        sym.join(labels.hint("shuffle_hash"),
-            sym("src") === labels("node"))
-        .select(col("dst").as("node"), col("label"),
-          lit(false).as("cur"))
-        .union(labels.withColumn("cur", lit(true)))
-        .groupBy(col("node")).agg(min(col("label")).as("label"),
-          max(when(col("cur"), col("label"))).as("old")), true)
+      val prop = Ckpt.cut(ccPropagate(sym, labels), true)
       // jump: label ← label(label). Inner join is total: every label
       // value is a node id present in `prop` (labels start as node
       // ids and only ever move to a smaller REACHABLE node's id).
@@ -756,19 +715,10 @@ object PipelineOps {
       // UnionBase.rewriteConstraints ("key not found: node#…").
       // createDataFrame sheds the stale constraints; the RDD reuses
       // the checkpoint blocks, so nothing recomputes.
-      val next = Ckpt.cut(
+      Ckpt.cut(
         edges.sparkSession.createDataFrame(jumped.rdd, jumped.schema),
         false)
-      changed = next.filter(col("label") =!= col("old")).count()
-      labels = next.select(col("node"), col("label"))
-      iter += 1
     }
-    }
-    require(changed == 0,
-      s"connectedComponentsDoubling did not converge in $maxIters rounds " +
-        s"($changed labels still changing)")
-    (labels, iter)
-  }
 
   /** Incremental (delta) connected components — the graph-side twin
     * of incremental dedup (q106/q171): merge an arriving edge shard

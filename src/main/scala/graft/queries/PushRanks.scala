@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
 /** Residual-push PageRank — the DELTA-LOCALIZED maintenance form of
@@ -116,9 +117,9 @@ object PushRanks {
     * buckets — the standing loop passes a partition-pruned artifact
     * read (each round then opens only the active frontier's buckets,
     * the read-side delta bound `_READS` machine-checks), the batch
-    * operator a plain filter. Loop discipline =
-    * [[PipelineOps.pagerankFixpoint]]: eager lineage cut per round,
-    * constant-size plans. */
+    * operator a plain filter. Rounds run on [[Fixpoint]], serially:
+    * a round reads only the buckets its stat returned, so `_READS`
+    * never sees a speculative read. */
   def pushLoop(state0: DataFrame,
       edgesFor: Seq[Long] => DataFrame, nb: Int, theta: Long,
       maxRounds: Int = 300): (DataFrame, Int) = {
@@ -127,53 +128,42 @@ object PushRanks {
     // pays for the stop test and the bucket list) materializes the
     // checkpoint, so a push round costs one job instead of an eager
     // materialization job plus the probe. Arithmetic unchanged.
-    var st = Ckpt.cutStatsLazy(
+    val st0 = Ckpt.cutStatsLazy(
       state0.select(col("node"), col("p"), col("m"), col("deg")))
-    var rounds = 0
-    var activeCnt = 1L
-    val dbg = sys.props.contains("graft.push.debug")
-    Ckpt.staticLoopScope(st, math.max(1, st.rdd.getNumPartitions)) {
-    while (activeCnt > 0 && rounds < maxRounds) {
-      val t0 = System.nanoTime()
-      val active = st.filter(abs(rhoCol) > theta)
-        .select(col("node"), col("p"), col("deg"),
-          (lit(tau) + expr("(85 * m) div 100")).as("pn"))
-      // ONE driver job yields both the stop test and the active
-      // frontier's storage buckets (≤ nb rows — the bounded driver
-      // step that buys the partition-pruned read)
-      val bcounts = active
-        .groupBy(bucketOf(col("node"), nb).as("b"))
-        .agg(count(lit(1)).as("c")).collect()
-      activeCnt = bcounts.map(_.getLong(1)).sum
-      val t1 = System.nanoTime()
-      if (activeCnt > 0) {
-        val bs = bcounts.map(_.getLong(0)).toSeq.sorted
+    def active(st: DataFrame): DataFrame = st.filter(abs(rhoCol) > theta)
+      .select(col("node"), col("p"), col("deg"),
+        (lit(tau) + expr("(85 * m) div 100")).as("pn"))
+    // ONE driver job per round yields both the stop test and the
+    // active frontier's storage buckets (≤ nb rows — the bounded
+    // driver step that buys the partition-pruned read)
+    val (st, probes) = Fixpoint.run("push", castToImpl(st0.sparkSession),
+        math.max(1, st0.rdd.getNumPartitions), maxRounds,
+        overlap = false)(Seq.empty[Long], st0)(
+        active(_).groupBy(bucketOf(col("node"), nb).as("b"))
+          .agg(count(lit(1)).as("c")).collect().toSeq)(
+      done = _.isEmpty,
+      regime = (_, bcounts) => bcounts.map(_.getLong(0)).sorted,
+      step = (st, bs) => {
+        val act = active(st)
         val dm = edgesFor(bs)
-          .join(active.withColumnRenamed("node", "src")
+          .join(act.withColumnRenamed("node", "src")
             .hint("shuffle_hash"), "src")
           .groupBy(col("dst").as("node"))
           .agg(sum(expr("(pn div deg) - (p div deg)")).as("dm"))
-        st = Ckpt.cutStatsLazy(st
-          .join(active.select(col("node"), col("pn")),
+        Ckpt.cutStatsLazy(st
+          .join(act.select(col("node"), col("pn")),
             Seq("node"), "left_outer")
           .join(dm, Seq("node"), "left_outer")
           .select(col("node"),
             coalesce(col("pn"), col("p")).as("p"),
             (col("m") + coalesce(col("dm"), lit(0L))).as("m"),
             col("deg")))
-        val t2 = System.nanoTime()
-        if (dbg)
-          println(s"[push] round=$rounds active=$activeCnt " +
-            s"probe=${(t1 - t0) / 1000000}ms " +
-            s"cut=${(t2 - t1) / 1000000}ms")
-        rounds += 1
-      }
-    }
-    }
-    require(activeCnt == 0,
-      s"residual push did not settle in $maxRounds rounds " +
-        s"($activeCnt nodes above theta=$theta)")
-    (st, rounds)
+      },
+      unconverged = bcounts => s"residual push did not settle in " +
+        s"$maxRounds rounds (${bcounts.map(_.getLong(1)).sum} nodes " +
+        s"above theta=$theta)")
+    // the first probe tests the seed state: rounds counts pushes
+    (st, probes - 1)
   }
 
   /** Structural absorb of FRESH symmetric edge rows (both directions

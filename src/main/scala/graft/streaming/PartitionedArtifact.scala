@@ -533,7 +533,7 @@ object PartitionedArtifact {
           reads = standing.readsSnapshot)
       } finally { batch.unpersist(); () }
     }
-    prune(s, root, batchId)
+    prune(s, root, batchId, (committed :+ batchId).distinct.sorted)
   }
 
   /** live-epoch ceiling of an epoch-partitioned table before its
@@ -652,10 +652,12 @@ object PartitionedArtifact {
     * is the concurrent-reader guarantee `keepBehind` alone cannot
     * give across more than [[keepBehind]] absorbs. A version that
     * re-enters the kept/referenced set (a replay at a lower batch id)
-    * has any stale marker removed. */
-  private def prune(s: SparkSession, root: String, batchId: Long): Unit = {
+    * has any stale marker removed. `committed`: the versions listed at
+    * the absorb's start, plus `batchId` (one listing per absorb). */
+  private def prune(s: SparkSession, root: String, batchId: Long,
+      committed: Seq[Long]): Unit = {
     val fs = fsFor(s, new Path(root))
-    val eligible = committedVersions(s, root).filter(_ <= batchId)
+    val eligible = committed.filter(_ <= batchId)
     val keep = eligible.takeRight(keepBehind + 1).toSet
     val referenced = keep.flatMap(v =>
       readManifest(s, root, v).values.flatten.map(_.version))

@@ -13,12 +13,13 @@ import org.apache.spark.sql.execution.SQLExecution
 object JobLog {
 
   /** one started job: its declared task count, whether it ran inside
-    * a SQL execution (an action on a DataFrame), and its call site
-    * (e.g. `localCheckpoint at Ckpt.scala:48`). A job outside a SQL
-    * execution is driver-side planning work, such as parquet schema
-    * inference. */
+    * a SQL execution (an action on a DataFrame), its call site (e.g.
+    * `localCheckpoint at Ckpt.scala:48`) and its job group
+    * (`spark.jobGroup.id`, set by `SparkContext.setJobGroup` on the
+    * submitting thread). A job outside a SQL execution is driver-side
+    * planning work, such as parquet schema inference. */
   final case class Job(id: Int, tasks: Int, inSqlExecution: Boolean,
-      callSite: String)
+      callSite: String, group: Option[String])
 
   /** runs `body` and returns its result with every job started while
     * it ran, read after the listener bus has delivered its events. */
@@ -27,11 +28,14 @@ object JobLog {
     ListenerBusDrain(sc)
     val seen = new ConcurrentLinkedQueue[Job]()
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
         seen.add(Job(j.jobId, j.stageInfos.map(_.numTasks).sum,
-          Option(j.properties)
+          props
             .exists(_.getProperty(SQLExecution.EXECUTION_ID_KEY) != null),
-          j.stageInfos.headOption.map(_.name).getOrElse("")))
+          j.stageInfos.headOption.map(_.name).getOrElse(""),
+          props.flatMap(p => Option(p.getProperty("spark.jobGroup.id")))))
+      }
     }
     sc.addSparkListener(listener)
     try {

@@ -9,6 +9,7 @@ import graft.queries.PipelineOps
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+  import PipelineSpec.distributedCC
 
   test("connectedComponents merges transitive chains to one canonical id") {
     // chain 1-2-3 (1~3 only transitively), separate pair 10-11,
@@ -21,14 +22,6 @@ class PipelineSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L))
-  }
-
-  /** run `body` with the CC driver-solve gate forced off, so the
-    * DISTRIBUTED loops are what executes (the >gate regime). */
-  private def distributedCC[T](body: => T): T = {
-    System.setProperty("graft.cc.driver.max.edges", "0")
-    try body
-    finally System.clearProperty("graft.cc.driver.max.edges")
   }
 
   test("pointer-doubling CC: 64-deep chain converges in ≤7 rounds") {
@@ -243,5 +236,16 @@ class PipelineSpec extends SparkSpec {
       assert(math.abs(est - ex).toDouble / ex <= 0.05,
         s"$src: est $est vs exact $ex")
     }
+  }
+}
+
+object PipelineSpec {
+
+  /** run `body` with the CC driver-solve gate forced off, so the
+    * DISTRIBUTED loops are what executes (the >gate regime). */
+  def distributedCC[T](body: => T): T = {
+    System.setProperty("graft.cc.driver.max.edges", "0")
+    try body
+    finally System.clearProperty("graft.cc.driver.max.edges")
   }
 }
