@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Memo
+
 /** Benchmark main — runs every catalog query on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON metrics line.
   * local[32] with shuffle.partitions matched to cores (not the
@@ -95,6 +97,7 @@ object Bench {
       }.find(_.nonEmpty).getOrElse(Map.empty)
     val timings = collection.mutable.LinkedHashMap.empty[String, Double]
     val failures = collection.mutable.LinkedHashMap.empty[String, String]
+    val memoBuilt = collection.mutable.LinkedHashMap.empty[String, Seq[Memo.Build]]
     // dev loop: SPARK_GRAFT_ONLY=q35_jaccard_pairs,q36_minhash_lsh
     // times just those queries; unset (the driver's path) runs all
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -102,6 +105,7 @@ object Bench {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val memoBefore = Memo.builds.size
       val attempts = (1 to runs).flatMap { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
@@ -113,6 +117,8 @@ object Bench {
         }
       }
       if (attempts.nonEmpty) timings(name) = attempts.min
+      val mb = Memo.builds.drop(memoBefore)
+      if (mb.nonEmpty) memoBuilt(name) = mb
     }
     // end-of-run stall adjudication: one isolated re-measure of every
     // >5x-vs-prior outlier; report the min of loop and isolated
@@ -143,9 +149,16 @@ object Bench {
     // numbers are meant to represent — rerun for a clean measurement.
     val sb = graft.queries.SideTables.builtThisSession
       .map("\"" + _ + "\"").mkString("[", ",", "]")
+    // memo builds inside each query's timed attempts, as name -> build
+    // ms: a row listed here paid a first-touch build of a shared
+    // intermediate that later rows reuse
+    val mbs = memoBuilt.map { case (q, bs) =>
+      "\"" + q + "\":" + bs.map(b => "\"" + b.name + "\":" + b.ms)
+        .mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
     val total = timings.values.sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$fs,"n_failed":${failures.size},"remeasured":$rs,"side_built":$sb,"sf":"$sfDir","runs_per_query":$runs,"agg":"min","host_start":$hostStart,"host_end":${hostStamp()}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failures":$fs,"n_failed":${failures.size},"remeasured":$rs,"side_built":$sb,"memo_built":$mbs,"sf":"$sfDir","runs_per_query":$runs,"agg":"min","host_start":$hostStart,"host_end":${hostStamp()}}"""
     println(line)
     // the full line (90+ queries) exceeds the driver's tail-capture
     // window, which truncates from the FRONT — so the leading

@@ -27,34 +27,27 @@ object GraphOps {
 
   /** distinct (order, part) basket items — the root table of the
     * whole family: feeds the co-purchase edge build AND q155's
-    * basket-lift support counts. Memoized like [[coPurchaseEdges]]
-    * so the lineitem scan + distinct runs once per session. */
-  private val liCache =
-    collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+    * basket-lift support counts, so the lineitem scan + distinct
+    * runs once per session. */
   private[queries] def basketItems(s: SparkSession, dir: String): DataFrame =
-    liCache.synchronized {
-      liCache.getOrElseUpdate((s, dir),
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-          .localCheckpoint(false))
+    Memo(s, dir, "basket_items", Seq("lineitem")) {
+      t(s, dir, "lineitem")
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .distinct()
+        .localCheckpoint(false)
     }
 
   /** canonical undirected co-purchase edges (u < v), distinct,
     * checkpointed once — reused by degrees, orientation, closure
     * check, and every peel round. */
-  private val edgeCache =
-    collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[queries] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.synchronized {
-      edgeCache.getOrElseUpdate((s, dir), {
-        val li = basketItems(s, dir)
-        li.as("a").join(li.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .select(col("a.pk").as("u"), col("b.pk").as("v"))
-          .distinct()
-          .localCheckpoint(false)
-      })
+    Memo(s, dir, "co_purchase_edges", Seq("lineitem")) {
+      val li = basketItems(s, dir)
+      li.as("a").join(li.as("b"),
+          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+        .select(col("a.pk").as("u"), col("b.pk").as("v"))
+        .distinct()
+        .localCheckpoint(false)
     }
 
   private val edgeSql =
@@ -72,61 +65,53 @@ object GraphOps {
   /** per-node degrees of the canonical co-purchase graph, memoized —
     * triangles reads them twice (orientation + the final clustering
     * join), and the table is |V|-sized. */
-  private val degCache =
-    collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[queries] def coPurchaseDegrees(s: SparkSession, dir: String): DataFrame =
-    degCache.synchronized {
-      degCache.getOrElseUpdate((s, dir),
-        degrees(coPurchaseEdges(s, dir)).localCheckpoint(false))
+    Memo(s, dir, "co_purchase_degrees", Seq("lineitem")) {
+      degrees(coPurchaseEdges(s, dir)).localCheckpoint(false)
     }
 
   /** degree-oriented edge list (src = lower-(deg, id) endpoint) and
-    * its sorted out-neighbor adjacency arrays, memoized per
-    * (session, dataset) like [[graft.queries.TextOps]]'s mined-pair
-    * table: the orientation join + sort/collect is the expensive
-    * build of the triangle family, and at 100 TB it is the persisted
-    * adjacency a production graph pipeline materializes anyway. */
-  private val adjCache = collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+    * its sorted out-neighbor adjacency arrays, memoized: the
+    * orientation join + sort/collect is the expensive build of the
+    * triangle family, and at 100 TB it is the persisted adjacency a
+    * production graph pipeline materializes anyway. */
   private[queries] def orientedAdjacency(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    adjCache.synchronized {
-      adjCache.getOrElseUpdate((s, dir), {
-        val deg = coPurchaseDegrees(s, dir)
-        // Compact-id regime: once the adjacency outgrows AQE's
-        // broadcast threshold, the triangle join's cost IS the bytes
-        // of neighbor arrays it shuffles (measured at sf1: the
-        // broadcast→shuffle-hash regime switch, ~6 GB of array rows,
-        // dominates the query). When every node id fits in 32 bits —
-        // decided HERE, from a 1-row max over the |V|-sized memoized
-        // degree table, so the choice is per-dataset and loud, not a
-        // silent truncation — src/dst/neighbor ids are stored as int,
-        // halving both the shuffled bytes and the merge-scan traffic
-        // (sorted_common has a matching int fast path). Beyond 2^31
-        // ids the long layout is kept unchanged.
-        val fitsInt = deg.agg(max(col("node"))).head().getLong(0) <
-          Int.MaxValue.toLong
-        val narrow = (c: Column) => if (fitsInt) c.cast("int") else c
-        val withDeg = coPurchaseEdges(s, dir)
-          .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
-          .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-        // NOT checkpointed: the oriented edge list's only consumer is
-        // the adjacency groupBy one line down (every catalog query
-        // reads the ADJACENCY), so materializing it would be a dead
-        // |E|-sized write on the cold path.
-        val oriented = withDeg.select(
-          when(col("du") < col("dv") ||
-              (col("du") === col("dv") && col("u") < col("v")),
-            struct(narrow(col("u")).as("src"), narrow(col("v")).as("dst")))
-            .otherwise(
-              struct(narrow(col("v")).as("src"), narrow(col("u")).as("dst")))
-            .as("e"))
-          .select(col("e.src"), col("e.dst"))
-        val adj = oriented.groupBy(col("src"))
-          .agg(sort_array(collect_list(col("dst"))).as("nb"))
-          .localCheckpoint(false)
-        (oriented, adj)
-      })
+    Memo(s, dir, "oriented_adjacency", Seq("lineitem")) {
+      val deg = coPurchaseDegrees(s, dir)
+      // Compact-id regime: once the adjacency outgrows AQE's
+      // broadcast threshold, the triangle join's cost IS the bytes
+      // of neighbor arrays it shuffles (measured at sf1: the
+      // broadcast→shuffle-hash regime switch, ~6 GB of array rows,
+      // dominates the query). When every node id fits in 32 bits —
+      // decided HERE, from a 1-row max over the |V|-sized memoized
+      // degree table, so the choice is per-dataset and loud, not a
+      // silent truncation — src/dst/neighbor ids are stored as int,
+      // halving both the shuffled bytes and the merge-scan traffic
+      // (sorted_common has a matching int fast path). Beyond 2^31
+      // ids the long layout is kept unchanged.
+      val fitsInt = deg.agg(max(col("node"))).head().getLong(0) <
+        Int.MaxValue.toLong
+      val narrow = (c: Column) => if (fitsInt) c.cast("int") else c
+      val withDeg = coPurchaseEdges(s, dir)
+        .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
+        .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
+      // NOT checkpointed: the oriented edge list's only consumer is
+      // the adjacency groupBy one line down (every catalog query
+      // reads the ADJACENCY), so materializing it would be a dead
+      // |E|-sized write on the cold path.
+      val oriented = withDeg.select(
+        when(col("du") < col("dv") ||
+            (col("du") === col("dv") && col("u") < col("v")),
+          struct(narrow(col("u")).as("src"), narrow(col("v")).as("dst")))
+          .otherwise(
+            struct(narrow(col("v")).as("src"), narrow(col("u")).as("dst")))
+          .as("e"))
+        .select(col("e.src"), col("e.dst"))
+      val adj = oriented.groupBy(col("src"))
+        .agg(sort_array(collect_list(col("dst"))).as("nb"))
+        .localCheckpoint(false)
+      (oriented, adj)
     }
 
   /** Top-100 nodes by triangle participation, with degree and local
@@ -430,17 +415,17 @@ object GraphOps {
       dir: String): DataFrame = {
     graft.functions.SortedIntersect.register(s)
     val baseAdj = SideTables.getOrBuild(s, dir, "tri_adj_base",
-      "lineitem") {
+      Seq("lineitem")) {
       symAdjOf(coEdgesOf(
         basketItemsPlan(s, dir).filter(hashBucket(col("ok")) < 80)))
     }
     val baseTri = SideTables.getOrBuild(s, dir, "tri_counts_base",
-      "lineitem") {
+      Seq("lineitem")) {
       triCorners(coEdgesOf(
         basketItemsPlan(s, dir).filter(hashBucket(col("ok")) < 80)))
     }
     val delta = SideTables.getOrBuild(s, dir, "tri_delta_edges",
-      "lineitem") {
+      Seq("lineitem")) {
       // shard co-purchase edges the standing graph doesn't have:
       // membership via one left join + array probe of the adjacency
       // artifact (no |2E| edge-list explode)
@@ -452,7 +437,7 @@ object GraphOps {
         .select(col("u"), col("v"))
     }
     val merged = SideTables.getOrBuild(s, dir, "tri_counts_merged",
-      "lineitem") {
+      Seq("lineitem")) {
       val incr = deltaTriCorners(baseAdj, delta, "tri_added")
       baseTri.withColumnRenamed("tri", "tri_base")
         .join(incr, Seq("node"), "full_outer")
@@ -499,15 +484,15 @@ object GraphOps {
       dir: String): DataFrame = {
     graft.functions.SortedIntersect.register(s)
     val fullAdj = SideTables.getOrBuild(s, dir, "tri_adj_full",
-      "lineitem") {
+      Seq("lineitem")) {
       symAdjOf(coEdgesOf(basketItemsPlan(s, dir)))
     }
     val fullTri = SideTables.getOrBuild(s, dir, "tri_counts_full",
-      "lineitem") {
+      Seq("lineitem")) {
       triCorners(coEdgesOf(basketItemsPlan(s, dir)))
     }
     val retracted = SideTables.getOrBuild(s, dir,
-      "tri_counts_retracted", "lineitem") {
+      "tri_counts_retracted", Seq("lineitem")) {
       // the deleted slice is enumerated from the STANDING adjacency,
       // not a fresh co-edge self-join: exploding nb with node < nb
       // reproduces coEdgesOf's canonical distinct (u < v) edge set
@@ -744,45 +729,36 @@ object GraphOps {
     * the lexicographic rank of the distinct brands, so min-code ≡
     * min-lexicographic and the LPA tie contract survives the
     * string→int swap that keeps labels cheap to shuffle. */
-  private val dictCache =
-    collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[queries] def brandDict(s: SparkSession, dir: String): DataFrame =
-    dictCache.synchronized {
-      dictCache.getOrElseUpdate((s, dir), {
-        import org.apache.spark.sql.expressions.Window
-        t(s, dir, "part").select(col("p_brand").as("lbl"))
-          .distinct()
-          .withColumn("code",
-            row_number().over(Window.orderBy(col("lbl"))).cast("long"))
-          .localCheckpoint(false)
-      })
+    Memo(s, dir, "brand_dict", Seq("part")) {
+      import org.apache.spark.sql.expressions.Window
+      t(s, dir, "part").select(col("p_brand").as("lbl"))
+        .distinct()
+        .withColumn("code",
+          row_number().over(Window.orderBy(col("lbl"))).cast("long"))
+        .localCheckpoint(false)
     }
 
   /** Two synchronous label-propagation rounds over the co-purchase
     * graph, seeded with part-brand codes: each round every node
     * adopts the most frequent neighbor label, ties → smallest code
-    * (= lexicographically smallest brand). Memoized + checkpointed
-    * like [[coPurchaseEdges]]: q192 reads the final labels once, but
-    * q201's modularity audit reads them three times (intra-edge
-    * count + degree mass + node count), and each read would re-run
-    * both O(|E|) rounds without the cut. */
-  private val lpaCache =
-    collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+    * (= lexicographically smallest brand). Memoized + checkpointed:
+    * q192 reads the final labels once, but q201's modularity audit
+    * reads them three times (intra-edge count + degree mass + node
+    * count), and each read would re-run both O(|E|) rounds without
+    * the cut. */
   private[queries] def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    lpaCache.synchronized {
-      lpaCache.getOrElseUpdate((s, dir), {
-        import org.apache.spark.sql.expressions.Window
-        val e = coPurchaseEdges(s, dir)
-        val sym = e.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-        val seeds = sym.select(col("src").as("node")).distinct()
-          .join(t(s, dir, "part")
-            .select(col("p_partkey").as("node"), col("p_brand").as("lbl")),
-            "node")
-          .join(broadcast(brandDict(s, dir)), "lbl")
-          .select(col("node"), col("code"))
-        lpaTwoRounds(sym, seeds).localCheckpoint(false)
-      })
+    Memo(s, dir, "lpa_labels", Seq("lineitem", "part")) {
+      val e = coPurchaseEdges(s, dir)
+      val sym = e.select(col("u").as("src"), col("v").as("dst"))
+        .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
+      val seeds = sym.select(col("src").as("node")).distinct()
+        .join(t(s, dir, "part")
+          .select(col("p_partkey").as("node"), col("p_brand").as("lbl")),
+          "node")
+        .join(broadcast(brandDict(s, dir)), "lbl")
+        .select(col("node"), col("code"))
+      lpaTwoRounds(sym, seeds).localCheckpoint(false)
     }
 
   /** The 2-round unrolled LPA with the scale-regime gate RE-CHECKED

@@ -70,11 +70,15 @@ object PipelineOps {
     }
   }
 
-  /** shared materialization of a transaction-graph variant.
-    * Ckpt.cutPartitioned, not a plain checkpoint: under AQE the
-    * checkpoint records UnknownPartitioning and every PageRank
-    * round silently re-exchanges the |E|-row list (round-11 plan
-    * probe) — the whole point of this layout is that rounds
+  /** every table the transaction graph derives from: the memo and
+    * every side table built over it are keyed on both. */
+  private val txSources = Seq("lineitem", "orders")
+
+  /** shared materialization of a transaction-graph variant, memoized
+    * per slice. Ckpt.cutPartitioned, not a plain checkpoint: under
+    * AQE the checkpoint records UnknownPartitioning and every
+    * PageRank round silently re-exchanges the |E|-row list (round-11
+    * plan probe) — the whole point of this layout is that rounds
     * exchange only the |V|-row rank vector.
     *
     * Partition count ∝ DATA, decided here: pinning the layout
@@ -87,56 +91,47 @@ object PipelineOps {
     * 4-task stages (measured 17.1 s vs 23.7 fixed-width), sf1
     * lands at ~31 (13 measured 1.5x slower than 32 — the probe
     * that set this divisor), sf10 keeps full width. */
-  private def buildTxGraph(s: SparkSession, dir: String,
-      standingOnly: Boolean): (DataFrame, Long) =
-    buildTxGraphSlice(s, dir,
-      if (standingOnly) Some(80) else None, None)
-
-  private def buildTxGraphSlice(s: SparkSession, dir: String,
+  private def txGraph(s: SparkSession, dir: String,
       bucketLt: Option[Int], dropNodesGe: Option[Int])
       : (DataFrame, Long) = {
-    // the (sym edges ⋈ out-degrees) list is PERSISTED via SideTables
-    // (one parquet per dataset × slice), so the lineitem⋈orders +
-    // distinct + degree build — the dominant first-touch cost every
-    // graph consumer used to pay per session (49 s of q270's sf10
-    // row) — is paid once per dataset and self-identifies in
-    // `side_built`; a session then pays one read + repartition. The
-    // logic key embeds the full edge derivation, so any change to the
-    // slice laws re-keys the artifact.
     val name = "tx_edges_" + (bucketLt match {
       case None => "full"
       case Some(b) => s"b$b"
     }) + dropNodesGe.map(g => s"_r$g").getOrElse("")
-    val persisted = SideTables.getOrBuild(s, dir, name, "lineitem") {
-      txEdgePlanSlice(s, dir, bucketLt, dropNodesGe)
+    Memo(s, dir, name, txSources) {
+      // the (sym edges ⋈ out-degrees) list is PERSISTED via SideTables
+      // (one parquet per dataset × slice), so the lineitem⋈orders +
+      // distinct + degree build — the dominant first-touch cost every
+      // graph consumer used to pay per session (49 s of q270's sf10
+      // row) — is paid once per dataset and self-identifies in
+      // `side_built`; a session then pays one read + repartition. The
+      // logic key embeds the full edge derivation, so any change to the
+      // slice laws re-keys the artifact.
+      val persisted = SideTables.getOrBuild(s, dir, name, txSources) {
+        txEdgePlanSlice(s, dir, bucketLt, dropNodesGe)
+      }
+      val nPart = {
+        val liRows = t(s, dir, "lineitem").count()
+        val conf = s.conf.get("spark.sql.shuffle.partitions").toInt
+        math.max(4, math.min(conf, (liRows / 200000L + 1).toInt))
+      }
+      val ej = Ckpt.cutPartitioned(
+        persisted.repartition(nPart, col("src")))
+      (ej, ej.select(col("src")).distinct().count())
     }
-    val nPart = {
-      val liRows = t(s, dir, "lineitem").count()
-      val conf = s.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(4, math.min(conf, (liRows / 200000L + 1).toInt))
-    }
-    val ej = Ckpt.cutPartitioned(
-      persisted.repartition(nPart, col("src")))
-    (ej, ej.select(col("src")).distinct().count())
   }
 
   /** The symmetric supplier↔customer transaction graph with
-    * out-degrees pre-attached, plus its node count — memoized per
-    * (session, dataset) like [[GraphOps.coPurchaseEdges]]: the
+    * out-degrees pre-attached, plus its node count: the
     * lineitem⋈orders distinct build is the dominant cost of every
     * consumer and is the persisted graph a production pipeline
     * materializes anyway. PRE-PARTITIONED on the per-round join key
     * (localCheckpoint preserves physical partitioning), so each
     * PageRank iteration exchanges only the |V|-row rank vector,
     * never the |E|-row edge list. */
-  private val txGraphCache = collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, Long)]
   private[graft] def transactionGraph(s: SparkSession, dir: String)
       : (DataFrame, Long) =
-    txGraphCache.synchronized {
-      txGraphCache.getOrElseUpdate((s, dir),
-        buildTxGraph(s, dir, standingOnly = false))
-    }
+    txGraph(s, dir, None, None)
 
   /** one damped-PageRank round in ×10⁻¹² fixed point: spread each
     * node's rank over its out-edges (truncating DIV), damp by 85/100,
@@ -246,16 +241,10 @@ object PipelineOps {
   }
 
   /** [[transactionGraph]]'s STANDING slice ([[txEdgePlan]] with the
-    * shard filter on), separately memoized — q270's base fixpoint
-    * input. */
-  private val baseTxGraphCache = collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, Long)]
+    * shard filter on) — q270's base fixpoint input. */
   private def baseTransactionGraph(s: SparkSession, dir: String)
       : (DataFrame, Long) =
-    baseTxGraphCache.synchronized {
-      baseTxGraphCache.getOrElseUpdate((s, dir),
-        buildTxGraph(s, dir, standingOnly = true))
-    }
+    txGraph(s, dir, Some(80), None)
 
   /** the standing rank vector: damped PageRank solved to the 10⁻⁶
     * fixpoint ON THE BASE GRAPH, persisted as a parquet side table —
@@ -273,7 +262,7 @@ object PipelineOps {
     val keyPlan = prRound(raw,
       raw.select(col("src").as("node")).withColumn("r", lit(unit / nb)),
       15L * unit / 100L / nb)
-    SideTables.getOrBuildKeyed(s, dir, "pr_ranks_base", "lineitem",
+    SideTables.getOrBuildKeyed(s, dir, "pr_ranks_base", txSources,
       keyPlan, "pagerankFixpoint:epsFp=1000000:init=uniform") {
       pagerankFixpoint(ejb, nb)._1
     }
@@ -304,16 +293,10 @@ object PipelineOps {
   }
 
   /** the MID graph of the chained warm start (orders bucket < 90 —
-    * base plus the first arriving shard), memoized like
-    * [[transactionGraph]]. */
-  private val midTxGraphCache = collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, Long)]
+    * base plus the first arriving shard). */
   private def midTransactionGraph(s: SparkSession, dir: String)
       : (DataFrame, Long) =
-    midTxGraphCache.synchronized {
-      midTxGraphCache.getOrElseUpdate((s, dir),
-        buildTxGraphSlice(s, dir, Some(90), None))
-    }
+    txGraph(s, dir, Some(90), None)
 
   /** q283's operator: CHAINED warm-start PageRank — each growth event
     * PUBLISHES its merged rank vector back as the next standing
@@ -340,7 +323,7 @@ object PipelineOps {
       raw1.select(col("src").as("node")).withColumn("r", lit(unit / n1)),
       15L * unit / 100L / n1)
     val ranks1 = SideTables.getOrBuildKeyed(s, dir, "pr_ranks_m90",
-      "lineitem", keyPlan1,
+      txSources, keyPlan1,
       "pagerankFixpoint:epsFp=1000000:init=pr_ranks_base:chained") {
       val init = ej1.select(col("src").as("node")).distinct()
         .join(ranks0.withColumnRenamed("r", "br"), Seq("node"),
@@ -364,15 +347,10 @@ object PipelineOps {
 
   /** the SURVIVING base graph after q284's node retraction (nodes
     * whose id buckets ≥ 97 leave; every incident edge goes with
-    * them), memoized like the other graph variants. */
-  private val retractTxGraphCache = collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, Long)]
+    * them). */
   private[graft] def retractTransactionGraph(s: SparkSession, dir: String)
       : (DataFrame, Long) =
-    retractTxGraphCache.synchronized {
-      retractTxGraphCache.getOrElseUpdate((s, dir),
-        buildTxGraphSlice(s, dir, Some(80), Some(97)))
-    }
+    txGraph(s, dir, Some(80), Some(97))
 
   /** q284's operator: PageRank RETRACTION — the forget half of q270's
     * absorb, completing the rank family's algebra (CC q274, triangles
@@ -442,7 +420,7 @@ object PipelineOps {
       txEdgePlanSlice(s, dir, Some(80), None)
         .select(col("src"), col("dst")))
     val baseState = SideTables.getOrBuildKeyed(s, dir,
-      "push_state_base", "lineitem", keyPlan,
+      "push_state_base", txSources, keyPlan,
       "pushLoop:theta=1000n:tau=0.15e9") {
       val (st, rounds) = PushRanks.pushLoop(
         PushRanks.coldState(baseSym), _ => baseSym, nb,

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * index, sorted-shingle arrays, IVF coarse index, PQ codes),
   * materialized once per dataset directory as parquet instead of
   * once per session in the block store. Session memoization
-  * (TextOps' caches) already removed intra-session rebuilds; this
+  * ([[Memo]]) already removed intra-session rebuilds; this
   * removes the cross-run first-touch — the one-off build that
   * dominated q36's sf10 bench envelope (19.5 s first touch vs 6.1 s
   * steady state per the StageProbe). After the first build, every
@@ -21,10 +21,11 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * Layout: `$GRAFT_SIDE_DIR (default: $java.io.tmpdir/graft_side) /
   * <dirKey>-<sourceFingerprint>-<logicKey>/<name>`. The source
-  * fingerprint hashes the source parquet's file names + sizes +
-  * mtimes, so a regenerated dataset silently invalidates its side
-  * tables. The LOGIC key is derived MECHANICALLY from the builder
-  * itself (no hand-maintained version constant to forget):
+  * fingerprint hashes the file names + sizes + mtimes of every source
+  * table the builder reads, so a regenerated dataset silently
+  * invalidates its side tables. The LOGIC key is derived MECHANICALLY
+  * from the builder itself (no hand-maintained version constant to
+  * forget):
   *  - the builder DataFrame's canonicalized analyzed plan (exprIds
   *    and JVM object identities normalized) — any change to the
   *    derivation visible in the plan (band width, digest expression,
@@ -89,15 +90,18 @@ object SideTables {
     java.security.MessageDigest.getInstance("MD5")
       .digest(b).map("%02x".format(_)).mkString
 
-  /** names+sizes+mtimes of the source table's files — regeneration
-    * of the dataset changes it, path spelling does not. Listed via
+  /** names+sizes+mtimes of the `sources` tables' files — regeneration
+    * of any of them changes it, path spelling does not. Listed via
     * the Hadoop FS of the dataset's scheme, so a non-local dataset
-    * dir fingerprints the same way. */
-  private def fingerprint(s: SparkSession, dir: String,
-      source: String): String = {
-    val p = new Path(dir, s"$source.parquet")
-    val fs = fsFor(s, p)
-    val parts: Seq[String] =
+    * dir fingerprints the same way. A one-table list hashes to the
+    * same value the table alone always did, so one-table artifacts
+    * keep their keys. Shared with [[Memo]], which checks its entries
+    * against it. */
+  private[queries] def fingerprint(s: SparkSession, dir: String,
+      sources: Seq[String]): String = {
+    def parts(source: String): Seq[String] = {
+      val p = new Path(dir, s"$source.parquet")
+      val fs = fsFor(s, p)
       if (fs.exists(p)) {
         val st = fs.getFileStatus(p)
         if (st.isDirectory)
@@ -107,7 +111,8 @@ object SideTables {
             .sorted
         else Seq(s"${st.getLen}:${st.getModificationTime}")
       } else Seq("absent")
-    md5hex(parts.mkString("|")).take(16)
+    }
+    md5hex(sources.map(parts(_).mkString("|")).mkString("||")).take(16)
   }
 
   /** Mechanical builder-logic key — see the object scaladoc.
@@ -204,7 +209,7 @@ object SideTables {
     }
   }
 
-  /** the full cache key for (`dir`, `source`, builder plan) —
+  /** the full cache key for (`dir`, `sources`, builder plan) —
     * factored out so specs can assert key behavior without I/O.
     * The dataset dir is canonicalized SCHEME-AWARE: qualified
     * against its own FileSystem (`file:/abs/...` locally,
@@ -212,24 +217,30 @@ object SideTables {
     * `java.io.File` would mangle a remote URI into `<cwd>/hdfs:/...`,
     * making its fingerprint permanently "absent" and regeneration
     * invisible. */
-  private[graft] def keyFor(s: SparkSession, dir: String, source: String,
-      build: DataFrame): String = {
+  private[graft] def keyFor(s: SparkSession, dir: String,
+      sources: Seq[String], build: DataFrame): String = {
     val p = new Path(dir)
     val canon = fsFor(s, p).makeQualified(p).toUri.normalize.toString
-    md5hex(canon).take(12) + "-" + fingerprint(s, canon, source) + "-" +
+    md5hex(canon).take(12) + "-" + fingerprint(s, canon, sources) + "-" +
       logicKey(build)
   }
 
-  /** Read the side table `name` derived from `dir`'s `source` table,
-    * building and publishing it first if absent (or stale — a new
-    * fingerprint OR a new builder-logic key is a new directory).
+  /** [[keyFor]] over one source table. */
+  private[graft] def keyFor(s: SparkSession, dir: String, source: String,
+      build: DataFrame): String = keyFor(s, dir, Seq(source), build)
+
+  /** Read the side table `name` derived from `dir`'s `sources`
+    * tables (every table the builder reads), building and publishing
+    * it first if absent (or stale — a new fingerprint OR a new
+    * builder-logic key is a new directory).
     * `build` is evaluated once per call for its PLAN (to derive the
     * logic key — plan construction only, no job); the plan is then
     * reused for the actual build when the artifact is absent. */
   def getOrBuild(s: SparkSession, dir: String, name: String,
-      source: String = "documents")(build: => DataFrame): DataFrame = {
+      sources: Seq[String] = Seq("documents"))
+      (build: => DataFrame): DataFrame = {
     val b = build
-    getOrBuildWithKey(s, keyFor(s, dir, source, b), name)(b)
+    getOrBuildWithKey(s, keyFor(s, dir, sources, b), name)(b)
   }
 
   /** [[getOrBuild]] for ITERATIVE builders, whose result DataFrame is
@@ -241,16 +252,22 @@ object SideTables {
     * un-checkpointed inputs: it embeds the input derivation, the
     * round formula, and every constant), plus a `salt` for the pieces
     * that live in the driver loop rather than in any plan (stopping
-    * rule, epsilon). The key is derived from (`dir`, `source`,
+    * rule, epsilon). The key is derived from (`dir`, `sources`,
     * keyPlan, salt) exactly as [[getOrBuild]] derives it from the
     * builder itself. */
   def getOrBuildKeyed(s: SparkSession, dir: String, name: String,
-      source: String, keyPlan: DataFrame, salt: String)
+      sources: Seq[String], keyPlan: DataFrame, salt: String)
       (build: => DataFrame): DataFrame = {
-    val key = keyFor(s, dir, source, keyPlan) +
+    val key = keyFor(s, dir, sources, keyPlan) +
       "-" + md5hex(salt).take(8)
     getOrBuildWithKey(s, key, name)(build)
   }
+
+  /** [[getOrBuildKeyed]] over one source table. */
+  def getOrBuildKeyed(s: SparkSession, dir: String, name: String,
+      source: String, keyPlan: DataFrame, salt: String)
+      (build: => DataFrame): DataFrame =
+    getOrBuildKeyed(s, dir, name, Seq(source), keyPlan, salt)(build)
 
   /** shared probe-build-publish cycle under an already-derived key.
     * `build` is only forced when the artifact is absent. */

@@ -64,24 +64,20 @@ object SimilarityOps {
   /** quantized + norm²-annotated view of the corpus (public: specs
     * build exact ground truth from the same integer vectors).
     *
-    * Memoized per (session, dataset) behind a lazy `localCheckpoint`:
-    * the quantization (64 floor-mults per row) and the interpreted
-    * norm aggregate feed every similarity query, and q60's pair
-    * pipeline alone reads the table three times (bucket build + both
-    * verify sides) — without the cut each read re-runs the scan +
-    * quantize subtree. The quantized corpus is exactly what a
+    * Memoized behind a lazy `localCheckpoint`: the quantization (64
+    * floor-mults per row) and the interpreted norm aggregate feed
+    * every similarity query, and q60's pair pipeline alone reads the
+    * table three times (bucket build + both verify sides) — without
+    * the cut each read re-runs the scan + quantize subtree. The quantized corpus is exactly what a
     * production vector pipeline materializes as its index input; at
     * 100 TB this is a parquet intermediate, here it lives in the
     * block store for the session. */
-  private val vecsCache =
-    collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   def vecs(s: SparkSession, dir: String): DataFrame =
-    vecsCache.synchronized {
-      vecsCache.getOrElseUpdate((s, dir),
-        t(s, dir, "embeddings")
-          .select(col("vec_id"), quant(col("embedding")).as("v"))
-          .withColumn("n2", nrm2(col("v")))
-          .localCheckpoint(false))
+    Memo(s, dir, "vecs", Seq("embeddings")) {
+      t(s, dir, "embeddings")
+        .select(col("vec_id"), quant(col("embedding")).as("v"))
+        .withColumn("n2", nrm2(col("v")))
+        .localCheckpoint(false)
     }
 
   private val dotSql =
@@ -227,7 +223,7 @@ object SimilarityOps {
     // production IVF deployment operates in. sn2 is derived after
     // the read (k rows, plan literal).
     val sums = SideTables.getOrBuild(s, dir, "ivf_sums",
-        source = "embeddings") {
+        Seq("embeddings")) {
         all.groupBy(col("label")).agg(vecSum(col("v")).as("sv"))
       }
       .withColumn("sn2", nrm2(col("sv")))
@@ -1319,7 +1315,7 @@ object SimilarityOps {
     QueryDef("q267_ivf_delta_refresh",
       (s, dir) => {
         val merged = SideTables.getOrBuild(s, dir, "ivf_sums_merged",
-            source = "embeddings") {
+            Seq("embeddings")) {
           val bucket = hashBucket(col("vec_id"))
           def cellSums(keep: Column) = t(s, dir, "embeddings")
             .filter(keep)
@@ -1327,7 +1323,7 @@ object SimilarityOps {
               quant(col("embedding")).as("v"))
             .groupBy(col("label")).agg(vecSum(col("v")).as("sv"))
           val base = SideTables.getOrBuild(s, dir, "ivf_sums_base",
-            source = "embeddings")(cellSums(bucket < 80))
+            Seq("embeddings"))(cellSums(bucket < 80))
           val shard = cellSums(bucket >= 80)
           base.as("b").join(shard.as("sh"), Seq("label"), "full_outer")
             .select(col("label"),
@@ -1388,7 +1384,7 @@ object SimilarityOps {
     "q278_ivf_retract",
     (s, dir) => {
       val retracted = SideTables.getOrBuild(s, dir, "ivf_sums_retracted",
-          source = "embeddings") {
+          Seq("embeddings")) {
         val bucket = hashBucket(col("vec_id"))
         def cellStats(keep: Column) = t(s, dir, "embeddings")
           .filter(keep)
@@ -1397,7 +1393,7 @@ object SimilarityOps {
           .groupBy(col("label"))
           .agg(vecSum(col("v")).as("sv"), count(lit(1)).as("n"))
         val full = SideTables.getOrBuild(s, dir, "ivf_stats_full",
-          source = "embeddings")(cellStats(lit(true)))
+          Seq("embeddings"))(cellStats(lit(true)))
         subtractCellStats(full, cellStats(bucket >= 90))
       }
       retracted.select(col("label"), col("n"),
@@ -2013,7 +2009,7 @@ object SimilarityOps {
     // index. Doubles roundtrip parquet exactly, so the persisted
     // means are bit-identical to the freshly-built ones.
     val cb = SideTables.getOrBuild(s, dir, s"pq_codebook_m$m",
-      source = "embeddings") {
+      Seq("embeddings")) {
       all
         .select(col("label"), col("v"),
           explode(sequence(lit(0), lit(m - 1))).as("sp"))
@@ -2052,7 +2048,7 @@ object SimilarityOps {
     // the first build every session's q84 reads the parquet codes and
     // never re-encodes the corpus.
     val codes = SideTables.getOrBuild(s, dir, s"pq_codes_m$m",
-      source = "embeddings") {
+      Seq("embeddings")) {
       subvecs(all).join(broadcast(cb), "sp")
         .withColumn("dist", l2fp(col("x"), col("cv")))
         .groupBy(col("vec_id"), col("sp"))
@@ -2137,7 +2133,7 @@ object SimilarityOps {
   private def pqBaseCodebook(s: SparkSession, dir: String, m: Int,
       sub: Int): DataFrame =
     SideTables.getOrBuild(s, dir, s"pq_codebook_base_m$m",
-      source = "embeddings") {
+      Seq("embeddings")) {
       pqSubvecs(s, dir, m, sub).filter(!col("is_shard"))
         .groupBy(col("label"), col("sp"))
         .agg(vecSum(col("x")).as("sx"), count(lit(1)).as("n"))
@@ -2178,11 +2174,11 @@ object SimilarityOps {
         val cb = pqBaseCodebook(s, dir, m, sub)
         val sv = pqSubvecs(s, dir, m, sub)
         val baseCodes = SideTables.getOrBuild(s, dir,
-          s"pq_codes_base_m$m", source = "embeddings") {
+          s"pq_codes_base_m$m", Seq("embeddings")) {
           pqEncode(s, sv.filter(!col("is_shard")), cb)
         }
         val merged = SideTables.getOrBuild(s, dir,
-          s"pq_codes_merged_m$m", source = "embeddings") {
+          s"pq_codes_merged_m$m", Seq("embeddings")) {
           baseCodes.unionByName(pqEncode(s, sv.filter(col("is_shard")), cb))
         }
         merged
@@ -2318,15 +2314,15 @@ object SimilarityOps {
         val cb = pqBaseCodebook(s, dir, m, sub)
         val sv = pqSubvecs(s, dir, m, sub)
         val baseCodes = SideTables.getOrBuild(s, dir,
-          s"pq_codes_base_m$m", source = "embeddings") {
+          s"pq_codes_base_m$m", Seq("embeddings")) {
           pqEncode(s, sv.filter(!col("is_shard")), cb)
         }
         val merged = SideTables.getOrBuild(s, dir,
-          s"pq_codes_merged_m$m", source = "embeddings") {
+          s"pq_codes_merged_m$m", Seq("embeddings")) {
           baseCodes.unionByName(pqEncode(s, sv.filter(col("is_shard")), cb))
         }
         val retained = SideTables.getOrBuild(s, dir,
-          s"pq_codes_retained_m$m", source = "embeddings") {
+          s"pq_codes_retained_m$m", Seq("embeddings")) {
           val b = hashBucket(col("vec_id"))
           merged.filter(!(b >= 40 && b < 50))
         }

@@ -532,12 +532,12 @@ object SketchOps {
         .select(col("l_returnflag").as("grp"), col("l_orderkey").as("ok"),
           md5(col("l_partkey").cast("string")).as("h"))
       val baseRegs = SideTables.getOrBuild(s, dir, "hll_regs_base",
-        "lineitem") {
+        Seq("lineitem")) {
         hllRho(li.filter(hashBucket(col("ok")) < 80))
           .groupBy(col("grp"), col("bucket")).agg(max(col("rho")).as("m"))
       }
       val mergedRegs = SideTables.getOrBuild(s, dir, "hll_regs_merged",
-        "lineitem") {
+        Seq("lineitem")) {
         val shardRegs = hllRho(li.filter(hashBucket(col("ok")) >= 80))
           .groupBy(col("grp"), col("bucket")).agg(max(col("rho")).as("m"))
         baseRegs.unionByName(shardRegs)
@@ -603,7 +603,7 @@ object SketchOps {
         .select(col("l_returnflag").as("grp"), col("l_orderkey").as("ok"),
           md5(col("l_partkey").cast("string")).as("h"))
       val epochRegs = SideTables.getOrBuild(s, dir, "hll_regs_epochs",
-        "lineitem") {
+        Seq("lineitem")) {
         hllRho(li.withColumn("part",
             floor(hashBucket(col("ok")) / 10).cast("long")))
           .groupBy(col("grp"), col("part"), col("bucket"))
@@ -681,7 +681,7 @@ object SketchOps {
         .select(col("l_returnflag").as("grp"), col("l_orderkey").as("ok"),
           md5(col("l_partkey").cast("string")).as("h"))
       val epochRegs = SideTables.getOrBuild(s, dir, "hll_regs_epochs",
-        "lineitem") {
+        Seq("lineitem")) {
         hllRho(li.withColumn("part",
             floor(hashBucket(col("ok")) / 10).cast("long")))
           .groupBy(col("grp"), col("part"), col("bucket"))
@@ -691,7 +691,7 @@ object SketchOps {
       // partition (part = -1); epochs 5..9 stay individually
       // retractable. Published as its own standing artifact.
       val compacted = SideTables.getOrBuild(s, dir, "hll_regs_compacted",
-        "lineitem") {
+        Seq("lineitem")) {
         epochRegs.withColumn("part",
             when(col("part") < 5, lit(-1L)).otherwise(col("part")))
           .groupBy(col("grp"), col("part"), col("bucket"))
