@@ -89,6 +89,17 @@ import org.apache.spark.sql.types.StructType
   * written. An absorb costs its loop's own delta-sized jobs plus one
   * write job per non-empty channel.
   *
+  * Driver cost — between batches the root's handle keeps what the
+  * last absorb listed, read and wrote: the committed head and its
+  * `_COMMIT` stamp, the committed list, the head manifest, the keep
+  * window's references, the `_EXPIRE`-marked versions with their mark
+  * times, and one payload slot for the loop ([[Standing.resident]],
+  * [[Standing.keep]]). The successor batch of an unchanged head then
+  * costs one `_COMMIT` probe instead of a listing, and its prune
+  * touches only versions whose status changes, so file-system calls
+  * per absorb stay flat however many versions the read lease holds
+  * (StandingGraphSpec counts them over 100 batches).
+  *
   * CLUSTER CONTRACT: like SideTables, `root` must be storage the
   * driver and every executor see at one path; all probes go through
   * the Hadoop FileSystem of the root's scheme.
@@ -148,7 +159,19 @@ object PartitionedArtifact {
       s: SparkSession, root: String,
       specs: Map[String, TableSpec],
       version: Option[Long],
-      manifest: Map[(String, Long), Seq[Ref]]) {
+      manifest: Map[(String, Long), Seq[Ref]],
+      /** the loop's payload for THIS version, as the absorb that wrote
+        * it passed it to [[keep]]; None whenever the root's handle did
+        * not hold (first absorb of a run, replay, debris, restart) */
+      val resident: Option[AnyRef] = None) {
+
+    private var kept: Option[AnyRef] = None
+    /** hand `payload` — describing the version this absorb writes — to
+      * the next absorb of the root. It survives only if the version
+      * commits; the absorb may have mutated [[resident]] to build it,
+      * since a failed absorb drops the handle that holds it. */
+    def keep(payload: AnyRef): Unit = kept = Some(payload)
+    private[PartitionedArtifact] def keptPayload: Option[AnyRef] = kept
 
     // partition values this handle's readParts calls have OPENED per
     // ByPart table — the read-side twin of the `_STATS` write counter:
@@ -370,21 +393,10 @@ object PartitionedArtifact {
 
   /** the newest committed state as a [[Standing]] handle. */
   def readLatestStanding(s: SparkSession, root: String,
-      specs: Map[String, TableSpec]): Standing =
-    standingAt(s, root, specs,
-      committedVersions(s, root).lastOption)
-
-  private def standingAt(s: SparkSession, root: String,
-      specs: Map[String, TableSpec], v: Option[Long]): Standing =
+      specs: Map[String, TableSpec]): Standing = {
+    val v = committedVersions(s, root).lastOption
     new Standing(s, root, specs, v,
       v.map(readManifest(s, root, _)).getOrElse(Map.empty))
-
-  /** the newest committed state, one full-view DataFrame per table
-    * (ByPart views still carry their partition column). */
-  def readLatestTables(s: SparkSession, root: String,
-      specs: Map[String, TableSpec]): Map[String, DataFrame] = {
-    val st = readLatestStanding(s, root, specs)
-    specs.keys.map(n => n -> st.table(n)).toMap
   }
 
   /** seed the loop from batch-built tables (version -1); ByPart
@@ -394,6 +406,7 @@ object PartitionedArtifact {
     require(tables.keySet == specs.keySet,
       s"bootstrap tables ${tables.keySet}, expected ${specs.keySet}")
     val s = tables.head._2.sparkSession
+    handles.remove(handleKey(s, root))
     require(committedVersions(s, root).isEmpty,
       s"partitioned-artifact root $root already has committed versions")
     writeVersion(s, root, -1L, specs, Map.empty,
@@ -413,7 +426,7 @@ object PartitionedArtifact {
       specs: Map[String, TableSpec],
       prevManifest: Map[(String, Long), Seq[Ref]],
       deltas: Map[String, Delta],
-      reads: Map[String, Long] = Map.empty): Unit = {
+      reads: Map[String, Long] = Map.empty): Map[(String, Long), Seq[Ref]] = {
     require(deltas.keySet == specs.keySet,
       s"absorb returned tables ${deltas.keySet}, expected ${specs.keySet}")
     val fs = fsFor(s, new Path(root))
@@ -497,6 +510,7 @@ object PartitionedArtifact {
       writeLines(fs, new Path(verDir, "_READS"),
         reads.toSeq.sortBy(_._1).map { case (t, n) => s"$t\t$n" })
     fs.create(commitMarker(root, v), true).close()
+    manifest
   }
 
   /** true when the optimizer proves `df` empty (its optimized plan
@@ -507,33 +521,97 @@ object PartitionedArtifact {
       case _ => false
     }
 
+  /** What one root's last absorb leaves on the driver for the next:
+    * the state a listing would re-derive, keyed on the committed head
+    * — Structured Streaming's in-memory state-store version, with the
+    * root on disk as the fallback. */
+  private final class Handle(
+      val head: Long,
+      /** `head`'s `_COMMIT` modification time */
+      val stamp: Long,
+      val manifest: Map[(String, Long), Seq[Ref]],
+      val ledger: Ledger,
+      val payload: Option[AnyRef])
+
+  /** The root's versions as [[prune]] sees them: every committed
+    * version (ascending), the version directories each manifest of the
+    * keep window references, the live set (kept or referenced), and
+    * the versions marked `_EXPIRE` with their mark times. */
+  private final case class Ledger(committed: Vector[Long],
+      keptRefs: Map[Long, Set[Long]], live: Set[Long],
+      pending: Map[Long, Long])
+
+  private val handles =
+    new java.util.concurrent.ConcurrentHashMap[String, Handle]()
+
+  private def handleKey(s: SparkSession, root: String): String = {
+    val p = new Path(root)
+    fsFor(s, p).makeQualified(p).toString
+  }
+
+  /** drop `root`'s handle: its next absorb lists the root, as after a
+    * restart. */
+  private[graft] def dropHandle(s: SparkSession, root: String): Unit =
+    handles.remove(handleKey(s, root))
+
+  private def commitStamp(fs: FileSystem, root: String,
+      v: Long): Option[Long] =
+    try Some(fs.getFileStatus(commitMarker(root, v)).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+
   /** one absorb step — the foreachBatch body, under the replay
     * contract above (committed id → reader-safe no-op; uncommitted
     * debris → recompute from the predecessor). The micro-batch stays
-    * persisted for the whole absorb (see the job budget above). */
+    * persisted for the whole absorb (see the job budget above).
+    *
+    * The root's [[Handle]] stands in for the listing when the batch
+    * is its head's successor, one probe finds the head's `_COMMIT`
+    * unchanged, and the call is not `firstOfRun`. Anything else — a
+    * replay, crash debris, a restart, an id mismatch, a root rewritten
+    * at the same path — lists the root as before, and the handle is
+    * rebuilt from what that absorb read and wrote. The handle is taken
+    * before the absorb runs, so one that throws leaves none. */
   def absorbBatch(batch: DataFrame, batchId: Long, root: String,
       specs: Map[String, TableSpec], firstOfRun: Boolean = false)
       (absorb: (Standing, DataFrame, Long) => Map[String, Delta]): Unit = {
     val s = batch.sparkSession
-    val committed = committedVersions(s, root)
+    val fs = fsFor(s, new Path(root))
+    val key = handleKey(s, root)
+    val held = Option(handles.remove(key)).filter(h => !firstOfRun &&
+      batchId == h.head + 1 && commitStamp(fs, root, h.head).contains(h.stamp))
+    val committed = held.fold(committedVersions(s, root).toVector)(
+      _.ledger.committed)
     guardCheckpointReset(batchId, committed, root)
     if (firstOfRun) guardFirstBatch(batchId, committed, root)
+    val manifests = collection.mutable.Map.empty[Long,
+      Map[(String, Long), Seq[Ref]]]
+    def manifestOf(v: Long) =
+      manifests.getOrElseUpdate(v, readManifest(s, root, v))
+    held.foreach(h => manifests(h.head) = h.manifest)
+    var payload: Option[AnyRef] = None
     if (!committed.contains(batchId)) {
       val prevV = committed.filter(_ < batchId).lastOption
-      val standing = standingAt(s, root, specs, prevV)
-      val prevManifest = prevV
-        .map(readManifest(s, root, _)).getOrElse(Map.empty)
+      val prevManifest = prevV.map(manifestOf).getOrElse(Map.empty)
+      val standing = new Standing(s, root, specs, prevV, prevManifest,
+        held.flatMap(_.payload))
       batch.persist()
       try {
         val deltas = compactFragmented(standing, prevManifest, specs,
           absorb(standing, batch, batchId))
         // the absorb and the compaction have built every plan by now,
         // so the handle's opened-partition log is complete
-        writeVersion(s, root, batchId, specs, prevManifest, deltas,
-          reads = standing.readsSnapshot)
+        manifests(batchId) = writeVersion(s, root, batchId, specs,
+          prevManifest, deltas, reads = standing.readsSnapshot)
+        payload = standing.keptPayload
       } finally { batch.unpersist(); () }
     }
-    prune(s, root, batchId, (committed :+ batchId).distinct.sorted)
+    val all = (committed :+ batchId).distinct.sorted
+    val ledger = prune(fs, root, batchId, held.fold(listLedger(fs, root,
+      batchId, all))(_.ledger.copy(committed = all)),
+      v => manifestOf(v).values.flatten.map(_.version).toSet)
+    if (batchId == ledger.committed.last)
+      commitStamp(fs, root, batchId).foreach(stamp => handles.put(key,
+        new Handle(batchId, stamp, manifestOf(batchId), ledger, payload)))
   }
 
   /** live-epoch ceiling of an epoch-partitioned table before its
@@ -646,34 +724,63 @@ object PartitionedArtifact {
     * Versions AHEAD of a replayed batch are never touched.
     *
     * TWO-PHASE under the read-lease: a newly dereferenced directory
-    * is first MARKED (`_EXPIRE`) and only deleted once the marker is
-    * at least [[pruneLeaseMs]] old — a reader whose plan predates the
+    * is first MARKED (`_EXPIRE`) and only deleted once the mark is at
+    * least [[pruneLeaseMs]] old — a reader whose plan predates the
     * dereference has the whole lease window to finish scanning, which
     * is the concurrent-reader guarantee `keepBehind` alone cannot
     * give across more than [[keepBehind]] absorbs. A version that
     * re-enters the kept/referenced set (a replay at a lower batch id)
-    * has any stale marker removed. `committed`: the versions listed at
-    * the absorb's start, plus `batchId` (one listing per absorb). */
-  private def prune(s: SparkSession, root: String, batchId: Long,
-      committed: Seq[Long]): Unit = {
-    val fs = fsFor(s, new Path(root))
-    val eligible = committed.filter(_ <= batchId)
-    val keep = eligible.takeRight(keepBehind + 1).toSet
-    val referenced = keep.flatMap(v =>
-      readManifest(s, root, v).values.flatten.map(_.version))
+    * has any stale mark removed.
+    *
+    * Incremental: the file system is touched only for versions whose
+    * live status changed (leaving `before.live`, re-entering it) or
+    * whose lease ended, so with a [[Handle]]'s ledger a prune costs
+    * O(changes), however many marked versions the lease holds.
+    * `refsOf` reads a manifest the ledger does not hold. */
+  private def prune(fs: FileSystem, root: String, batchId: Long,
+      before: Ledger, refsOf: Long => Set[Long]): Ledger = {
+    val keep = before.committed.filter(_ <= batchId).takeRight(keepBehind + 1)
+    val keptRefs = keep.map(v =>
+      v -> before.keptRefs.getOrElse(v, refsOf(v))).toMap
+    val live = keep.toSet ++ keptRefs.values.flatten
     val lease = pruneLeaseMs
-    eligible.foreach { v =>
-      val marker = new Path(s"$root/v=$v", "_EXPIRE")
-      if (keep(v) || referenced(v)) {
-        if (fs.exists(marker)) fs.delete(marker, false)
-      } else if (!fs.exists(marker)) {
-        if (lease <= 0L) fs.delete(new Path(root, s"v=$v"), true)
-        else fs.create(marker, true).close()
-      } else if (System.currentTimeMillis -
-          fs.getFileStatus(marker).getModificationTime >= lease) {
-        fs.delete(new Path(root, s"v=$v"), true)
-      }
+    val now = System.currentTimeMillis
+    def marker(v: Long) = new Path(s"$root/v=$v", "_EXPIRE")
+    var (committed, pending) = (before.committed, before.pending)
+    def delete(v: Long): Unit = {
+      fs.delete(new Path(root, s"v=$v"), true)
+      committed = committed.filterNot(_ == v)
+      pending -= v
     }
+    pending.keys.filter(live).foreach { v =>
+      fs.delete(marker(v), false)
+      pending -= v
+    }
+    before.live.filter(v => v <= batchId && !live(v) && !pending.contains(v))
+      .foreach { v =>
+        if (lease <= 0L) delete(v)
+        else {
+          fs.create(marker(v), true).close()
+          pending += v -> now
+        }
+      }
+    pending.collect { case (v, t) if v <= batchId && !live(v) &&
+      now - t >= lease => v }.foreach(delete)
+    Ledger(committed, keptRefs, live, pending)
+  }
+
+  /** the ledger a listing gives: every committed version at or below
+    * `batchId` not marked `_EXPIRE` is a candidate for dereference,
+    * and each marked one carries its mark's modification time. */
+  private def listLedger(fs: FileSystem, root: String, batchId: Long,
+      committed: Vector[Long]): Ledger = {
+    val eligible = committed.filter(_ <= batchId)
+    val pending = eligible.flatMap { v =>
+      try Some(v -> fs.getFileStatus(new Path(s"$root/v=$v", "_EXPIRE"))
+        .getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+    }.toMap
+    Ledger(committed, Map.empty, eligible.toSet -- pending.keys, pending)
   }
 
   /** start a maintenance loop with partition-scoped versions. */

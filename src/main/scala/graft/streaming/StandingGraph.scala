@@ -63,18 +63,25 @@ import PartitionedArtifact.{ByPart, PartsDelta, TableSpec, Whole, WholeDelta}
   * state equality).
   *
   * Job budget — per-batch JOBS are fixed and delta-sized too, beside
-  * the O(delta) I/O bound. A pure-insert batch within the gates (the
-  * steady state of an add-dominated stream) runs one size aggregate
-  * over the persisted micro-batch, three delta-sized collects (its
-  * distinct adds, its endpoints' standing labels, the dedupe probe)
-  * and the two channel writes: 11 jobs on a 2000-node giant component
-  * with 500-add batches, 12 with 5k–200k adds into 20k nodes
-  * (StandingGraphSpec pins the budget with a job listener). Batches
-  * with deletes, or past [[insertDriverMaxAdds]], take the
-  * distributed retract/merge path — 24 jobs for the same pure-insert
-  * batch forced onto it — where every gate is one
-  * `limit(n+1).collect()` probe while its side is driver-small
-  * ([[Gate.collectWithin]]).
+  * the O(delta) I/O bound. One `limit(n+1).collect()` probe fetches
+  * the micro-batch while it is within [[insertDriverMaxAdds]] rows and
+  * decides the path. A pure-insert batch (the steady state of an
+  * add-dominated stream) then runs on the DRIVER-RESIDENT graph the
+  * previous absorb kept in the root's handle ([[ResidentGraph]]):
+  * endpoint labels and the dedupe are hash lookups, and the fresh
+  * edges and the whole labels table are written from the driver — the
+  * probe plus the two channel writes, 3 jobs over a one-partition
+  * batch (StandingGraphSpec pins 4 over its two-partition batch, and
+  * 6 for the cold absorb that loads the resident graph, against 11
+  * before it). The resident graph is kept while labels plus edge keys
+  * fit [[Gate.fetchMaxRows]]; a miss loads every label and the edge
+  * keys of the partitions the batch touches, one collect each.
+  * Batches with deletes, past [[insertDriverMaxAdds]], or on a graph
+  * past the resident bound take the distributed retract/merge path —
+  * ~24 jobs for a pure-insert batch forced onto it — where every gate
+  * is one `limit(n+1).collect()` probe while its side is driver-small
+  * ([[Gate.collectWithin]]), and the next insert batch reloads the
+  * resident graph.
   */
 object StandingGraph {
 
@@ -93,30 +100,47 @@ object StandingGraph {
   private val absorb: (PartitionedArtifact.Standing, DataFrame, Long)
       => Map[String, PartitionedArtifact.Delta] =
     (standing, batch, _) => {
-      // ONE aggregate over the (persisted) micro-batch decides the
-      // fast paths and bounds every delta-sized join side below, so
-      // their broadcast gates cost no job: an add-dominated stream
-      // must not pay the retraction machinery's standing-state jobs
-      // for every delete-free batch, nor the merge's for a
-      // delete-only one
-      val sizes = batch.agg(
-        count(when(col("kind") === "add", 1)),
-        count(when(col("kind") === "del", 1))).head()
-      val (nAdds, nDels) = (sizes.getLong(0), sizes.getLong(1))
+      // ONE probe over the (persisted) micro-batch fetches it while it
+      // is within the driver insert gate and decides the paths from
+      // its rows; only a larger batch pays a size aggregate. An
+      // add-dominated stream must not pay the retraction machinery's
+      // standing-state jobs for every delete-free batch, nor the
+      // merge's for a delete-only one
+      val rows = Gate.collectWithin(batch.select(col("kind"),
+        col("src").cast("long"), col("dst").cast("long")), insertDriverMaxAdds)
+      val (nAdds, nDels) = rows match {
+        case Some(rs) => (rs.count(_.getString(0) == "add").toLong,
+          rs.count(_.getString(0) == "del").toLong)
+        case None =>
+          val sizes = batch.agg(
+            count(when(col("kind") === "add", 1)),
+            count(when(col("kind") === "del", 1))).head()
+          (sizes.getLong(0), sizes.getLong(1))
+      }
       val hasAdds = nAdds > 0
       val hasDels = nDels > 0
+      val pairs = rows.toSeq.flatten.filter(_.getString(0) == "add")
+        .map(r => (r.getLong(1), r.getLong(2))).distinct
+      val driverPath = rows.isDefined && !hasDels && 2 * nAdds <= Gate.ceiling
+      val resident =
+        if (!driverPath) None
+        else residentFor(standing, pairs.flatMap { case (a, b) => Seq(a, b) })
+      // an add-only graph past the resident bound says so to the next
+      // batch, which then skips the load
+      if (resident.isEmpty && !hasDels && (driverPath ||
+          standing.resident.contains(ResidentGraph.OverBound)))
+        standing.keep(ResidentGraph.OverBound)
       val dels = batch.filter(col("kind") === "del")
         .select(col("src").cast("long").as("node")).distinct()
       val adds = batch.filter(col("kind") === "add")
         .select(col("src").cast("long"), col("dst").cast("long"))
-      val labels0 = standing.table("labels")
-      if (!hasDels && !hasAdds)
+      lazy val labels0 = standing.table("labels")
+      if (resident.isDefined)
+        absorbInserts(batch.sparkSession, standing, resident.get, pairs)
+      else if (!hasDels && !hasAdds)
         Map("edges" -> PartsDelta(
             standing.readParts("edges", Seq.empty), Seq.empty),
           "labels" -> WholeDelta(labels0))
-      else if (!hasDels && nAdds <= insertDriverMaxAdds &&
-          2 * nAdds <= Gate.ceiling)
-        absorbInserts(standing, labels0, adds)
       else {
         // deletes against the predecessor state: the touched
         // components' partitions are the ONLY edge bytes the
@@ -263,69 +287,90 @@ object StandingGraph {
       .orElse(sys.props.get("graft.standing.driver.max.adds"))
       .map(_.toLong).getOrElse(200000L)
 
-  /** A pure-insert batch within [[insertDriverMaxAdds]] (and twice
-    * its add count within [[Gate.ceiling]]): the same merge law as
-    * [[PipelineOps.mergeDeltaComponents]], run over the batch's own
-    * rows. Endpoints map through their standing labels (one
-    * collect), the contracted delta is solved by union-by-min, and
-    * the moved and add-target label sets — both at most twice the
-    * batch, so within every gate — come straight off that solve. The
-    * dedupe probe is one more collect; fresh edges are written from
-    * the driver with their merged labels. Three small collects
-    * replace the distributed merge, contraction, split probe and
-    * re-key joins. */
-  private def absorbInserts(standing: PartitionedArtifact.Standing,
-      labels0: DataFrame, adds: DataFrame)
-      : Map[String, PartitionedArtifact.Delta] = {
-    val s = adds.sparkSession
-    val pairs = adds.distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+  /** The driver-resident graph covering the endpoints `ends`: the
+    * payload the previous absorb kept, or on a miss every label (one
+    * collect); then the edge keys of the endpoints' standing
+    * partitions not yet resident (one partition-pruned collect).
+    * None once labels and edges would pass [[Gate.fetchMaxRows]]. */
+  private def residentFor(standing: PartitionedArtifact.Standing,
+      ends: Seq[Long]): Option[ResidentGraph] = {
+    val held = standing.resident match {
+      case Some(r: ResidentGraph) => Some(r)
+      case Some(_) => None
+      case None =>
+        Gate.collectWithin(standing.table("labels"), Gate.fetchMaxRows)
+          .map { ls =>
+            val r = new ResidentGraph
+            ls.foreach(l => r.labels.put(l.getLong(0), value = l.getLong(1)))
+            r
+          }
+    }
+    held.flatMap { r =>
+      val missing = ends.filter(r.labels.contains(_))
+        .map(r.labels.getOrElse(_, 0L)).distinct.filterNot(r.parts.contains(_))
+      if (missing.isEmpty) Some(r)
+      else Gate.collectWithin(standing.readParts("edges", missing)
+          .select(col("src"), col("dst")), Gate.fetchMaxRows - r.rows)
+        .map { es =>
+          es.foreach(e => r.edges.put(e.getLong(0), e.getLong(1)))
+          missing.foreach(r.parts.put(_))
+          r
+        }
+    }
+  }
+
+  /** A pure-insert batch on the resident graph `r`: the same merge law
+    * as [[PipelineOps.mergeDeltaComponents]], run over the batch's own
+    * rows. Endpoints map through their resident labels, the
+    * contracted delta is solved by union-by-min, and the moved and
+    * add-target label sets — both at most twice the batch, so within
+    * every gate — come straight off that solve; the dedupe is a
+    * lookup in the resident edge keys. Fresh edges and the whole
+    * labels table are written from the driver. `r` then becomes the
+    * written version's payload. */
+  private def absorbInserts(s: SparkSession,
+      standing: PartitionedArtifact.Standing, r: ResidentGraph,
+      pairs: Seq[(Long, Long)]): Map[String, PartitionedArtifact.Delta] = {
     val ends = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
-    // standing label per endpoint; a node standing never held labels
-    // itself (= its own component of one)
-    val seen = labels0
-      .join(broadcast(longs(s, ends, "node")), Seq("node"), "left_semi")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def old(n: Long): Long = seen.getOrElse(n, n)
+    // a node the standing graph never held is its own component of one
+    def old(n: Long): Long = r.labels.getOrElse(n, n)
     val uf = new PipelineOps.MinUnionFind(pairs.size)
     pairs.foreach { case (a, b) => uf.union(old(a), old(b)) }
     def merged(n: Long): Long = uf.find(old(n))
     // REPLACE the standing labels the merge moved (their rows move
-    // out); the endpoints' merged labels are the read-only dedupe
-    // scope their fresh edges append to
-    val moved = ends.flatMap(seen.get).distinct.filter(l => uf.find(l) != l)
-    val appendScope = ends.map(merged).distinct.filterNot(moved.toSet)
+    // out); the endpoints' merged labels are the partitions their
+    // fresh edges append to
+    val moved = ends.filter(r.labels.contains(_)).map(old).distinct
+      .filter(l => uf.find(l) != l)
+    val movedSet = moved.toSet
     // broadcast side: driver-resident either way
     val relabel = broadcast(s.createDataFrame(moved.map(l => (l, uf.find(l))))
       .toDF("old", "merged"))
-    // a moved partition's rows all land in its winner's partition
-    val survivors = standing.readParts("edges", moved)
-    // fresh adds dedupe against every partition that could hold a
-    // standing copy (read once for the probe, never rewritten)
-    val dup = survivors.select(col("src"), col("dst"))
-      .unionByName(standing.readParts("edges", appendScope)
-        .select(col("src"), col("dst")))
-      .join(broadcast(s.createDataFrame(pairs).toDF("src", "dst")),
-        Seq("src", "dst"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fresh = pairs.filterNot(dup)
-      .map { case (a, b) => Row(a, b, merged(a)) }
-    val newNodes = ends.filterNot(seen.contains).map(n => Row(n, merged(n)))
-    // every written row carries a merge ROOT, never a moved label: the
-    // moved partitions are emptied (their rows append to the winners)
-    // and nothing is written through the replace channel
-    val rekeyed = survivors
+    val fresh = pairs.filterNot { case (a, b) => r.edges.contains(a, b) }
+    // every written row carries a merge ROOT, never a moved label: a
+    // moved partition's rows all land in its winner's partition, and
+    // nothing is written through the replace channel
+    val rekeyed = standing.readParts("edges", moved)
       .join(relabel, col("label") === col("old"))
       .select(col("src"), col("dst"), col("merged").as("label"))
-      .unionByName(PipelineOps.driverFrame(s, fresh, EdgeSchema))
-    val labels2 = labels0
-      .join(relabel, col("label") === col("old"), "left")
-      .select(col("node"), coalesce(col("merged"), col("label")).as("label"))
-      .unionByName(PipelineOps.driverFrame(s, newNodes, LabelSchema))
+      .unionByName(PipelineOps.driverFrame(s,
+        fresh.map { case (a, b) => Row(a, b, merged(a)) }, EdgeSchema))
+    // the resident graph becomes the version this batch writes
+    fresh.foreach { case (a, b) => r.edges.put(a, b) }
+    ends.map(merged).distinct.foreach(r.parts.put(_))
+    if (moved.nonEmpty)
+      r.labels.transformValues(l => if (movedSet(l)) uf.find(l) else l)
+    ends.filterNot(r.labels.contains(_))
+      .foreach(n => r.labels.put(n, value = uf.find(n)))
+    val labelRows = Seq.newBuilder[Row]
+    r.labels.foreach((n, l) => labelRows += Row(n, l))
+    standing.keep(
+      if (r.rows <= Gate.fetchMaxRows) r else ResidentGraph.OverBound)
     Map("edges" -> PartsDelta(
         s.createDataFrame(java.util.Collections.emptyList[Row](), EdgeSchema),
         moved, Some(rekeyed)),
-      "labels" -> WholeDelta(labels2))
+      "labels" -> WholeDelta(
+        PipelineOps.driverFrame(s, labelRows.result(), LabelSchema)))
   }
 
   /** the current (edges, labels) views — the label partitioning of

@@ -481,16 +481,6 @@ object Streams {
         })
   }
 
-  /** batch equivalent of the per-key limit (deterministic when an
-    * ordering column is given). */
-  def limitPerKeyBatch(df: DataFrame, n: Int, orderCol: String,
-      keys: Seq[String] = Seq("stream", "symbol")): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(col(orderCol))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= n).drop("__rn")
-  }
-
   /** T3 — tumbling event-time counts with a watermark (T2): the
     * kline-interval aggregation computed rather than consumed. */
   def tumblingCounts(events: DataFrame, tsCol: String, keyCol: String,
@@ -499,21 +489,6 @@ object Streams {
     events.withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen), col(keyCol))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-
-  /** T3 — sliding-window average. */
-  def slidingAvg(events: DataFrame, tsCol: String, keyCol: String,
-      windowLen: String = "5 minutes", slide: String = "1 minute",
-      watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen, slide), col(keyCol))
-      .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n"))
-
-  /** T3 — session windows (gap-based). */
-  def sessionCounts(events: DataFrame, tsCol: String, keyCol: String,
-      gap: String = "5 minutes", watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n"))
 
   /** A7 streaming — OHLCV candles from a trade stream; open/close via
     * min_by/max_by on the event-time (streaming-safe: no rank
