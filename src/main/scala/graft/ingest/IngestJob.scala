@@ -35,7 +35,11 @@ case class IngestConfig(
   * query and each micro-batch is partitioned work — per-key ordering
   * is preserved by the (stream, symbol) partitioning, global
   * throughput is executor-bound, and backpressure comes from source
-  * admission control instead of an unbounded queue.
+  * admission control instead of an unbounded queue. The source sizes
+  * a batch's partitions by bytes (Spark's file-source split rule over
+  * `spark.sql.files.*`): a trigger-sized batch is one task, which
+  * writes one file per (symbol, format). [[Sinks.fanOutBatch]]
+  * persists the batch once and writes it in each format.
   */
 object IngestJob {
 
@@ -75,11 +79,8 @@ object IngestJob {
         .outputMode("append")
         .option("checkpointLocation", s"${config.outputDir}/_ckpt/$stream")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.persist()
-          try config.formats.foreach { fmt =>
-            Sinks.writeKeyed(batch, s"${config.outputDir}/stream=$stream/fmt=$fmt",
-              fmt, partitionCols = Seq("symbol"))
-          } finally { batch.unpersist(); () }
+          Sinks.fanOutBatch(batch, s"${config.outputDir}/stream=$stream",
+            config.formats, partitionCols = Seq("symbol"))
         }
         .queryName(s"ingest-$stream")
         .start()

@@ -22,8 +22,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale notes: `partitionBy(stream, symbol)` gives partition pruning
   * on read; `maxRecordsPerFile` bounds file sizes without a
-  * repartition; fan-out persists the batch once instead of recomputing
-  * the plan per sink.
+  * repartition; a keyed write makes one file per (input partition,
+  * key), so file counts follow the source's byte-sized splits;
+  * fan-out persists the batch once instead of recomputing the plan
+  * per sink.
   */
 object Sinks {
 
@@ -51,11 +53,13 @@ object Sinks {
     w.partitionBy(partitionCols: _*).save(path)
   }
 
-  /** S11 — one batch, K formats; persist once, write K times. */
-  def fanOutBatch(df: DataFrame, basePath: String,
-      formats: Seq[String]): Unit = {
+  /** S11 — one batch, K formats under `basePath/fmt={format}`;
+    * persist once, write K times. */
+  def fanOutBatch(df: DataFrame, basePath: String, formats: Seq[String],
+      partitionCols: Seq[String] = Seq("stream", "symbol")): Unit = {
     df.persist()
-    try formats.foreach(f => writeKeyed(df, s"$basePath/fmt=$f", f))
+    try formats.foreach(f =>
+      writeKeyed(df, s"$basePath/fmt=$f", f, partitionCols = partitionCols))
     finally { df.unpersist(); () }
   }
 

@@ -6,11 +6,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -30,9 +32,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `path` — REPLAY: tail a line file. Offsets are line counts, so
   *    restart/recovery replays exactly (checkpoint-safe, exactly-once
   *    to idempotent sinks). `planInputPartitions` splits each batch's
-  *    line range across `numPartitions` executor-side readers — the
-  *    offline harness for the live source, and the scale path for
-  *    backfills.
+  *    line range by bytes with Spark's file-source rule
+  *    (`FilePartition.maxSplitBytes` over the session's
+  *    `spark.sql.files.{maxPartitionBytes,openCostInBytes,
+  *    minPartitionNum}`), sizing the batch as the index's mean line
+  *    bytes × frames: a trigger-sized batch is one reader, so a keyed
+  *    sink writes one file per key rather than one per (reader, key);
+  *    a batch past the split size gets one reader per split. This is
+  *    the offline harness for the live source.
   *  - `feed` — SOCKET-STYLE: frames arrive in a named in-JVM queue
   *    (`WsFeeds.push`), buffered driver-side and shipped inside the
   *    partition — the Spark-idiomatic shape for a non-replayable push
@@ -91,6 +98,8 @@ final class LineIndex(path: String, stride: Int = 4096) {
   private var cumBytes = 0L          // total bytes ever scanned (spec/metrics)
 
   def lines: Long = nLines
+  /** bytes of the complete lines scanned so far. */
+  def bytes: Long = scanPos
   /** cumulative bytes read by all refresh() calls — the tail-only
     * property is asserted on this in WsReplaySourceSpec. */
   def totalBytesScanned: Long = cumBytes
@@ -174,8 +183,6 @@ class WsReplayMicroBatchStream(props: Map[String, String])
   require(path.isDefined != feedName.isDefined,
     "exactly one of 'path' (replay) or 'feed' (socket-style) is required")
   private val maxPerTrigger = props.get("maxframespertrigger").map(_.toLong)
-  private val numPartitions =
-    props.get("numpartitions").map(_.toInt).getOrElse(4)
 
   /** socket-mode driver-side buffer: frames [committedBase, ...). */
   private val buffered = new ArrayBuffer[String]()
@@ -227,9 +234,9 @@ class WsReplayMicroBatchStream(props: Map[String, String])
     if (e <= s) return Array.empty
     path match {
       case Some(p) =>
-        // split the line range across executor-side readers; each
-        // partition carries a byte seek point + bounded line skip so
-        // readers never re-scan from byte 0
+        // split the line range into byte-sized executor-side readers;
+        // each partition carries a byte seek point + bounded line skip
+        // so readers never re-scan from byte 0
         val idx = index.get
         if (idx.lines < e) idx.refresh() // restart: rebuild index once
         // fail fast if the file shrank below a committed offset — a
@@ -240,21 +247,29 @@ class WsReplayMicroBatchStream(props: Map[String, String])
           s"replay file $p has ${idx.lines} complete lines but the " +
             s"batch plans through offset $e — file truncated or " +
             "replaced since the offset was committed")
-        val n = math.min(numPartitions.toLong, e - s).toInt
-        val step = (e - s + n - 1) / n
-        (0 until n).flatMap { i =>
-          val from = s + i * step
-          val until = math.min(from + step, e)
-          if (from < until) {
-            val (startByte, skip) = idx.seek(from)
-            Some(WsReplayPartition(p, startByte, skip, until - from))
-          } else None
+        val frames = e - s
+        val bytes = (idx.bytes.toDouble / idx.lines * frames).toLong // mean line × frames
+        val n = math.min(splits(bytes).toLong, frames).toInt
+        (0 until n).map { i =>
+          val (from, until) = (s + frames * i / n, s + frames * (i + 1) / n)
+          val (startByte, skip) = idx.seek(from)
+          WsReplayPartition(p, startByte, skip, until - from)
         }.toArray
       case None =>
         // ship the buffered slice (driver-side push source)
         val slice = buffered.slice((s - bufferedBase).toInt, (e - bufferedBase).toInt)
         Array(WsFeedPartition(slice.toArray))
     }
+  }
+
+  /** readers for a replay batch of `bytes`: Spark's file-source split
+    * size over the active session's `spark.sql.files.*` conf, charging
+    * the batch one `openCostInBytes` as a file scan charges each file. */
+  private def splits(bytes: Long): Int = {
+    val spark = SparkSession.active
+    val split = FilePartition.maxSplitBytes(spark,
+      bytes + spark.sessionState.conf.filesOpenCostInBytes)
+    ((bytes + split - 1) / split).toInt
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

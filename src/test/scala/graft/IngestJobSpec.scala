@@ -52,6 +52,41 @@ class IngestJobSpec extends SparkSpec {
     assert(new java.io.File(s"$out/stream=ticker/fmt=parquet/symbol=BTCUSDT").exists())
   }
 
+  /** data files under `dir`, per partition directory name. */
+  private def filesPer(dir: String, ext: String): Map[String, Int] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(ext))).toMap
+
+  test("a trigger-sized drain writes one file per (stream, symbol, format, trigger)") {
+    val syms = Seq("BTCUSDT", "ETHUSDT", "SOLUSDT")
+    // interleaved, so every trigger, and any split of one, holds every key
+    val frames = (1 to 20).flatMap(i => syms.flatMap(s =>
+      Seq(tickerFrame(s, i), tradeFrame(s, i))))
+    val replay = Files.createTempFile("ingest-files", ".jsonl")
+    Files.writeString(replay, frames.mkString("", "\n", "\n"))
+    val out = Files.createTempDirectory("ingest-files-out").toString
+    val perTrigger = frames.size / 2
+
+    val lines = spark.readStream.format("ws-replay")
+      .option("path", replay.toString)
+      .option("maxFramesPerTrigger", perTrigger.toString).load()
+    val queries = IngestJob.start(spark, lines, IngestConfig(symbols = syms,
+      loadTypes = Seq("ticker", "trades"), outputDir = out,
+      formats = Seq("parquet", "json")))
+    try queries.foreach(_.processAllAvailable())
+    finally queries.foreach(_.stop())
+
+    for (q <- queries) {
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.map(_.numInputRows).toSeq == Seq(perTrigger, perTrigger).map(_.toLong))
+    }
+    for (stream <- Seq("ticker", "trades"); (fmt, ext) <- Seq("parquet" -> ".parquet", "json" -> ".json")) {
+      val files = filesPer(s"$out/stream=$stream/fmt=$fmt", ext)
+      assert(files == syms.map(s => s"symbol=$s" -> 2).toMap, s"$stream/$fmt: $files")
+    }
+  }
+
   test("klines drain into stream=klines with the envelope's symbol as key") {
     val replay = Files.createTempFile("ingest-klines", ".jsonl")
     val frames = (1 to 3).map(i => klineFrame("BTCUSDT", i)) ++

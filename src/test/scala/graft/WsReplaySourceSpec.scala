@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.ingest.Projections
@@ -17,18 +20,94 @@ class WsReplaySourceSpec extends SparkSpec {
   private def envelopeLine(i: Int): String =
     s"""{"stream":"ticker","symbol":"BTCUSDT","data":"{\\"last_price\\":\\"$i.0\\",\\"event_time\\":$i}"}"""
 
+  /** a replay file of frames 10001..10000+n, all one length, so a
+    * batch of k frames is exactly k lines' bytes; returns the file and
+    * its line length. */
+  private def fixedWidthReplay(n: Int): (java.nio.file.Path, Int) = {
+    val lines = (1 to n).map(i => envelopeLine(10000 + i))
+    val f = Files.createTempFile("ws-split", ".jsonl")
+    Files.writeString(f, lines.mkString("", "\n", "\n"))
+    (f, lines.head.length + 1)
+  }
+
+  /** drains a ws-replay stream with `opts`; per batch, the partitions
+    * it planned (`batch.rdd.getNumPartitions`) and its frames. */
+  private def drainSplits(opts: (String, String)*): Seq[(Int, Seq[String])] = {
+    val seen = new ConcurrentLinkedQueue[(Long, Int, Seq[String])]()
+    val q = opts.foldLeft(spark.readStream.format("ws-replay")) {
+        case (r, (k, v)) => r.option(k, v) }
+      .load().writeStream
+      .option("checkpointLocation",
+        Files.createTempDirectory("ws-split-ckpt").toString)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        seen.add((id, batch.rdd.getNumPartitions, batch.as[String].collect().toSeq)); ()
+      }
+      .start()
+    q.processAllAvailable(); q.stop()
+    seen.asScala.toSeq.sortBy(_._1).map { case (_, n, frames) => (n, frames) }
+  }
+
+  /** runs `body` with the session's `spark.sql.files.*` split confs
+    * lowered, restoring the previous values after. */
+  private def withSplitConf[T](maxBytes: Long, openCost: Long)(body: => T): T = {
+    val keys = Seq("spark.sql.files.maxPartitionBytes" -> maxBytes,
+      "spark.sql.files.openCostInBytes" -> openCost)
+    val before = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v.toString) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("replay splits by bytes with the file-source rule; feeds stay one partition") {
+    val (f, lineBytes) = fixedWidthReplay(100)
+    val all = Files.readAllLines(f).asScala.toSeq
+    // default confs: a batch far below openCostInBytes (4 MB) is one reader
+    val plain = drainSplits("path" -> f.toString, "maxFramesPerTrigger" -> "60")
+    assert(plain.map(_._1) == Seq(1, 1))
+    assert(plain.flatMap(_._2).sorted == all.sorted)
+
+    val (maxBytes, openCost) = (1000L, 100L)
+    withSplitConf(maxBytes, openCost) {
+      // FilePartition.maxSplitBytes over one batch of `b` bytes
+      val cores = spark.sparkContext.defaultParallelism
+      def expected(frames: Int): Int = {
+        val b = frames.toLong * lineBytes
+        val split = math.min(maxBytes, math.max(openCost, (b + openCost) / cores))
+        ((b + split - 1) / split).toInt
+      }
+      val split = drainSplits("path" -> f.toString, "maxFramesPerTrigger" -> "60")
+      assert(split.map(_._1) == Seq(expected(60), expected(40)))
+      assert(split.map(_._1).forall(_ > 1))
+      // every frame exactly once across the byte-sized readers
+      assert(split.flatMap(_._2).sorted == all.sorted)
+
+      val feed = s"spec-split-feed-${System.nanoTime()}"
+      WsFeeds.push(feed, all: _*)
+      val fed = drainSplits("feed" -> feed)
+      assert(fed.map(_._1) == Seq(1))
+      assert(fed.flatMap(_._2) == all)
+    }
+  }
+
   test("replay mode reads all frames, honors maxFramesPerTrigger") {
     val f = Files.createTempFile("ws-replay", ".jsonl")
     Files.writeString(f, (1 to 97).map(envelopeLine).mkString("", "\n", "\n"))
-    val stream = spark.readStream.format("ws-replay")
-      .option("path", f.toString)
-      .option("maxFramesPerTrigger", "20")
-      .option("numPartitions", "3")
-      .load()
-    val q = stream.writeStream.format("memory").queryName("replayed")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    q.processAllAvailable(); q.stop()
+    // split sizes lowered so each batch is several seek-and-skip readers
+    val q = withSplitConf(maxBytes = 500, openCost = 100) {
+      val stream = spark.readStream.format("ws-replay")
+        .option("path", f.toString)
+        .option("maxFramesPerTrigger", "20")
+        .load()
+      val q = stream.writeStream.format("memory").queryName("replayed")
+        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      q.processAllAvailable(); q.stop()
+      q
+    }
     assert(spark.table("replayed").count() == 97)
+    assert(spark.table("replayed").distinct().count() == 97)
     // batches were rate-limited: recentProgress shows ≤20 rows per batch
     assert(q.recentProgress.forall(_.numInputRows <= 20))
   }
