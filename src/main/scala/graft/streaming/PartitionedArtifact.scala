@@ -1,8 +1,13 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.slf4j.LoggerFactory
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -98,7 +103,10 @@ import org.apache.spark.sql.types.StructType
   * costs one `_COMMIT` probe instead of a listing, and its prune
   * touches only versions whose status changes, so file-system calls
   * per absorb stay flat however many versions the read lease holds
-  * (StandingGraphSpec counts them over 100 batches).
+  * (StandingGraphSpec counts them over 100 batches). Readers keep the
+  * same per root: a read view of the committed head whose tables
+  * resolve once per version, trusted after one listing and one
+  * `_COMMIT` probe ([[readLatestStanding]]).
   *
   * CLUSTER CONTRACT: like SideTables, `root` must be storage the
   * driver and every executor see at one path; all probes go through
@@ -158,12 +166,15 @@ object PartitionedArtifact {
   final class Standing private[PartitionedArtifact] (
       s: SparkSession, root: String,
       specs: Map[String, TableSpec],
-      version: Option[Long],
+      /** the committed version this state is; None for an empty root */
+      val version: Option[Long],
       manifest: Map[(String, Long), Seq[Ref]],
       /** the loop's payload for THIS version, as the absorb that wrote
         * it passed it to [[keep]]; None whenever the root's handle did
         * not hold (first absorb of a run, replay, debris, restart) */
-      val resident: Option[AnyRef] = None) {
+      val resident: Option[AnyRef] = None,
+      /** a read view's state: [[table]] resolves each table once */
+      shared: Boolean = false) {
 
     private var kept: Option[AnyRef] = None
     /** hand `payload` — describing the version this absorb writes — to
@@ -189,10 +200,20 @@ object PartitionedArtifact {
       manifest.keys.collect { case (t, p) if t == table => p }
         .toSeq.sorted
 
+    // a read view's tables, resolved once per version: file index,
+    // schema and analyzed plan. Each call gets its own projection of
+    // the resolved plan, so concurrent readers share no QueryExecution
+    private val resolved = collection.mutable.Map.empty[String, DataFrame]
+
     /** the full current view of a table (all live partitions / the
       * newest whole copy). Zero-row table of the spec schema when
       * nothing is live. */
-    def table(name: String): DataFrame = specs(name).layout match {
+    def table(name: String): DataFrame =
+      if (!shared) resolve(name)
+      else resolved.synchronized(resolved.getOrElseUpdate(name, resolve(name)))
+        .select(specs(name).schema.fieldNames.toSeq.map(col): _*)
+
+    private def resolve(name: String): DataFrame = specs(name).layout match {
       case Whole => version match {
         case Some(v) =>
           val dir = s"$root/v=$v/$name"
@@ -310,18 +331,30 @@ object PartitionedArtifact {
           "Resuming needs the matching (root, checkpointLocation) pair.")
   }
 
+  /** the `v=` directory ids under `root` (one listing), ascending;
+    * none when the root is absent. */
+  private def versionDirs(fs: FileSystem, root: String): Seq[Long] =
+    try fs.listStatus(new Path(root)).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
+      .map(_.getPath.getName.stripPrefix("v=").toLong)
+      .sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
   /** committed version ids under `root`, ascending. */
   private[graft] def committedVersions(s: SparkSession,
       root: String): Seq[Long] = {
-    val rootP = new Path(root)
-    val fs = fsFor(s, rootP)
-    if (!fs.exists(rootP)) return Seq.empty
-    fs.listStatus(rootP).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .filter(v => fs.exists(commitMarker(root, v)))
-      .sorted
+    val fs = fsFor(s, new Path(root))
+    versionDirs(fs, root).filter(v => fs.exists(commitMarker(root, v)))
   }
+
+  /** the committed head of `root` and its `_COMMIT` stamp: one
+    * listing, then `_COMMIT` probes from the newest `v=` downward,
+    * stopping at the first hit — a probe per uncommitted directory
+    * above the head, however many versions the read lease keeps. */
+  private def committedHead(fs: FileSystem,
+      root: String): Option[(Long, Long)] =
+    versionDirs(fs, root).reverseIterator
+      .flatMap(v => commitStamp(fs, root, v).map(v -> _)).nextOption()
 
   // ---------------------------------------------------------------
   // manifest + stats files: tiny tab-separated UTF-8, written through
@@ -356,8 +389,8 @@ object PartitionedArtifact {
     * [[maxPartRefs]] compaction ceiling on. */
   private[graft] def partRefCounts(s: SparkSession, root: String,
       table: String): Map[Long, Int] =
-    committedVersions(s, root).lastOption match {
-      case Some(v) => readManifest(s, root, v).collect {
+    committedHead(fsFor(s, new Path(root)), root) match {
+      case Some((v, _)) => readManifest(s, root, v).collect {
         case ((t, p), refs) if t == table => p -> refs.size
       }.toMap
       case None => Map.empty
@@ -391,12 +424,79 @@ object PartitionedArtifact {
     }.toMap
   }
 
-  /** the newest committed state as a [[Standing]] handle. */
+  /** What a (session, root, specs) reader keeps between reads: the
+    * committed head, its `_COMMIT` stamp, and the [[Standing]] built
+    * for it, whose tables resolve once — the read-side twin of the
+    * absorb's [[Handle]]. Only the head is held. */
+  private final class View(val head: Long, val stamp: Long,
+      val standing: Standing)
+
+  private final case class ViewKey(s: SparkSession, root: String,
+      specs: Map[String, TableSpec])
+
+  private val views = new ConcurrentHashMap[ViewKey, View]()
+
+  private val viewCounts = new ConcurrentHashMap[String, LongAdder]()
+  private val log =
+    LoggerFactory.getLogger("graft.streaming.PartitionedArtifact")
+
+  /** read-view outcomes since the JVM started: `hit`, and
+    * `miss.<reason>` for each rebuild — `first_read` (no view of the
+    * root), `session` (the root has views, none for this session and
+    * specs), `new_head` (a newer version committed) and `stamp` (the
+    * head's `_COMMIT` is gone or rewritten). */
+  private[graft] def readViewCounts: Map[String, Long] =
+    viewCounts.asScala.map { case (k, n) => k -> n.sum }.toMap
+
+  private def tally(outcome: String): Unit =
+    viewCounts.computeIfAbsent(outcome, _ => new LongAdder).increment()
+
+  /** read views held for `s` — for specs of the release rules. */
+  private[graft] def readViews(s: SparkSession): Int =
+    views.keySet.asScala.count(_.s eq s)
+
+  /** the newest committed state as a [[Standing]] handle.
+    *
+    * Served from the root's read view when one listing finds no
+    * committed version above the view's head (crash debris and an
+    * in-flight absorb have no `_COMMIT`) and one probe finds the
+    * head's `_COMMIT` stamp unchanged — the absorb handle's check for
+    * a root rewritten at the same path. Anything else rebuilds the
+    * view for the head the listing found. Every lookup drops the views
+    * of stopped sessions, like [[graft.queries.Memo]]. */
   def readLatestStanding(s: SparkSession, root: String,
       specs: Map[String, TableSpec]): Standing = {
-    val v = committedVersions(s, root).lastOption
-    new Standing(s, root, specs, v,
-      v.map(readManifest(s, root, _)).getOrElse(Map.empty))
+    views.keySet.removeIf(_.s.sparkContext.isStopped)
+    val fs = fsFor(s, new Path(root))
+    val key = ViewKey(s, handleKey(s, root), specs)
+    val held = Option(views.get(key))
+    val head = committedHead(fs, root)
+    held match {
+      case Some(w) if head.contains((w.head, w.stamp)) =>
+        tally("hit")
+        w.standing
+      case _ =>
+        val reason = held match {
+          case Some(w) =>
+            if (head.exists(_._1 > w.head)) "new_head" else "stamp"
+          case None =>
+            if (views.keySet.asScala.exists(_.root == key.root)) "session"
+            else "first_read"
+        }
+        tally(s"miss.$reason")
+        log.debug(s"read view miss root=${key.root} reason=$reason " +
+          s"held=${held.map(_.head)} head=${head.map(_._1)}")
+        head match {
+          case Some((v, stamp)) =>
+            val st = new Standing(s, root, specs, Some(v),
+              readManifest(s, root, v), shared = true)
+            views.put(key, new View(v, stamp, st))
+            st
+          case None =>
+            views.remove(key)
+            new Standing(s, root, specs, None, Map.empty)
+        }
+    }
   }
 
   /** seed the loop from batch-built tables (version -1); ByPart
@@ -406,8 +506,8 @@ object PartitionedArtifact {
     require(tables.keySet == specs.keySet,
       s"bootstrap tables ${tables.keySet}, expected ${specs.keySet}")
     val s = tables.head._2.sparkSession
-    handles.remove(handleKey(s, root))
-    require(committedVersions(s, root).isEmpty,
+    dropHandle(s, root)
+    require(committedHead(fsFor(s, new Path(root)), root).isEmpty,
       s"partitioned-artifact root $root already has committed versions")
     writeVersion(s, root, -1L, specs, Map.empty,
       specs.map { case (n, spec) =>
@@ -541,18 +641,20 @@ object PartitionedArtifact {
       keptRefs: Map[Long, Set[Long]], live: Set[Long],
       pending: Map[Long, Long])
 
-  private val handles =
-    new java.util.concurrent.ConcurrentHashMap[String, Handle]()
+  private val handles = new ConcurrentHashMap[String, Handle]()
 
   private def handleKey(s: SparkSession, root: String): String = {
     val p = new Path(root)
     fsFor(s, p).makeQualified(p).toString
   }
 
-  /** drop `root`'s handle: its next absorb lists the root, as after a
-    * restart. */
-  private[graft] def dropHandle(s: SparkSession, root: String): Unit =
-    handles.remove(handleKey(s, root))
+  /** drop `root`'s handle and read views: its next absorb lists the
+    * root, as after a restart, and its next read rebuilds. */
+  private[graft] def dropHandle(s: SparkSession, root: String): Unit = {
+    val key = handleKey(s, root)
+    handles.remove(key)
+    views.keySet.removeIf(_.root == key)
+  }
 
   private def commitStamp(fs: FileSystem, root: String,
       v: Long): Option[Long] =

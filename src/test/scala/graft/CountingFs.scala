@@ -14,43 +14,48 @@ import org.apache.hadoop.util.Progressable
   * local executors alike. Specs bind it through their own Hadoop conf
   * ([[CountingFs.bind]]) and address a root as [[CountingFs.root]];
   * the cache is off, so every instance counts into the one shared
-  * counter. */
+  * counter. A call counts once, like one namenode request: the calls
+  * the local implementation makes inside it (a listing's status per
+  * child, a create's parent mkdirs) are not counted again. */
 class CountingFs extends RawLocalFileSystem {
-  import CountingFs.calls
+  import CountingFs.counted
 
   override def getUri: URI = CountingFs.Uri
   override def getScheme: String = CountingFs.Scheme
 
-  override def getFileStatus(p: Path): FileStatus = {
-    calls.incrementAndGet(); super.getFileStatus(p)
-  }
-  override def listStatus(p: Path): Array[FileStatus] = {
-    calls.incrementAndGet(); super.listStatus(p)
-  }
-  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
-    calls.incrementAndGet(); super.open(p, bufferSize)
-  }
+  override def getFileStatus(p: Path): FileStatus =
+    counted(super.getFileStatus(p))
+  // the local implementation answers without getFileStatus
+  override def exists(p: Path): Boolean = counted(super.exists(p))
+  override def listStatus(p: Path): Array[FileStatus] =
+    counted(super.listStatus(p))
+  override def open(p: Path, bufferSize: Int): FSDataInputStream =
+    counted(super.open(p, bufferSize))
   override def create(p: Path, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    calls.incrementAndGet()
-    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
-  }
-  override def delete(p: Path, recursive: Boolean): Boolean = {
-    calls.incrementAndGet(); super.delete(p, recursive)
-  }
-  override def rename(src: Path, dst: Path): Boolean = {
-    calls.incrementAndGet(); super.rename(src, dst)
-  }
-  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
-    calls.incrementAndGet(); super.mkdirs(p, permission)
-  }
+      progress: Progressable): FSDataOutputStream = counted(
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress))
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    counted(super.delete(p, recursive))
+  override def rename(src: Path, dst: Path): Boolean =
+    counted(super.rename(src, dst))
+  override def mkdirs(p: Path, permission: FsPermission): Boolean =
+    counted(super.mkdirs(p, permission))
 }
 
 object CountingFs {
   val Scheme = "cfs"
   private val Uri = URI.create(s"$Scheme:///")
   private val calls = new AtomicLong
+  // calls in progress on this thread: only the outermost one counts
+  private val depth = ThreadLocal.withInitial[Int](() => 0)
+
+  private def counted[T](call: => T): T = {
+    val d = depth.get
+    if (d == 0) calls.incrementAndGet()
+    depth.set(d + 1)
+    try call finally depth.set(d)
+  }
 
   /** route `cfs:` paths of `conf` to the counting file system. */
   def bind(conf: Configuration): Unit = {
