@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.queries.Q
+
 /** one multimodal asset: opaque binary payload + typed metadata.
   * The decoded representation never lives in the table — only bytes
   * and metadata do; decode happens inside partition-local batches. */
@@ -55,7 +57,7 @@ object Multimodal {
     * payloads — the harness has no real assets; schema and plumbing
     * are what's under test). */
   def mediaFromDocuments(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet").select(
+    Q.t(s, dir, "documents").select(
       col("doc_id").as("media_id"),
       col("text").cast("binary").as("content"),
       concat(lit("image/fake-"), col("lang")).as("mime"),

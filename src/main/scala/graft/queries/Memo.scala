@@ -1,6 +1,7 @@
 package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
 
@@ -8,8 +9,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session memo behind every shared query intermediate (the
   * basket/co-purchase graph, the shingle/band/TF tables, the
-  * transaction graphs, the quantized vectors): a value built once is
-  * reused by every later query on the same session and dataset.
+  * transaction graphs, the quantized vectors, the resolved dataset
+  * tables of [[Q.t]]): a value built once is reused by every later
+  * query on the same session and dataset.
   *
   *  - KEY: (session, name, dir), checked against
   *    [[SideTables.fingerprint]] (file names + sizes + mtimes) of the
@@ -28,7 +30,8 @@ import org.apache.spark.sql.SparkSession
   *    never release: each cached DataFrame references its session.
   *  - ATTRIBUTION: each build is recorded as a [[Build]]; `Bench`
   *    reports the builds inside each query's timed attempts as
-  *    `memo_built`.
+  *    `memo_built`. A lookup that finds its key's entry current is
+  *    counted as a hit of its name ([[hits]]).
   */
 object Memo {
 
@@ -48,13 +51,17 @@ object Memo {
   private val built = collection.mutable.ArrayBuffer.empty[Build]
   def builds: Seq[Build] = built.synchronized(built.toList)
 
+  private val served = new ConcurrentHashMap[String, LongAdder]()
+
   def apply[T <: AnyRef](s: SparkSession, dir: String, name: String,
       sources: Seq[String])(build: => T): T = {
     cells.keySet.removeIf(_.s.sparkContext.isStopped)
     val fp = SideTables.fingerprint(s, dir, sources)
     val cell = cells.compute(Key(s, name, dir), (_: Key, old: Cell) =>
-      if (old != null && old.fingerprint == fp) old
-      else new Cell(fp, () => {
+      if (old != null && old.fingerprint == fp) {
+        served.computeIfAbsent(name, _ => new LongAdder).increment()
+        old
+      } else new Cell(fp, () => {
         val t0 = System.nanoTime()
         val v = build
         built.synchronized(
@@ -63,6 +70,11 @@ object Memo {
       }))
     cell.value.asInstanceOf[T]
   }
+
+  /** lookups of `name`, over every session and dir, that found a
+    * current entry. */
+  private[graft] def hits(name: String): Long =
+    Option(served.get(name)).fold(0L)(_.sum)
 
   /** live entries held for `s` — for specs of the release rule. */
   private[graft] def entries(s: SparkSession): Int =

@@ -87,7 +87,7 @@ object MultimodalOps {
         import org.apache.spark.sql.expressions.Window
         val frames = Multimodal.frameOffsets(
           Multimodal.mediaFromDocuments(s, dir))
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Q.t(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         val f = frames.join(docs, col("media_id") === col("doc_id"))
           .select(col("media_id"), col("frame_idx"),
@@ -163,7 +163,7 @@ object MultimodalOps {
         import org.apache.spark.sql.expressions.Window
         val media = graft.multimodal.Multimodal.mediaFromDocuments(s, dir)
           .select(col("media_id"))
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Q.t(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         // 63 substring stripes per asset, summed IN PLACE (one row
         // per stripe, ~n/63 chars each) instead of exploding every

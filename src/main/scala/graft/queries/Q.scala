@@ -1,7 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.DecimalType
 
 /** One named query of the engine's operator surface: the Spark plan
@@ -30,9 +32,33 @@ object Q {
   /** Read one testdata table. Plain parquet scan — filters/projection
     * placed on top are pushed into the vectorized reader by Catalyst,
     * which is the whole 100 TB story: scan only the needed columns
-    * and row groups. */
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    * and row groups.
+    *
+    * The table is resolved once per session and file fingerprint:
+    * the analyzed relation of `s.read.parquet` (file index + schema,
+    * whose inference is one Spark job) is held in [[Memo]] under
+    * `table:<name>` plus the session's parquet read settings, checked
+    * against the table's [[SideTables.fingerprint]]. A table rewritten
+    * at the same path, or a flipped setting such as
+    * `spark.sql.parquet.binaryAsString`, resolves again. Each call
+    * returns a fresh instance of the relation with new attribute ids,
+    * so a query that reads one table twice (a self-join) stays
+    * unambiguous — the rebinding Spark's own catalog relation cache
+    * does for named tables. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val settings = s.conf.getAll.toSeq.collect {
+      case (k, v) if k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v"
+    }.sorted
+    val key = s"table:$name" +
+      (if (settings.isEmpty) "" else settings.mkString("[", ",", "]"))
+    val rel = Memo(s, dir, key, Seq(name)) {
+      Shim.analyzed(s.read.parquet(s"$dir/$name.parquet")) match {
+        case r: MultiInstanceRelation => r
+      }
+    }
+    Shim.ofRows(s, rel.newInstance())
+  }
 
   /** `events.ts` is normalized to an epoch-nanos LONG regardless of
     * how the parquet writer typed it: TIMESTAMP(NANOS) arrives as a

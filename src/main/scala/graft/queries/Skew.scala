@@ -35,6 +35,6 @@ object Skew {
   def registerTables(s: SparkSession, dir: String): Unit =
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { name =>
-      s.read.parquet(s"$dir/$name.parquet").createOrReplaceTempView(name)
+      Q.t(s, dir, name).createOrReplaceTempView(name)
     }
 }

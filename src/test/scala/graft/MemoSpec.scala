@@ -9,14 +9,24 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import org.apache.commons.io.FileUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
-import graft.queries.{Memo, PipelineOps, TextOps}
+import graft.queries.{Memo, PipelineOps, Q, TextOps}
 
 /** The session memo's policy: entries follow their source tables'
   * fingerprint, builds latch per key, a failed build is not cached,
-  * and a stopped session's entries are released. Every case runs
+  * and a stopped session's entries are released. The dataset table
+  * read `Q.t` is one of its entries: one resolution per session and
+  * file fingerprint, a fresh attribute-id instance per call, and a
+  * new resolution when the files or the session's parquet read
+  * settings change. Every case runs
   * under a timeout, so a deadlock fails the case instead of hanging
   * the suite. The release case stops the shared session, so it runs
   * last; later suites start a fresh one. */
@@ -151,6 +161,80 @@ class MemoSpec extends SparkSpec {
       assert(Set("lpa_labels", "co_purchase_edges", "basket_items",
         "brand_dict").subsetOf(built))
     } finally FileUtils.deleteDirectory(new File(dir))
+  }
+
+  test("a cold table read runs its one inference job, a warm read none") {
+    val dir = copyOf(sf())
+    try within(300) {
+      val (_, cold) = JobLog.during(spark)(Q.t(spark, dir, "lineitem"))
+      assert(cold.size == 1, cold)
+      assert(!cold.head.inSqlExecution, cold)
+      val keys = Memo.builds.filter(_.dir == dir).map(_.name)
+      assert(keys.size == 1 && keys.head.startsWith("table:lineitem"), keys)
+      val key = keys.head
+      val hits = Memo.hits(key)
+      val (warm, jobs) = JobLog.during(spark)(Q.t(spark, dir, "lineitem"))
+      assert(jobs.isEmpty, jobs)
+      assert(Memo.hits(key) == hits + 1)
+      assert(Memo.builds.count(_.dir == dir) == 1)
+      assert(warm.count() == spark.read.parquet(s"$dir/lineitem.parquet")
+        .count())
+    } finally FileUtils.deleteDirectory(new File(dir))
+  }
+
+  test("a self-join through two table reads resolves with distinct attributes") {
+    def ids(df: DataFrame) = df.queryExecution.analyzed.output.map(_.exprId)
+    def pairs(a: DataFrame, b: DataFrame): Long =
+      a.join(b, a("l_orderkey") === b("l_orderkey") &&
+        a("l_linenumber") < b("l_linenumber")).count()
+    def plain = spark.read.parquet(s"${sf()}/lineitem.parquet")
+    within(300) {
+      val a = Q.t(spark, sf(), "lineitem")
+      val b = Q.t(spark, sf(), "lineitem")
+      assert(ids(a).intersect(ids(b)).isEmpty)
+      val n = pairs(a, b)
+      assert(n > 0)
+      assert(n == pairs(plain, plain))
+    }
+  }
+
+  test("a table rewritten at the same path shows its new column on the next read") {
+    val dir = copyOf(sf())
+    try within(300) {
+      val before = Q.t(spark, dir, "region").columns.toSeq
+      rewrite(dir, "region")(_.withColumn("r_extra", lit(7L)))
+      val after = Q.t(spark, dir, "region")
+      assert(after.columns.toSeq == before :+ "r_extra")
+      assert(after.filter(col("r_extra") === 7L).count() == after.count())
+    } finally FileUtils.deleteDirectory(new File(dir))
+  }
+
+  test("flipping binaryAsString between two table reads changes the column's type") {
+    // written without Spark's schema metadata, which would take
+    // precedence over the setting
+    val dir = Files.createTempDirectory("graft-memo-blobs").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message blobs { required int64 id; required binary payload; }")
+    val w = ExampleParquetWriter
+      .builder(new Path(s"$dir/blobs.parquet/part-0.parquet"))
+      .withConf(new Configuration()).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("id", 1L).append("payload", "hi"))
+    finally w.close()
+    val setting = "spark.sql.parquet.binaryAsString"
+    val prior = spark.conf.getOption(setting)
+    try within(300) {
+      spark.conf.set(setting, "false")
+      assert(Q.t(spark, dir, "blobs").schema("payload").dataType ==
+        BinaryType)
+      spark.conf.set(setting, "true")
+      val text = Q.t(spark, dir, "blobs")
+      assert(text.schema("payload").dataType == StringType)
+      assert(text.head().getString(1) == "hi")
+    } finally {
+      prior.fold(spark.conf.unset(setting))(spark.conf.set(setting, _))
+      FileUtils.deleteDirectory(new File(dir))
+    }
   }
 
   // last: stops the shared session
