@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.fs.LocalFs
 import graft.model.Schemas
 import graft.sinks.Sinks
 import graft.streaming.{Envelope, Streams}
@@ -40,6 +41,12 @@ case class IngestConfig(
   * `spark.sql.files.*`): a trigger-sized batch is one task, which
   * writes one file per (symbol, format). [[Sinks.fanOutBatch]]
   * persists the batch once and writes it in each format.
+  *
+  * File creation: [[start]] first installs the fork-free local file
+  * system ([[graft.fs.LocalFs.install]]), so the sinks' files and the
+  * offset- and commit-log entries of every trigger are created
+  * without starting an OS process; the stock one runs `chmod` per
+  * file, `.crc` and directory, and `readlink` per log rename.
   */
 object IngestJob {
 
@@ -49,6 +56,7 @@ object IngestJob {
   def start(spark: SparkSession, lines: DataFrame,
       config: IngestConfig): Seq[StreamingQuery] = {
     import spark.implicits._
+    LocalFs.install(spark)
     val symbolSet = config.symbols.map(_.toUpperCase)
     config.loadTypes.map { stream =>
       val env = lines

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 
+import graft.fs.LocalFs
+
 /** Lineage cut for the iterative fixpoint loops (connected
   * components, PageRank, LPA, k-core peeling).
   *
@@ -44,8 +46,10 @@ object Ckpt {
         // scheme-qualified, UUID-suffixed path under the requested
         // dir, so equality against the raw knob would never match —
         // test containment of the configured prefix instead.
-        if (!sc.getCheckpointDir.exists(_.contains(d)))
+        if (!sc.getCheckpointDir.exists(_.contains(d))) {
+          LocalFs.install(df.sparkSession)
           sc.setCheckpointDir(d)
+        }
         df.checkpoint(eager)
       case None => df.localCheckpoint(eager)
     }

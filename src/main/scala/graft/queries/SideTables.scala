@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.fs.LocalFs
+
 /** Disk-backed side tables — the standing index artifacts a
   * production dedup/retrieval pipeline persists BETWEEN runs (band
   * index, sorted-shingle arrays, IVF coarse index, PQ codes),
@@ -71,8 +73,10 @@ object SideTables {
     .orElse(sys.env.get("GRAFT_SIDE_DIR"))
     .getOrElse(sys.props("java.io.tmpdir") + "/graft_side")
 
-  private def fsFor(s: SparkSession, p: Path): FileSystem =
+  private def fsFor(s: SparkSession, p: Path): FileSystem = {
+    LocalFs.install(s)
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
+  }
 
   /** side tables BUILT (not just read) by this JVM, as
     * `<name>@<key>` strings — Bench folds this into

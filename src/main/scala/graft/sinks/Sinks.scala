@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.fs.LocalFs
+
 /** Sink family of the reference engine (SURVEY.md §2.1 S4-S11)
   * re-expressed on Spark's writers:
   *
@@ -47,6 +49,7 @@ object Sinks {
   def writeKeyed(df: DataFrame, path: String, format: String = "parquet",
       maxRecordsPerFile: Int = RotationRecords,
       partitionCols: Seq[String] = Seq("stream", "symbol")): Unit = {
+    LocalFs.install(df.sparkSession)
     var w = df.write.format(format).mode(SaveMode.Append)
       .option("maxRecordsPerFile", maxRecordsPerFile.toLong)
     if (format == "csv") w = w.option("header", "true")
@@ -85,6 +88,7 @@ object Sinks {
     * Returns (filesBefore, filesAfter). */
   def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
       outDir: String, targetBytes: Long = 128L << 20): (Int, Int) = {
+    LocalFs.install(spark)
     val path = new org.apache.hadoop.fs.Path(inDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listFiles(path, true)
@@ -112,7 +116,8 @@ object Sinks {
     * exactly-once to files (strictly stronger than the reference's
     * at-most-once, SURVEY.md §2.9 T6). */
   def startFanOut(df: DataFrame, basePath: String, checkpoint: String,
-      formats: Seq[String]): StreamingQuery =
+      formats: Seq[String]): StreamingQuery = {
+    LocalFs.install(df.sparkSession)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -120,4 +125,5 @@ object Sinks {
         fanOutBatch(batch, basePath, formats)
       }
       .start()
+  }
 }

@@ -15,6 +15,8 @@ import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.fs.LocalFs
+
 /** Batch-id-versioned standing artifact with PARTITION-SCOPED
   * versions — the one layer under every foreachBatch maintenance loop
   * (the `Standing*` objects): a disk artifact whose version directory
@@ -106,7 +108,16 @@ import org.apache.spark.sql.types.StructType
   * (StandingGraphSpec counts them over 100 batches). Readers keep the
   * same per root: a read view of the committed head whose tables
   * resolve once per version, trusted after one listing and one
-  * `_COMMIT` probe ([[readLatestStanding]]).
+  * `_COMMIT` probe ([[readLatestStanding]]); the loops' `readLatest`
+  * maps resolve each table on first access ([[readLatestViews]]), so
+  * a reader of one table plans no other after a new head.
+  *
+  * Local roots — and the streaming checkpoint of [[maintain]] — go
+  * through [[graft.fs.LocalFs]], which every file-system lookup here
+  * installs first: a version's files, `.crc` sidecars and directories,
+  * and the checkpoint logs' renames, start no OS process (the stock
+  * local file system runs `chmod` per file and `readlink` per rename
+  * without `libhadoop`).
   *
   * CLUSTER CONTRACT: like SideTables, `root` must be storage the
   * driver and every executor see at one path; all probes go through
@@ -271,8 +282,10 @@ object PartitionedArtifact {
 
   private val keepBehind = 2
 
-  private def fsFor(s: SparkSession, p: Path): FileSystem =
+  private def fsFor(s: SparkSession, p: Path): FileSystem = {
+    LocalFs.install(s)
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
+  }
 
   private def commitMarker(root: String, v: Long) =
     new Path(s"$root/v=$v", "_COMMIT")
@@ -497,6 +510,36 @@ object PartitionedArtifact {
             new Standing(s, root, specs, None, Map.empty)
         }
     }
+  }
+
+  /** a loop's reader views of the newest committed state, each
+    * resolved on first access — a reader that touches one view plans
+    * no other. Every view reads the [[Standing]] of this call, never a
+    * head committed later. */
+  def readLatestViews(s: SparkSession, root: String,
+      specs: Map[String, TableSpec])
+      (views: (String, Standing => DataFrame)*): Map[String, DataFrame] = {
+    val st = readLatestStanding(s, root, specs)
+    new LazyViews(views.map { case (n, view) => n -> new LazyView(view(st)) }
+      .toMap)
+  }
+
+  private final class LazyView(view: => DataFrame) {
+    lazy val df: DataFrame = view
+  }
+
+  // the map's own keys and size answer without resolving a view
+  private final class LazyViews(views: Map[String, LazyView])
+      extends collection.immutable.AbstractMap[String, DataFrame] {
+    def get(k: String): Option[DataFrame] = views.get(k).map(_.df)
+    def iterator: Iterator[(String, DataFrame)] =
+      views.iterator.map { case (k, v) => k -> v.df }
+    override def contains(k: String): Boolean = views.contains(k)
+    override def keysIterator: Iterator[String] = views.keysIterator
+    override def size: Int = views.size
+    def removed(k: String): Map[String, DataFrame] = iterator.toMap - k
+    def updated[V >: DataFrame](k: String, v: V): Map[String, V] =
+      iterator.toMap.updated(k, v)
   }
 
   /** seed the loop from batch-built tables (version -1); ByPart
@@ -890,6 +933,7 @@ object PartitionedArtifact {
       specs: Map[String, TableSpec])
       (absorb: (Standing, DataFrame, Long) => Map[String, Delta])
       : StreamingQuery = {
+    LocalFs.install(stream.sparkSession)
     val first = new java.util.concurrent.atomic.AtomicBoolean(true)
     stream.writeStream
       .outputMode("append")

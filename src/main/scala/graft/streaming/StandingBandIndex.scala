@@ -183,14 +183,12 @@ object StandingBandIndex {
   /** the current (bands, collisions) views — the epoch partitioning
     * is internal; `collisions` is the summed pair table downstream
     * dedup consumes, bit-compatible with the batch artifact. */
-  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] = {
-    val st = PartitionedArtifact.readLatestStanding(s, root, Specs)
-    Map(
-      "bands" -> st.table("bands").drop("epoch"),
-      "collisions" -> st.table("collisions")
+  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] =
+    PartitionedArtifact.readLatestViews(s, root, Specs)(
+      "bands" -> (_.table("bands").drop("epoch")),
+      "collisions" -> (_.table("collisions")
         .groupBy(col("da"), col("db"))
-        .agg(sum(col("n_bands")).as("n_bands")))
-  }
+        .agg(sum(col("n_bands")).as("n_bands"))))
 
   /** seed from the batch-built standing index (epoch -1) — e.g. the
     * SideTables `band_index_base` / `band_collisions_base` pair. */

@@ -375,11 +375,10 @@ object StandingGraph {
 
   /** the current (edges, labels) views — the label partitioning of
     * the edge table is internal. */
-  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] = {
-    val st = PartitionedArtifact.readLatestStanding(s, root, Specs)
-    Map("edges" -> st.table("edges").select(col("src"), col("dst")),
-      "labels" -> st.table("labels"))
-  }
+  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] =
+    PartitionedArtifact.readLatestViews(s, root, Specs)(
+      "edges" -> (_.table("edges").select(col("src"), col("dst"))),
+      "labels" -> (_.table("labels")))
 
   /** seed from a batch-built graph: the edge list plus its solved
     * labeling (version -1); edges land in their components'

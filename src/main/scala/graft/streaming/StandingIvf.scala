@@ -152,11 +152,10 @@ object StandingIvf {
 
   /** the current views: `cells` (label, sv, n) — q278's artifact
     * shape — and `vec_ids` membership. */
-  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] = {
-    val st = PartitionedArtifact.readLatestStanding(s, root, Specs)
-    Map("cells" -> st.table("cells"),
-      "vec_ids" -> st.table("vecs").select(col("vec_id")))
-  }
+  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] =
+    PartitionedArtifact.readLatestViews(s, root, Specs)(
+      "cells" -> (_.table("cells")),
+      "vec_ids" -> (_.table("vecs").select(col("vec_id"))))
 
   /** seed from the batch-built per-cell statistics (q278's
     * `ivf_stats_full` shape) plus the ids they were built from. */

@@ -106,11 +106,10 @@ object StandingPq {
 
   /** the current views: the frozen `codebook` and the `codes` table
     * (vec_id, sp, code) — q269's merged-artifact shape. */
-  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] = {
-    val st = PartitionedArtifact.readLatestStanding(s, root, Specs)
-    Map("codebook" -> st.table("codebook"),
-      "codes" -> st.table("codes").drop("epoch"))
-  }
+  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] =
+    PartitionedArtifact.readLatestViews(s, root, Specs)(
+      "codebook" -> (_.table("codebook")),
+      "codes" -> (_.table("codes").drop("epoch")))
 
   /** seed from the batch-built artifacts: the frozen base codebook
     * and the base code table (epoch -1) — q269's

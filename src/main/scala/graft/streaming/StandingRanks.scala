@@ -183,19 +183,18 @@ object StandingRanks {
     * push state are internal; `edges` is the as-delivered directed
     * pair set, `ranks` the normalized (node, r, push_rounds) vector
     * with the LAST absorb's round count on every row. */
-  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] = {
-    val st = PartitionedArtifact.readLatestStanding(s, root, Specs)
-    val state = st.table("state")
-    val n = math.max(1L, state.count())
-    val rounds = col("push_rounds")
-    Map(
-      "edges" -> st.table("sym").filter(col("orig"))
-        .select(col("src"), col("dst")),
-      "ranks" -> PushRanks.normalized(
-          state.select(col("node"), col("p"), col("m"), col("deg")), n)
-        .join(state.select(col("node"), rounds), Seq("node"))
-        .select(col("node"), col("r"), col("push_rounds")))
-  }
+  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] =
+    PartitionedArtifact.readLatestViews(s, root, Specs)(
+      "edges" -> (_.table("sym").filter(col("orig"))
+        .select(col("src"), col("dst"))),
+      "ranks" -> { st =>
+        val state = st.table("state")
+        val n = math.max(1L, state.count())
+        PushRanks.normalized(
+            state.select(col("node"), col("p"), col("m"), col("deg")), n)
+          .join(state.select(col("node"), col("push_rounds")), Seq("node"))
+          .select(col("node"), col("r"), col("push_rounds"))
+      })
 
   /** seed from a batch-built directed edge set: symmetrizes, buckets,
     * and runs the one-off O(|E|) consistent-state construction plus a

@@ -186,14 +186,12 @@ object StandingTriangles {
 
   /** the current views: `adj` (node, nb) and the summed per-node
     * `counts` (node, tri) — q272's artifact shapes. */
-  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] = {
-    val st = PartitionedArtifact.readLatestStanding(s, root, Specs)
-    Map(
-      "adj" -> st.table("adj").select(col("node"), col("nb")),
-      "counts" -> st.table("counts")
+  def readLatest(s: SparkSession, root: String): Map[String, DataFrame] =
+    PartitionedArtifact.readLatestViews(s, root, Specs)(
+      "adj" -> (_.table("adj").select(col("node"), col("nb"))),
+      "counts" -> (_.table("counts")
         .groupBy(col("node")).agg(sum(col("tri")).as("tri"))
-        .filter(col("tri") =!= 0))
-  }
+        .filter(col("tri") =!= 0)))
 
   /** seed from the batch-built artifacts (q272's `tri_adj_base` /
     * `tri_counts_base` shapes). */

@@ -1,46 +1,54 @@
 package graft
 
 import java.net.URI
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, FSDataOutputStream, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+
+import graft.fs.LocalFs
 
 /** The local file system under a private scheme (`cfs:`) that counts
   * the namenode-style calls made through it — status probes,
   * listings, opens, creates, deletes, renames, mkdirs — driver and
-  * local executors alike. Specs bind it through their own Hadoop conf
-  * ([[CountingFs.bind]]) and address a root as [[CountingFs.root]];
+  * local executors alike — and logs the paths they name
+  * ([[CountingFs.paths]]). It extends the fork-free [[LocalFs]];
+  * permission calls are not counted. Specs bind it through their own
+  * Hadoop conf ([[CountingFs.bind]]) and address a root as
+  * [[CountingFs.root]];
   * the cache is off, so every instance counts into the one shared
   * counter. A call counts once, like one namenode request: the calls
   * the local implementation makes inside it (a listing's status per
   * child, a create's parent mkdirs) are not counted again. */
-class CountingFs extends RawLocalFileSystem {
+class CountingFs extends LocalFs {
   import CountingFs.counted
 
   override def getUri: URI = CountingFs.Uri
   override def getScheme: String = CountingFs.Scheme
 
   override def getFileStatus(p: Path): FileStatus =
-    counted(super.getFileStatus(p))
+    counted(p)(super.getFileStatus(p))
   // the local implementation answers without getFileStatus
-  override def exists(p: Path): Boolean = counted(super.exists(p))
+  override def exists(p: Path): Boolean = counted(p)(super.exists(p))
   override def listStatus(p: Path): Array[FileStatus] =
-    counted(super.listStatus(p))
+    counted(p)(super.listStatus(p))
   override def open(p: Path, bufferSize: Int): FSDataInputStream =
-    counted(super.open(p, bufferSize))
+    counted(p)(super.open(p, bufferSize))
   override def create(p: Path, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = counted(
+      progress: Progressable): FSDataOutputStream = counted(p)(
     super.create(p, overwrite, bufferSize, replication, blockSize, progress))
   override def delete(p: Path, recursive: Boolean): Boolean =
-    counted(super.delete(p, recursive))
+    counted(p)(super.delete(p, recursive))
   override def rename(src: Path, dst: Path): Boolean =
-    counted(super.rename(src, dst))
+    counted(src)(super.rename(src, dst))
   override def mkdirs(p: Path, permission: FsPermission): Boolean =
-    counted(super.mkdirs(p, permission))
+    counted(p)(super.mkdirs(p, permission))
 }
 
 object CountingFs {
@@ -49,10 +57,15 @@ object CountingFs {
   private val calls = new AtomicLong
   // calls in progress on this thread: only the outermost one counts
   private val depth = ThreadLocal.withInitial[Int](() => 0)
+  // the paths of counted calls, while a `paths` block runs
+  @volatile private var log: Option[ConcurrentLinkedQueue[String]] = None
 
-  private def counted[T](call: => T): T = {
+  private def counted[T](p: Path)(call: => T): T = {
     val d = depth.get
-    if (d == 0) calls.incrementAndGet()
+    if (d == 0) {
+      calls.incrementAndGet()
+      log.foreach(_.add(p.toString))
+    }
     depth.set(d + 1)
     try call finally depth.set(d)
   }
@@ -71,5 +84,16 @@ object CountingFs {
     val before = calls.get()
     val out = body
     (out, calls.get() - before)
+  }
+
+  /** runs `body` and returns its result with the path of every call
+    * it made, in call order. */
+  def paths[T](body: => T): (T, Seq[String]) = {
+    val q = new ConcurrentLinkedQueue[String]()
+    log = Some(q)
+    try {
+      val out = body
+      (out, q.asScala.toSeq)
+    } finally log = None
   }
 }

@@ -71,11 +71,17 @@ class IngestJobSpec extends SparkSpec {
     val lines = spark.readStream.format("ws-replay")
       .option("path", replay.toString)
       .option("maxFramesPerTrigger", perTrigger.toString).load()
-    val queries = IngestJob.start(spark, lines, IngestConfig(symbols = syms,
-      loadTypes = Seq("ticker", "trades"), outputDir = out,
-      formats = Seq("parquet", "json")))
-    try queries.foreach(_.processAllAvailable())
-    finally queries.foreach(_.stop())
+    var queries = Seq.empty[org.apache.spark.sql.streaming.StreamingQuery]
+    // the sinks' files and the checkpoint logs are created without
+    // starting an OS process (no `chmod`, no `readlink`)
+    val started = ProcessStarts.during {
+      queries = IngestJob.start(spark, lines, IngestConfig(symbols = syms,
+        loadTypes = Seq("ticker", "trades"), outputDir = out,
+        formats = Seq("parquet", "json")))
+      try queries.foreach(_.processAllAvailable())
+      finally queries.foreach(_.stop())
+    }
+    assert(started.isEmpty, s"${started.size} processes: ${started.distinct.take(5)}")
 
     for (q <- queries) {
       val batches = q.recentProgress.filter(_.numInputRows > 0)

@@ -90,6 +90,27 @@ class ReadViewSpec extends SparkSpec {
     assert(warm.distinct.size == 1, warm)
   }
 
+  test("reading only labels after a new head resolves no edges relation; a view read later serves its own version") {
+    CountingFs.bind(spark.sparkContext.hadoopConfiguration)
+    val root = CountingFs.root(tmp("rv-lazy"))
+    val base = (1 until 50).map(i => (i.toLong, (i / 2).toLong))
+    seed(root, base)
+    assert(labels(root).size == 50)
+    StandingGraph.absorbBatch(adds((100L, 3L)), 0L, root)
+    val (got, touched) = CountingFs.paths(labels(root))
+    assert(got(100L) == got(3L))
+    assert(touched.exists(_.contains("/labels")), touched)
+    assert(!touched.exists(_.contains("/edges")), touched)
+    // a map read before the next commit resolves its edges against
+    // the version it was read at
+    val held = StandingGraph.readLatest(spark, root)
+    StandingGraph.absorbBatch(adds((101L, 4L)), 1L, root)
+    assert(held("edges").as[(Long, Long)].collect().toSet ==
+      base.toSet + ((100L, 3L)))
+    assert(StandingGraph.readLatest(spark, root)("edges")
+      .as[(Long, Long)].collect().toSet == base.toSet ++ Set((100L, 3L), (101L, 4L)))
+  }
+
   test("a root rewritten or re-bootstrapped at the same path is read afresh") {
     val root = tmp("rv-reboot")
     seed(root, Seq((1L, 2L)))

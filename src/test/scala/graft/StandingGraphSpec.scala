@@ -321,9 +321,16 @@ class StandingGraphSpec extends SparkSpec {
     // an absorb's jobs, checked for what every absorb must hold
     def absorbed(rows: Seq[(String, Long, Long)], id: Long): Seq[JobLog.Job] = {
       rowsRead.reset()
-      val (_, jobs) = JobLog.during(spark)(
-        StandingGraph.absorbBatch(batch(rows), id, root))
+      var jobs = Seq.empty[JobLog.Job]
+      val started = ProcessStarts.during {
+        jobs = JobLog.during(spark)(
+          StandingGraph.absorbBatch(batch(rows), id, root))._2
+      }
       info(s"batch $id: ${jobs.size} jobs")
+      // the version's files are created without starting an OS
+      // process (no `chmod` per file, `.crc` and directory)
+      assert(started.isEmpty,
+        s"${started.size} processes: ${started.distinct.take(5)}")
       // the absorb shares its session with readers: it leaves the
       // session conf as it found it
       assert(spark.conf.getAll == conf0)
