@@ -5,12 +5,18 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.slf4j.LoggerFactory
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -92,9 +98,15 @@ import graft.fs.LocalFs
   * of the standing state carries the declared storage schema, so
   * planning one runs no schema-inference job (a committed version is
   * planned with zero jobs); `_STATS` row counts are observed on the
-  * writes themselves; and a channel the optimizer proves empty is not
-  * written. An absorb costs its loop's own delta-sized jobs plus one
-  * write job per non-empty channel.
+  * writes themselves; a partitioned channel the optimizer proves
+  * empty is not written (a Whole table always is, one empty file at
+  * least, so every version holds it); and a channel whose rows are
+  * already on the driver — an analyzed `LocalRelation` in the spec's
+  * column order — is written on the driver by Spark's own parquet
+  * writer, one file per partition value, with no job
+  * ([[writeOnDriver]]). An absorb costs its loop's own delta-sized
+  * jobs plus one write job per written channel whose rows are not on
+  * the driver.
   *
   * Driver cost — between batches the root's handle keeps what the
   * last absorb listed, read and wrote: the committed head and its
@@ -110,7 +122,12 @@ import graft.fs.LocalFs
   * resolve once per version, trusted after one listing and one
   * `_COMMIT` probe ([[readLatestStanding]]); the loops' `readLatest`
   * maps resolve each table on first access ([[readLatestViews]]), so
-  * a reader of one table plans no other after a new head.
+  * a reader of one table plans no other after a new head. After its
+  * `_COMMIT`, an absorb moves every view of the root read since the
+  * previous commit to the new head and resolves the tables that view
+  * had resolved ([[publish]]), so a reader of a busy root rebuilds
+  * nothing; a view left idle is not republished, and a crash before
+  * the publish leaves a view that the next read rebuilds.
   *
   * Local roots — and the streaming checkpoint of [[maintain]] — go
   * through [[graft.fs.LocalFs]], which every file-system lookup here
@@ -211,6 +228,19 @@ object PartitionedArtifact {
       manifest.keys.collect { case (t, p) if t == table => p }
         .toSeq.sorted
 
+    /** the partitions of a [[ByPart]] table this version compacts,
+      * ascending: those whose reference list reached [[maxPartRefs]].
+      * An absorb that holds such a partition's full rows may declare
+      * it in `replaced` and write them; the commit folds the rest
+      * ([[compactFragmented]]). */
+    def fragmented(table: String): Seq[Long] =
+      fragmentedParts.getOrElse(table, Seq.empty)
+
+    private lazy val fragmentedParts: Map[String, Seq[Long]] =
+      manifest.toSeq.collect { case ((t, p), refs)
+        if refs.size >= maxPartRefs => (t, p) }
+        .groupMap(_._1)(_._2).map { case (t, ps) => t -> ps.sorted }
+
     // a read view's tables, resolved once per version: file index,
     // schema and analyzed plan. Each call gets its own projection of
     // the resolved plan, so concurrent readers share no QueryExecution
@@ -221,8 +251,15 @@ object PartitionedArtifact {
       * nothing is live. */
     def table(name: String): DataFrame =
       if (!shared) resolve(name)
-      else resolved.synchronized(resolved.getOrElseUpdate(name, resolve(name)))
+      else resolvedTable(name)
         .select(specs(name).schema.fieldNames.toSeq.map(col): _*)
+
+    private[PartitionedArtifact] def resolvedTable(name: String): DataFrame =
+      resolved.synchronized(resolved.getOrElseUpdate(name, resolve(name)))
+
+    /** the tables this read view has resolved. */
+    private[PartitionedArtifact] def resolvedNames: Seq[String] =
+      resolved.synchronized(resolved.keys.toSeq)
 
     private def resolve(name: String): DataFrame = specs(name).layout match {
       case Whole => version match {
@@ -442,7 +479,11 @@ object PartitionedArtifact {
     * for it, whose tables resolve once — the read-side twin of the
     * absorb's [[Handle]]. Only the head is held. */
   private final class View(val head: Long, val stamp: Long,
-      val standing: Standing)
+      val standing: Standing) {
+    /** read since it was built or published: only such a view is
+      * published to the next head */
+    @volatile var read = false
+  }
 
   private final case class ViewKey(s: SparkSession, root: String,
       specs: Map[String, TableSpec])
@@ -487,6 +528,7 @@ object PartitionedArtifact {
     held match {
       case Some(w) if head.contains((w.head, w.stamp)) =>
         tally("hit")
+        w.read = true
         w.standing
       case _ =>
         val reason = held match {
@@ -503,7 +545,9 @@ object PartitionedArtifact {
           case Some((v, stamp)) =>
             val st = new Standing(s, root, specs, Some(v),
               readManifest(s, root, v), shared = true)
-            views.put(key, new View(v, stamp, st))
+            val w = new View(v, stamp, st)
+            w.read = true
+            views.put(key, w)
             st
           case None =>
             views.remove(key)
@@ -561,6 +605,13 @@ object PartitionedArtifact {
       })
   }
 
+  /** one version write's accounting for the per-batch record: the new
+    * manifest, one entry per channel written, and the ms spent on the
+    * table writes and on the manifest, stats and `_COMMIT` files. */
+  private final case class VersionLog(
+      manifest: Map[(String, Long), Seq[Ref]], channels: Seq[String],
+      writeMs: Long, manifestMs: Long)
+
   /** write one version: touched partitions + whole tables, then the
     * manifest, stats, and finally the commit marker. For bootstrap
     * ([[PartsDelta]] with empty `touched`), every partition present
@@ -569,9 +620,10 @@ object PartitionedArtifact {
       specs: Map[String, TableSpec],
       prevManifest: Map[(String, Long), Seq[Ref]],
       deltas: Map[String, Delta],
-      reads: Map[String, Long] = Map.empty): Map[(String, Long), Seq[Ref]] = {
+      reads: Map[String, Long] = Map.empty): VersionLog = {
     require(deltas.keySet == specs.keySet,
       s"absorb returned tables ${deltas.keySet}, expected ${specs.keySet}")
+    val t0 = System.nanoTime
     val fs = fsFor(s, new Path(root))
     val verDir = new Path(root, s"v=$v")
     // crash debris from a failed attempt at this id: nothing can have
@@ -579,40 +631,51 @@ object PartitionedArtifact {
     if (fs.exists(verDir)) fs.delete(verDir, true)
     var manifest = prevManifest
     val stats = collection.mutable.ArrayBuffer.empty[(String, Long)]
-    // write rows in storage order; the `_STATS` row count is observed
-    // on the write itself (no re-read, no extra job)
-    def writeCounted(rows: DataFrame, schema: StructType, tdir: String,
-        partCol: Option[String]): Long = {
-      val obs = Observation()
-      val w = rows.select(schema.fieldNames.toSeq.map(col): _*)
-        .observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
-      partCol.fold(w)(c => w.partitionBy(c)).parquet(tdir)
-      obs.get("n").asInstanceOf[Long]
-    }
-    // write one channel, return the partition values it produced
-    // bytes for plus their row count. A channel the optimizer proves
-    // empty is not written at all: it produces no partition, exactly
-    // as an executed empty write would
+    val channels = collection.mutable.ArrayBuffer.empty[String]
+    // write one channel in storage order, return the partition values
+    // it produced bytes for (none for a Whole table) plus its row
+    // count. Rows already on the driver are written there and counted
+    // from the rows; others by a job whose `_STATS` count is observed
+    // on the write itself (no re-read, no extra job). A partitioned
+    // channel the optimizer proves empty is not written at all: it
+    // produces no partition, exactly as an executed empty write would.
+    // A Whole table is always written, so its directory exists in
+    // every version the readers resolve
     def writeChannel(rows: DataFrame, schema: StructType,
-        partCol: String, tdir: String): (Seq[Long], Long) =
-      if (provablyEmpty(rows)) (Seq.empty, 0L)
-      else {
-        val n = writeCounted(rows, schema, tdir, Some(partCol))
-        val written = fs.listStatus(new Path(tdir)).toSeq
-          .filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .filter(_.startsWith(partCol + "="))
-          .map(_.stripPrefix(partCol + "=").toLong)
-        (written, n)
+        partCol: Option[String], tdir: String): (Seq[Long], Long) =
+      driverRows(rows, schema, partCol) match {
+        case Some(local) =>
+          val written = writeOnDriver(s, local, schema, tdir, partCol)
+          channels += s"${tdir.split('/').last} ${local.size} rows " +
+            s"${math.max(written.size, 1)} files driver"
+          (written, local.size.toLong)
+        case None if partCol.nonEmpty && provablyEmpty(rows) => (Seq.empty, 0L)
+        case None =>
+          val obs = Observation()
+          val w = rows.select(schema.fieldNames.toSeq.map(col): _*)
+            .observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+          partCol.fold(w)(c => w.partitionBy(c)).parquet(tdir)
+          val n = obs.get("n").asInstanceOf[Long]
+          val written = partCol.toSeq.flatMap(c =>
+            fs.listStatus(new Path(tdir)).toSeq
+              .filter(_.isDirectory)
+              .map(_.getPath.getName)
+              .filter(_.startsWith(c + "="))
+              .map(_.stripPrefix(c + "=").toLong))
+          // a job's file count takes a listing: paid for the record only
+          if (log.isDebugEnabled)
+            channels += s"${tdir.split('/').last} $n rows " +
+              s"${partFiles(fs, tdir)} files job"
+          (written, n)
       }
     specs.toSeq.sortBy(_._1).foreach { case (name, spec) =>
       val tdir = s"$root/v=$v/$name"
       (spec.layout, deltas(name)) match {
         case (Whole, WholeDelta(rows)) =>
-          stats += name -> writeCounted(rows, spec.schema, tdir, None)
+          stats += name -> writeChannel(rows, spec.schema, None, tdir)._2
         case (ByPart(partCol), PartsDelta(replace, replaced, append)) =>
           val (written, nRep) =
-            writeChannel(replace, spec.schema, partCol, tdir)
+            writeChannel(replace, spec.schema, Some(partCol), tdir)
           val replacedSet = replaced.toSet
           val writtenSet = written.toSet
           // replace rows for a partition not DECLARED in `replaced`
@@ -629,7 +692,7 @@ object PartitionedArtifact {
             written.map(p => (name, p) -> Seq(Ref(v, appended = false)))
           val nApp = append.map { ap =>
             val (appWritten, n) =
-              writeChannel(ap, spec.schema, partCol, s"$tdir.app")
+              writeChannel(ap, spec.schema, Some(partCol), s"$tdir.app")
             appWritten.foreach { p =>
               manifest = manifest.updated((name, p),
                 manifest.getOrElse((name, p), Seq.empty) :+
@@ -643,6 +706,7 @@ object PartitionedArtifact {
             s"returned ${d.getClass.getSimpleName}")
       }
     }
+    val t1 = System.nanoTime
     writeLines(fs, new Path(verDir, "_MANIFEST"),
       manifest.toSeq.sortBy { case ((t, p), _) => (t, p) }
         .map { case ((t, p), refs) =>
@@ -653,7 +717,16 @@ object PartitionedArtifact {
       writeLines(fs, new Path(verDir, "_READS"),
         reads.toSeq.sortBy(_._1).map { case (t, n) => s"$t\t$n" })
     fs.create(commitMarker(root, v), true).close()
-    manifest
+    VersionLog(manifest, channels.toSeq, (t1 - t0) / 1000000L,
+      (System.nanoTime - t1) / 1000000L)
+  }
+
+  /** `part-` files under `dir`, at any depth. */
+  private def partFiles(fs: FileSystem, dir: String): Int = {
+    val it = fs.listFiles(new Path(dir), true)
+    var n = 0
+    while (it.hasNext) if (it.next().getPath.getName.startsWith("part-")) n += 1
+    n
   }
 
   /** true when the optimizer proves `df` empty (its optimized plan
@@ -663,6 +736,66 @@ object PartitionedArtifact {
       case l: LocalRelation => l.data.isEmpty
       case _ => false
     }
+
+  /** `df`'s rows when they are already on the driver — its analyzed
+    * plan is a LocalRelation with `schema`'s columns in order and no
+    * null partition value, non-empty unless the table is Whole — the
+    * sibling case of [[provablyEmpty]], decided without a job. */
+  private def driverRows(df: DataFrame, schema: StructType,
+      partCol: Option[String]): Option[Seq[InternalRow]] =
+    df.queryExecution.analyzed match {
+      case l: LocalRelation if (l.data.nonEmpty || partCol.isEmpty) &&
+          l.output.map(a => (a.name, a.dataType)) ==
+            schema.fields.toSeq.map(f => (f.name, f.dataType)) &&
+          partCol.map(schema.fieldIndex)
+            .forall(i => l.data.forall(!_.isNullAt(i))) =>
+        Some(l.data)
+      case _ => None
+    }
+
+  /** Write driver-held `rows` (in `schema`'s column order) under
+    * `tdir` with Spark's own parquet writer — the
+    * `ParquetFileFormat.prepareWrite` factory and `OutputWriter` a
+    * write task runs, so the files are the ones a job would write: one
+    * file per partition value, the partition column dropped into the
+    * directory name as `partitionBy` does. No job runs, and no
+    * `_temporary` or `_SUCCESS` is made: the version's `_COMMIT` is
+    * the atomic publish, and an uncommitted version's files are
+    * deleted when its id is absorbed again. A Whole table is one
+    * file, with no rows if `rows` is empty. Returns the partition
+    * values written, ascending (none for a Whole table). */
+  private def writeOnDriver(s: SparkSession, rows: Seq[InternalRow],
+      schema: StructType, tdir: String, partCol: Option[String]): Seq[Long] = {
+    val pi = partCol.map(schema.fieldIndex)
+    val keep = schema.fields.indices.filterNot(pi.contains).toArray
+    val types = keep.map(schema.fields(_).dataType)
+    val dataSchema = StructType(keep.map(schema.fields(_)).toSeq)
+    val job = Job.getInstance(s.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(s, job, Map.empty, dataSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val file = s"part-00000-${java.util.UUID.randomUUID}.c000" +
+      factory.getFileExtension(ctx)
+    def write(dir: String, part: Seq[InternalRow]): Unit = {
+      val w = factory.newInstance(s"$dir/$file", dataSchema, ctx)
+      try part.foreach(r => w.write(
+        if (pi.isEmpty) r
+        else new GenericInternalRow(Array.tabulate[Any](keep.length)(j =>
+          r.get(keep(j), types(j))))))
+      finally w.close()
+    }
+    pi match {
+      case None =>
+        write(tdir, rows)
+        Seq.empty
+      case Some(i) =>
+        rows.groupBy(_.getLong(i)).toSeq.sortBy(_._1).map { case (p, ps) =>
+          write(s"$tdir/${partCol.get}=$p", ps)
+          p
+        }
+    }
+  }
 
   /** What one root's last absorb leaves on the driver for the next:
     * the state a listing would re-derive, keyed on the committed head
@@ -715,7 +848,15 @@ object PartitionedArtifact {
     * replay, crash debris, a restart, an id mismatch, a root rewritten
     * at the same path — lists the root as before, and the handle is
     * rebuilt from what that absorb read and wrote. The handle is taken
-    * before the absorb runs, so one that throws leaves none. */
+    * before the absorb runs, so one that throws leaves none. A version
+    * that becomes the head is published to the root's read views.
+    *
+    * Each batch logs one DEBUG record on
+    * `graft.streaming.PartitionedArtifact`: whether the handle held or
+    * the root was listed, each channel written (rows, files, on the
+    * driver or by a job), the partitions compacted and those the
+    * commit folded by a job, the views published, and the write,
+    * manifest, prune and publish ms. */
   def absorbBatch(batch: DataFrame, batchId: Long, root: String,
       specs: Map[String, TableSpec], firstOfRun: Boolean = false)
       (absorb: (Standing, DataFrame, Long) => Map[String, Delta]): Unit = {
@@ -734,6 +875,8 @@ object PartitionedArtifact {
       manifests.getOrElseUpdate(v, readManifest(s, root, v))
     held.foreach(h => manifests(h.head) = h.manifest)
     var payload: Option[AnyRef] = None
+    // the write's part of the per-batch record; None for a replay no-op
+    var written: Option[String] = None
     if (!committed.contains(batchId)) {
       val prevV = committed.filter(_ < batchId).lastOption
       val prevManifest = prevV.map(manifestOf).getOrElse(Map.empty)
@@ -741,23 +884,70 @@ object PartitionedArtifact {
         held.flatMap(_.payload))
       batch.persist()
       try {
-        val deltas = compactFragmented(standing, prevManifest, specs,
+        val (deltas, folded) = compactFragmented(standing, specs,
           absorb(standing, batch, batchId))
         // the absorb and the compaction have built every plan by now,
         // so the handle's opened-partition log is complete
-        manifests(batchId) = writeVersion(s, root, batchId, specs,
+        val vlog = writeVersion(s, root, batchId, specs,
           prevManifest, deltas, reads = standing.readsSnapshot)
+        manifests(batchId) = vlog.manifest
+        val compacted = specs.keys.toSeq.sorted.flatMap(t =>
+          standing.fragmented(t).filter(p => vlog.manifest.get((t, p))
+            .contains(Seq(Ref(batchId, appended = false)))).map(p => s"$t:$p"))
+        written = Some(s"wrote=${vlog.channels.mkString("[", "; ", "]")} " +
+          s"compacted=${compacted.mkString("[", ",", "]")} " +
+          s"folded=${folded.mkString("[", ",", "]")} " +
+          s"write_ms=${vlog.writeMs} manifest_ms=${vlog.manifestMs}")
         payload = standing.keptPayload
       } finally { batch.unpersist(); () }
     }
+    val t0 = System.nanoTime
     val all = (committed :+ batchId).distinct.sorted
     val ledger = prune(fs, root, batchId, held.fold(listLedger(fs, root,
       batchId, all))(_.ledger.copy(committed = all)),
       v => manifestOf(v).values.flatten.map(_.version).toSet)
-    if (batchId == ledger.committed.last)
-      commitStamp(fs, root, batchId).foreach(stamp => handles.put(key,
-        new Handle(batchId, stamp, manifestOf(batchId), ledger, payload)))
+    val t1 = System.nanoTime
+    val stamp =
+      if (batchId == ledger.committed.last) commitStamp(fs, root, batchId)
+      else None
+    stamp.foreach(st => handles.put(key,
+      new Handle(batchId, st, manifestOf(batchId), ledger, payload)))
+    val published = (for (st <- stamp; _ <- written)
+      yield publish(root, key, batchId, st, manifestOf(batchId))).getOrElse(0)
+    if (log.isDebugEnabled) {
+      val t2 = System.nanoTime
+      log.debug(s"absorb root=$key v=$batchId " +
+        s"handle=${if (held.isDefined) "held" else "listed"} " +
+        written.getOrElse("wrote=none (committed: replay no-op)") +
+        s" prune_ms=${(t1 - t0) / 1000000L} views=$published " +
+        s"publish_ms=${(t2 - t1) / 1000000L}")
+    }
   }
+
+  /** Move every read view of the root `key` that was read since its
+    * version was built or published to the new head `v`, and resolve
+    * in it the tables the view had resolved — on the writer, so a
+    * reader of a busy root serves each new head without rebuilding it.
+    * A view left idle is not republished: the writer does no work for
+    * readers that are not reading. A view a reader rebuilt meanwhile is
+    * kept, and a publish that fails leaves the old view, which the
+    * next read rebuilds. Returns the views published. */
+  private def publish(root: String, key: String, v: Long, stamp: Long,
+      manifest: Map[(String, Long), Seq[Ref]]): Int =
+    views.asScala.toSeq.count { case (k, w) =>
+      k.root == key && w.read && w.head < v && !k.s.sparkContext.isStopped &&
+      (try {
+        val st = new Standing(k.s, root, k.specs, Some(v), manifest,
+          shared = true)
+        w.standing.resolvedNames.foreach(st.resolvedTable)
+        views.replace(k, w, new View(v, stamp, st))
+      } catch {
+        case NonFatal(e) =>
+          log.warn(s"read view of $key not published to v=$v; " +
+            s"its next read rebuilds it: $e")
+          false
+      })
+    }
 
   /** live-epoch ceiling of an epoch-partitioned table before its
     * oldest epochs fold into the `-1` base. Env
@@ -802,32 +992,33 @@ object PartitionedArtifact {
     * folds ([[epochFoldSet]]) so it stays a
     * deterministic function of (predecessor manifest, batch deltas)
     * and therefore replay-safe: any partition whose reference list
-    * has reached [[maxPartRefs]] is PROMOTED from the append channel
-    * into the replace set for this version — its accumulated file
-    * sets are read once, rewritten as one, and the manifest collapses
-    * to a single reference. Compaction work per batch is bounded by
-    * the partitions that HIT the ceiling (a partition needs
-    * maxPartRefs appends to qualify again), so steady-state overhead
-    * is amortized O(partition size / maxPartRefs) per append — the
-    * classic LSM trade, chosen by the knob. */
+    * has reached [[maxPartRefs]] ([[Standing.fragmented]]) is
+    * rewritten as one file set this version, and the manifest
+    * collapses to a single reference. An absorb that holds such a
+    * partition's full rows declares it in `replaced` and writes them
+    * itself (on the driver, for [[StandingGraph]]'s resident graph);
+    * every other one is PROMOTED here from the append channel into the
+    * replace set — its accumulated file sets are read once and
+    * rewritten by a job. Compaction work per batch is bounded by the
+    * partitions that HIT the ceiling (a partition needs maxPartRefs
+    * appends to qualify again), so steady-state overhead is amortized
+    * O(partition size / maxPartRefs) per append — the classic LSM
+    * trade, chosen by the knob. Returns the deltas and, per table,
+    * the partitions folded here. */
   private def compactFragmented(standing: Standing,
-      prevManifest: Map[(String, Long), Seq[Ref]],
       specs: Map[String, TableSpec],
-      deltas: Map[String, Delta]): Map[String, Delta] =
-    deltas.map {
+      deltas: Map[String, Delta]): (Map[String, Delta], Seq[String]) = {
+    val out = deltas.map {
       case (name, PartsDelta(replace, replaced, append)) =>
         val partCol = specs(name).layout match {
           case ByPart(c) => c
           case Whole => null
         }
         val replacedSet = replaced.toSet
-        val frag = prevManifest.collect {
-          case ((t, p), refs)
-            if t == name && refs.size >= maxPartRefs &&
-              !replacedSet(p) => p
-        }.toSeq.sorted
-        if (partCol == null || frag.isEmpty) name ->
-          PartsDelta(replace, replaced, append)
+        val frag =
+          if (partCol == null) Seq.empty
+          else standing.fragmented(name).filterNot(replacedSet)
+        if (frag.isEmpty) (name -> PartsDelta(replace, replaced, append), Seq.empty)
         else {
           val spark = replace.sparkSession
           val fragDf = broadcast(spark.createDataset(frag)(
@@ -840,14 +1031,17 @@ object PartitionedArtifact {
               .join(fragDf, Seq(partCol), "left_semi")
               .select(specs(name).schema.fieldNames.toSeq.map(col): _*))
               .getOrElse(standing.readParts(name, Seq.empty)))
-          name -> PartsDelta(
+          (name -> PartsDelta(
             replace.select(specs(name).schema.fieldNames.toSeq
               .map(col): _*).unionByName(folded),
             (replaced ++ frag).distinct,
-            append.map(_.join(fragDf, Seq(partCol), "left_anti")))
+            append.map(_.join(fragDf, Seq(partCol), "left_anti"))),
+            frag.map(p => s"$name:$p"))
         }
-      case other => other
+      case other => (other, Seq.empty)
     }
+    (out.map(_._1).toMap, out.toSeq.flatMap(_._2).sorted)
+  }
 
   /** read-lease floor before a dereferenced version directory is
     * physically deleted — the loop-root twin of

@@ -71,6 +71,10 @@ private[streaming] object ResidentGraph {
     def foreach(f: (Long, Long) => Unit): Unit =
       (0 until cap).foreach(i => if (used(i)) f(a(i), v(i)))
 
+    /** every pair of a pair table. */
+    def foreachPair(f: (Long, Long) => Unit): Unit =
+      (0 until cap).foreach(i => if (used(i)) f(a(i), b(i)))
+
     private def grow(): Unit = {
       val (oa, ob, ov, ou) = (a, b, v, used)
       cap *= 2

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -44,9 +46,10 @@ import PartitionedArtifact.{ByPart, PartsDelta, TableSpec, Whole, WholeDelta}
   * exactly its fresh edges even on a GIANT-COMPONENT graph (where
   * "the touched component" is the whole table — the shape real
   * transaction graphs have); the `_STATS` counter machine-checks the
-  * bound per batch (StandingGraphSpec), and DeltaWriteProbe measures
-  * it at sf10. The labels table stays whole-per-version — it is the
-  * |V|-row small state the relabel math already scans. The
+  * bound per batch, and StandingGraphSpec re-reads each version's
+  * written bytes against it. The labels table stays
+  * whole-per-version — it is the |V|-row small state the relabel
+  * math already scans. The
   * touched-label sets ride
   * [[PipelineOps.relabelBroadcastMaxRows]]: a batch that touches
   * more components than the ceiling degrades to a whole-table
@@ -57,10 +60,10 @@ import PartitionedArtifact.{ByPart, PartsDelta, TableSpec, Whole, WholeDelta}
   * laws. Append fragmentation (one file set per appending version)
   * is BOUNDED by [[PartitionedArtifact.maxPartRefs]]: a partition
   * that reaches the reference ceiling compacts inline during the
-  * next absorb — promoted to the replace channel, rewritten as one
-  * file set, manifest collapsed — deterministically, so replays
-  * compact identically (StandingGraphSpec pins the ceiling and the
-  * state equality).
+  * next absorb — rewritten as one file set through the replace
+  * channel, manifest collapsed — deterministically, so replays
+  * compact identically (StandingGraphSpec pins the ceiling, one file
+  * per compacted partition and the state equality).
   *
   * Job budget — per-batch JOBS are fixed and delta-sized too, beside
   * the O(delta) I/O bound. One `limit(n+1).collect()` probe fetches
@@ -68,14 +71,16 @@ import PartitionedArtifact.{ByPart, PartsDelta, TableSpec, Whole, WholeDelta}
   * decides the path. A pure-insert batch (the steady state of an
   * add-dominated stream) then runs on the DRIVER-RESIDENT graph the
   * previous absorb kept in the root's handle ([[ResidentGraph]]):
-  * endpoint labels and the dedupe are hash lookups, and the fresh
-  * edges and the whole labels table are written from the driver — the
-  * probe plus the two channel writes, 3 jobs over a one-partition
-  * batch (StandingGraphSpec pins 4 over its two-partition batch, and
-  * 6 for the cold absorb that loads the resident graph, against 11
-  * before it). The resident graph is kept while labels plus edge keys
-  * fit [[Gate.fetchMaxRows]]; a miss loads every label and the edge
-  * keys of the partitions the batch touches, one collect each.
+  * endpoint labels and the dedupe are hash lookups, and every channel
+  * — the fresh edges, the moved partitions' rows, the whole labels
+  * table and the compacted partitions' full rows — is built from
+  * driver-held rows, which the commit writes on the driver with no
+  * job. A warm insert batch is the probe alone: 1 job over a
+  * one-partition batch (StandingGraphSpec pins 2 over its
+  * two-partition batch, and 4 for the cold absorb that loads the
+  * resident graph). The resident graph is kept while labels plus edge
+  * keys fit [[Gate.fetchMaxRows]]; a miss loads every label and the
+  * edge keys of the partitions the batch touches, one collect each.
   * Batches with deletes, past [[insertDriverMaxAdds]], or on a graph
   * past the resident bound take the distributed retract/merge path —
   * ~24 jobs for a pure-insert batch forced onto it — where every gate
@@ -325,9 +330,15 @@ object StandingGraph {
     * contracted delta is solved by union-by-min, and the moved and
     * add-target label sets — both at most twice the batch, so within
     * every gate — come straight off that solve; the dedupe is a
-    * lookup in the resident edge keys. Fresh edges and the whole
-    * labels table are written from the driver. `r` then becomes the
-    * written version's payload. */
+    * lookup in the resident edge keys. Every channel is built from
+    * rows the driver holds, as a local relation the commit writes on
+    * the driver with no job: the fresh edges, the moved partitions'
+    * rows rekeyed from the resident edges (every endpoint's partition
+    * is resident), the whole labels table, and the full rows of each
+    * resident partition this version compacts
+    * ([[PartitionedArtifact.Standing.fragmented]]), declared replaced
+    * so the commit folds none of them with a job.
+    * `r` then becomes the written version's payload. */
   private def absorbInserts(s: SparkSession,
       standing: PartitionedArtifact.Standing, r: ResidentGraph,
       pairs: Seq[(Long, Long)]): Map[String, PartitionedArtifact.Delta] = {
@@ -343,18 +354,24 @@ object StandingGraph {
     val moved = ends.filter(r.labels.contains(_)).map(old).distinct
       .filter(l => uf.find(l) != l)
     val movedSet = moved.toSet
-    // broadcast side: driver-resident either way
-    val relabel = broadcast(s.createDataFrame(moved.map(l => (l, uf.find(l))))
-      .toDF("old", "merged"))
+    // resident partitions due for compaction are rewritten whole
+    // through the replace channel; a moved one is dropped instead
+    val compact = standing.fragmented("edges")
+      .filter(p => r.parts.contains(p) && !movedSet(p))
+    val compactSet = compact.toSet
     val fresh = pairs.filterNot { case (a, b) => r.edges.contains(a, b) }
     // every written row carries a merge ROOT, never a moved label: a
-    // moved partition's rows all land in its winner's partition, and
-    // nothing is written through the replace channel
-    val rekeyed = standing.readParts("edges", moved)
-      .join(relabel, col("label") === col("old"))
-      .select(col("src"), col("dst"), col("merged").as("label"))
-      .unionByName(PipelineOps.driverFrame(s,
-        fresh.map { case (a, b) => Row(a, b, merged(a)) }, EdgeSchema))
+    // moved partition's rows all land in its winner's partition
+    val (replaceRows, appendRows) = (Seq.newBuilder[Row], Seq.newBuilder[Row])
+    def route(a: Long, b: Long, label: Long): Unit =
+      (if (compactSet(label)) replaceRows else appendRows) += Row(a, b, label)
+    if (moved.nonEmpty || compact.nonEmpty)
+      r.edges.foreachPair { (a, b) =>
+        val l = old(a)
+        val m = if (movedSet(l)) uf.find(l) else l
+        if (m != l || compactSet(m)) route(a, b, m)
+      }
+    fresh.foreach { case (a, b) => route(a, b, merged(a)) }
     // the resident graph becomes the version this batch writes
     fresh.foreach { case (a, b) => r.edges.put(a, b) }
     ends.map(merged).distinct.foreach(r.parts.put(_))
@@ -366,11 +383,11 @@ object StandingGraph {
     r.labels.foreach((n, l) => labelRows += Row(n, l))
     standing.keep(
       if (r.rows <= Gate.fetchMaxRows) r else ResidentGraph.OverBound)
-    Map("edges" -> PartsDelta(
-        s.createDataFrame(java.util.Collections.emptyList[Row](), EdgeSchema),
-        moved, Some(rekeyed)),
-      "labels" -> WholeDelta(
-        PipelineOps.driverFrame(s, labelRows.result(), LabelSchema)))
+    def local(rows: Seq[Row], schema: StructType): DataFrame =
+      s.createDataFrame(rows.asJava, schema)
+    Map("edges" -> PartsDelta(local(replaceRows.result(), EdgeSchema),
+        moved ++ compact, Some(local(appendRows.result(), EdgeSchema))),
+      "labels" -> WholeDelta(local(labelRows.result(), LabelSchema)))
   }
 
   /** the current (edges, labels) views — the label partitioning of

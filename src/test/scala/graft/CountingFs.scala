@@ -21,6 +21,7 @@ import graft.fs.LocalFs
   * permission calls are not counted. Specs bind it through their own
   * Hadoop conf ([[CountingFs.bind]]) and address a root as
   * [[CountingFs.root]];
+  * a spec can make listings fail ([[CountingFs.failingListings]]);
   * the cache is off, so every instance counts into the one shared
   * counter. A call counts once, like one namenode request: the calls
   * the local implementation makes inside it (a listing's status per
@@ -36,7 +37,11 @@ class CountingFs extends LocalFs {
   // the local implementation answers without getFileStatus
   override def exists(p: Path): Boolean = counted(p)(super.exists(p))
   override def listStatus(p: Path): Array[FileStatus] =
-    counted(p)(super.listStatus(p))
+    counted(p) {
+      if (CountingFs.failing(p.toString))
+        throw new java.io.IOException(s"listing of $p failed on purpose")
+      super.listStatus(p)
+    }
   override def open(p: Path, bufferSize: Int): FSDataInputStream =
     counted(p)(super.open(p, bufferSize))
   override def create(p: Path, overwrite: Boolean, bufferSize: Int,
@@ -59,6 +64,8 @@ object CountingFs {
   private val depth = ThreadLocal.withInitial[Int](() => 0)
   // the paths of counted calls, while a `paths` block runs
   @volatile private var log: Option[ConcurrentLinkedQueue[String]] = None
+  // the paths whose listings fail, while a `failingListings` block runs
+  @volatile private var failing: String => Boolean = _ => false
 
   private def counted[T](p: Path)(call: => T): T = {
     val d = depth.get
@@ -84,6 +91,13 @@ object CountingFs {
     val before = calls.get()
     val out = body
     (out, calls.get() - before)
+  }
+
+  /** runs `body` with every listing of a path that `matches` failing
+    * with an IOException — a fault injected at one step of a write. */
+  def failingListings[T](matches: String => Boolean)(body: => T): T = {
+    failing = matches
+    try body finally failing = _ => false
   }
 
   /** runs `body` and returns its result with the path of every call

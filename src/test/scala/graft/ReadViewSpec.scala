@@ -156,11 +156,12 @@ class ReadViewSpec extends SparkSpec {
     assert(cold.version.contains(1L))
     assert(c2 == Map("miss.first_read" -> 1L))
     assert(labelsOf(cold.table("labels")) == head)
-    // the absorb of id 2 replaces the debris and commits
+    // the absorb of id 2 replaces the debris, commits, and publishes
+    // the view read above to its version
     StandingGraph.absorbBatch(adds((3L, 10L)), 2L, root)
     val (next, c3) = viewed(latest(spark, root))
     assert(next.version.contains(2L))
-    assert(c3 == Map("miss.new_head" -> 1L))
+    assert(c3 == Map("hit" -> 1L))
     assert(labelsOf(next.table("labels")).values.toSet == Set(1L))
   }
 
@@ -176,6 +177,49 @@ class ReadViewSpec extends SparkSpec {
     assert(st.version.contains(0L))
     assert(c == Map("miss.stamp" -> 1L))
     assert(labelsOf(st.table("labels")) == v0)
+  }
+
+  test("a view read since the previous commit is published to the next head; an idle one is not") {
+    val root = tmp("rv-idle")
+    seed(root, Seq((1L, 2L)))
+    assert(labels(root) == Map(1L -> 1L, 2L -> 1L))
+    // the view was read: the commit moves it to v=0, labels resolved
+    StandingGraph.absorbBatch(adds((2L, 3L)), 0L, root)
+    // no read since: the commit of v=1 leaves the view at v=0, so
+    // the writer does no work for an idle reader
+    StandingGraph.absorbBatch(adds((3L, 4L)), 1L, root)
+    val (got, c1) = viewed(labels(root))
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    assert(c1 == Map("miss.new_head" -> 1L))
+    StandingGraph.absorbBatch(adds((4L, 5L)), 2L, root)
+    val (next, c2) = viewed(latest(spark, root))
+    assert(next.version.contains(2L))
+    assert(c2 == Map("hit" -> 1L))
+    assert(labelsOf(next.table("labels")).keySet == (1L to 5L).toSet)
+  }
+
+  test("a publish that fails after _COMMIT leaves readers on a view that the next read rebuilds") {
+    CountingFs.bind(spark.sparkContext.hadoopConfiguration)
+    val root = CountingFs.root(tmp("rv-publish"))
+    seed(root, Seq((1L, 2L)))
+    StandingGraph.absorbBatch(adds((2L, 3L)), 0L, root)
+    assert(labels(root) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    // the publish of v=1 resolves its labels table, whose first listing
+    // is made after the _COMMIT. Failing it fails the publish alone:
+    // the publish logs it, and the absorb returns normally, committed
+    val absorbed = scala.util.Try(CountingFs.failingListings(
+      _.contains("/v=1/labels"))(
+      StandingGraph.absorbBatch(adds((3L, 4L)), 1L, root)))
+    assert(absorbed.isSuccess, absorbed)
+    assert(PartitionedArtifact.committedVersions(spark, root).last == 1L)
+    val (got, c1) = viewed(latest(spark, root))
+    assert(got.version.contains(1L))
+    assert(c1 == Map("miss.new_head" -> 1L))
+    assert(labelsOf(got.table("labels")) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    // the rebuilt view is published again by the next commit
+    StandingGraph.absorbBatch(adds((4L, 5L)), 2L, root)
+    assert(viewed(latest(spark, root))._2 == Map("hit" -> 1L))
   }
 
   test("a second session reads the same root through its own view") {

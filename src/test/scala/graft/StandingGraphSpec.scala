@@ -118,6 +118,32 @@ class StandingGraphSpec extends SparkSpec {
     assert(PartitionedArtifact.committedVersions(spark, root) == Seq(0L, 1L))
   }
 
+  test("an empty labels table is still written: a graph emptied by deletes, or bootstrapped empty, stays readable") {
+    val none = Seq.empty[(String, Long, Long)].toDF("kind", "src", "dst")
+    // every node deleted, then an empty batch: the driver path writes
+    // an empty labels table, which the next absorb and reads resolve
+    val emptied = tmp("sg-emptied")
+    StandingGraph.absorbBatch(adds((1L, 2L)), 0L, emptied)
+    StandingGraph.absorbBatch(
+      Seq(("del", 1L, -1L), ("del", 2L, -1L)).toDF("kind", "src", "dst"),
+      1L, emptied)
+    StandingGraph.absorbBatch(none, 2L, emptied)
+    assert(labels(emptied).isEmpty && edges(emptied).isEmpty)
+    StandingGraph.absorbBatch(adds((3L, 4L)), 3L, emptied)
+    assert(labels(emptied) == Map(3L -> 3L, 4L -> 3L))
+    assert(edges(emptied) == Set((3L, 4L)))
+    // a bootstrap from an empty edge list, then an empty batch
+    val fresh = tmp("sg-empty-boot")
+    val base = Seq.empty[(Long, Long)].toDF("src", "dst")
+    StandingGraph.bootstrap(base, PipelineOps.connectedComponents(base), fresh)
+    assert(labels(fresh).isEmpty && edges(fresh).isEmpty)
+    StandingGraph.absorbBatch(none, 0L, fresh)
+    assert(labels(fresh).isEmpty && edges(fresh).isEmpty)
+    StandingGraph.absorbBatch(adds((5L, 6L)), 1L, fresh)
+    assert(labels(fresh) == Map(5L -> 5L, 6L -> 5L))
+    assert(edges(fresh) == Set((5L, 6L)))
+  }
+
   test("re-adding standing edges never accretes duplicates, in both gate regimes") {
     // the edge-set invariant is maintained by a shard-side anti probe
     // (standing is never shuffled); a re-add of an edge that is
@@ -236,6 +262,61 @@ class StandingGraphSpec extends SparkSpec {
     } finally System.clearProperty("graft.artifact.max.part.refs")
   }
 
+  test("resident partitions compact on the driver at the ref ceiling: one file each, within the warm budget") {
+    // at a ceiling of 2, a partition one version appends to compacts in
+    // the next, so warm insert batches compact every other batch. Every
+    // partition here is resident, so each compaction is written from
+    // the driver's rows, with no job and in one file
+    System.setProperty("graft.artifact.max.part.refs", "2")
+    try {
+      val root = tmp("sg-compact-resident")
+      val base = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L))
+      val df = base.toDF("src", "dst")
+      StandingGraph.bootstrap(df, PipelineOps.connectedComponents(df), root)
+      def batch(es: Seq[(Long, Long)]): DataFrame = spark.sparkContext
+        .parallelize(es.map { case (a, b) => ("add", a, b) }, 2)
+        .toDF("kind", "src", "dst")
+      // batch 0 (cold) loads both standing components; batches 2 and 6
+      // merge a fresh component into component 1, and batch 4 bridges
+      // the two standing ones, so partition 10 moves into partition 1
+      val batches = Seq(
+        Seq((3L, 20L), (12L, 30L)),
+        Seq((20L, 21L), (30L, 31L), (40L, 41L)),
+        Seq((21L, 22L), (31L, 32L), (41L, 1L)),
+        Seq((22L, 23L), (32L, 33L)),
+        Seq((23L, 33L), (50L, 51L)),
+        Seq((33L, 34L), (51L, 52L)),
+        Seq((34L, 35L), (52L, 2L)),
+        Seq((35L, 36L)))
+      var all = base.toSet
+      var compacted = 0
+      batches.zipWithIndex.foreach { case (es, i) =>
+        val (_, jobs) = JobLog.during(spark)(
+          StandingGraph.absorbBatch(batch(es), i.toLong, root))
+        if (i > 0) assert(jobs.size <= PureInsertWarmJobBudget,
+          s"batch $i:\n${jobs.mkString("\n")}")
+        all ++= es
+        assert(edges(root) == all, s"batch $i")
+        val uf = new PipelineOps.MinUnionFind(all.size)
+        all.foreach { case (a, b) => uf.union(a, b) }
+        assert(labels(root) == all.flatMap { case (a, b) => Seq(a, b) }
+          .map(n => n -> uf.find(n)).toMap, s"batch $i")
+        // no partition is left past the ceiling
+        val refs = PartitionedArtifact.partRefCounts(spark, root, "edges")
+        assert(refs.values.max <= 2, s"batch $i: $refs")
+        // an insert batch replaces only the partitions it compacts (a
+        // moved one is dropped with no rows): each is one parquet file
+        Option(new java.io.File(s"$root/v=$i/edges").listFiles())
+          .toSeq.flatten.foreach { dir =>
+            val files = dir.list().filter(_.endsWith(".parquet"))
+            assert(files.length == 1, s"batch $i ${dir.getName}: ${files.toSeq}")
+            compacted += 1
+          }
+      }
+      assert(compacted >= 4, s"$compacted compactions")
+    } finally System.clearProperty("graft.artifact.max.part.refs")
+  }
+
   test("a reader planned before a prune still scans: dereferenced dirs honor the lease") {
     implicit val sqlCtx = spark.sqlContext
     val root = tmp("sg-lease")
@@ -274,16 +355,16 @@ class StandingGraphSpec extends SparkSpec {
 
   /** Spark jobs the first pure-insert absorb after a bootstrap may
     * start on a giant-component graph, when the root's handle is cold:
-    * the micro-batch probe, the labels and edge-partition collects
-    * that load the resident graph, and the two channel writes — within
-    * the 11 the absorb ran before the graph was resident. */
-  private val PureInsertColdJobBudget = 11
+    * the micro-batch probe (two jobs over this spec's two-partition
+    * batch) and the labels and edge-partition collects that load the
+    * resident graph. Its channels are written on the driver. */
+  private val PureInsertColdJobBudget = 4
 
   /** ... and every later one, on the resident graph: the micro-batch
-    * probe (two jobs over this spec's two-partition batch, as a limit
-    * scans one partition first) and the two channel writes. Without
-    * the resident graph a warm absorb ran the cold budget. */
-  private val PureInsertWarmJobBudget = 4
+    * probe alone (two jobs over this spec's two-partition batch, as a
+    * limit scans one partition first); every channel, compactions
+    * included, is written on the driver. */
+  private val PureInsertWarmJobBudget = 2
 
   /** jobs of the delete batch below as measured before the resident
     * graph: the retraction path is unchanged, and its size aggregate
@@ -598,6 +679,16 @@ class StandingGraphSpec extends SparkSpec {
     // round of _EXPIRE marks (batch 9 + 8k)
     val (first, last) = (calls.slice(24, 34), calls.takeRight(10))
     assert(last.sum <= first.sum, s"first ${first.sum}, last ${last.sum}")
+    // absolute ceilings after the cold batch: the head's _COMMIT probe,
+    // the debris probe, one file per driver-written channel (the append,
+    // or at a compaction the partition's one file; the labels),
+    // _MANIFEST, _STATS, _READS, _COMMIT and its stamp — 9 calls; the
+    // batch that marks the versions a compaction dereferenced
+    // (batch 9 + 8k) adds one `_EXPIRE` create per mark — 17
+    ids.drop(1).foreach { i =>
+      val ceiling = if (i % 8 == 1) 17 else 9
+      assert(calls(i.toInt) <= ceiling, s"batch $i: ${calls(i.toInt)} calls")
+    }
     val want = (base.as[(Long, Long)].collect() ++ ids.flatMap { i =>
       val n = 1000L + 3 * i
       Seq((n, i % 300), (n + 1, n), (n + 2, 7L))
@@ -607,15 +698,19 @@ class StandingGraphSpec extends SparkSpec {
 
   test("property: random batches, replays, crash debris and restarts track a from-scratch solve") {
     // 10 generated runs of at most 5 batches each over a 16-node id
-    // space. Each batch is adds only (the resident path) or mixes in
-    // deletes (the distributed path); after it, one action:
+    // space, and 4 more at a compaction ceiling of 2 references, where
+    // insert batches compact resident partitions on the driver. Each
+    // batch is adds only (the resident path) or mixes in deletes (the
+    // distributed path); after it, one action:
     //   0 nothing; 1 replay the committed id with other rows (no-op);
     //   2 the head loses its _COMMIT and the id is absorbed again with
     //     other rows; 3 the head loses its _COMMIT and the run moves on
     //     to the next id (its rows are gone); 4 debris of the NEXT id —
     //     a table written, or a table and the manifest, no _COMMIT;
     //   5 the handle is dropped (a restart); 6 the root is deleted and
-    //     bootstrapped afresh at the same path, ids restarting at 0.
+    //     bootstrapped afresh at the same path, ids restarting at 0;
+    //   7 debris of the NEXT id from a driver write cut short: a
+    //     partial parquet file under its `edges.app`, no _COMMIT.
     // After every step the standing edges must equal the surviving
     // edge set and the labels a union-find solve over it (isolated
     // survivors label themselves).
@@ -627,13 +722,17 @@ class StandingGraphSpec extends SparkSpec {
     val batch = Gen.oneOf(Gen.choose(0, 5).flatMap(Gen.listOfN(_, add)),
       Gen.choose(1, 4).flatMap(Gen.listOfN(_, event)))
     val step = for (rows <- batch; act <- Gen.frequency(3 -> 0, 1 -> 1,
-      1 -> 2, 2 -> 3, 1 -> 4, 1 -> 5, 1 -> 6); other <- batch)
+      1 -> 2, 2 -> 3, 1 -> 4, 1 -> 5, 1 -> 6, 1 -> 7); other <- batch)
       yield (rows, act, other)
     val base = Gen.choose(1, 10).flatMap(Gen.listOfN(_, edge))
     val run = for (b <- base; n <- Gen.choose(1, 5);
       steps <- Gen.listOfN(n, step)) yield (b, steps)
     val runs = Gen.listOfN(10, run)
       .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(17L))
+      .map(_ -> None) ++
+      Gen.listOfN(4, run)
+        .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(29L))
+        .map(_ -> Some("2"))
 
     final case class Graph(edges: Set[(Long, Long)], nodes: Set[Long]) {
       def absorb(rows: Seq[(String, Long, Long)]): Graph = {
@@ -659,7 +758,9 @@ class StandingGraphSpec extends SparkSpec {
       }
     }
 
-    runs.zipWithIndex.foreach { case ((baseEdges, steps), r) =>
+    def property(baseEdges: Seq[(Long, Long)],
+        steps: Seq[(Seq[(String, Long, Long)], Int, Seq[(String, Long, Long)])],
+        r: Int): Unit = {
       val root = tmp(s"sg-prop$r")
       def bootstrap(es: Seq[(Long, Long)]): Unit = {
         val df = es.toDF("src", "dst")
@@ -719,9 +820,26 @@ class StandingGraphSpec extends SparkSpec {
             committed(-1L) = seed(es)
             nextId = 0L
             check("a fresh bootstrap at the same path")
+          case 7 =>
+            import scala.jdk.CollectionConverters._
+            val bytes = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+              .iterator().asScala.find(_.toString.endsWith(".parquet"))
+              .map(java.nio.file.Files.readAllBytes)
+              .getOrElse("PAR1".getBytes)
+            val part = java.nio.file.Paths.get(root, s"v=${id + 1}", "edges.app",
+              "label=0", "part-00000-debris.c000.snappy.parquet")
+            java.nio.file.Files.createDirectories(part.getParent)
+            java.nio.file.Files.write(part, bytes.take(bytes.length / 2))
+            check(s"partial parquet debris of ${id + 1}")
           case _ => ()
         }
       }
+    }
+
+    runs.zipWithIndex.foreach { case (((baseEdges, steps), refs), r) =>
+      refs.foreach(System.setProperty("graft.artifact.max.part.refs", _))
+      try property(baseEdges, steps, r)
+      finally System.clearProperty("graft.artifact.max.part.refs")
     }
   }
 }
